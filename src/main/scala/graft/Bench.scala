@@ -1,4 +1,7 @@
 package graft
+
+import graft.tools.Harness
+
 object Bench {
 
   /** 1/5/15-min loadavg triple, or empty when /proc is unavailable.
@@ -36,25 +39,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     if (args.contains("--sf-sweep")) { sweepMain(args.filterNot(_ == "--sf-sweep")); return }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    def loadavg(): String = loadavgJson(loadavgTriple())
     val loadStartTriple = loadavgTriple()
     val loadStart = loadavgJson(loadStartTriple)
-    // ERROR, not WARN: the bench JSON line must stay parseable in a
-    // bounded output tail, so routine executor warnings are silenced.
-    val spark = LocalSession.create("ERROR")
-    // Untimed warmup: JIT + classloading + parquet footer caches would
-    // otherwise be billed to whichever query happens to run first.
-    val tWarm0 = System.nanoTime()
-    try {
-      spark.range(1000000).selectExpr("sum(id)").count()
-      SparkEntry.entry(spark).count()
-      SparkEntry.queries("text_quality")(spark, sfDir).count()
-    } catch { case _: Throwable => () }
-    // same hygiene as between timed queries — the first timed query
-    // must not inherit the warmup's cache blocks or garbage
-    spark.catalog.clearCache()
-    System.gc()
-    val warmupSec = (System.nanoTime() - tWarm0) / 1e9
+    val spark = Harness.session()
+    val warmupSec = Harness.warmup(spark, sfDir)
     // Stage the shared co-purchase edge table ONCE (parquet + temp
     // view): the four graph keys each re-derived the identical
     // per-order self-join edge set (~1-2 s x 4 keys x reps at sf0.1).
@@ -75,8 +63,7 @@ object Bench {
     // the alphabetically-first key's rep1 absorbed it (measured 12-90 s
     // first-rep spikes on an otherwise ~2.5 s key; the median hid it,
     // but Verify-style single-shot runs would not be protected).
-    spark.catalog.clearCache()
-    System.gc()
+    Harness.hygiene(spark)
     var hygieneSec = 0.0
     // A query that throws must be visibly red: its wall-time is recorded
     // as -1 and its name lands in "errors" — never a fake timing.
@@ -94,69 +81,38 @@ object Bench {
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => only(n) }
+    // A rep spread (max/min of the raw reps) over 3x means external
+    // contention or a GC landed on the key.
+    def noisy(ts: Seq[Double]): Boolean = ts.nonEmpty && ts.min > 0 && ts.max / ts.min > 3.0
+    val extrasFailed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var err: Option[String] = None
-      def runRep(): Boolean = {
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            fn(spark, sfDir).count()
-            times += (System.nanoTime() - t0) / 1e9
-            true
-          } catch { case _: Throwable => false }
-        // UNTIMED cache hygiene between runs: queries that persist()/
-        // localCheckpoint intermediates leave blocks behind, and 100+
-        // queries of accumulation show up as multi-second GC spikes on
-        // whichever query the collector lands on — exactly the single-
-        // shot outliers past rounds chased.
-        val tHyg0 = System.nanoTime()
-        spark.catalog.clearCache()
-        hygieneSec += (System.nanoTime() - tHyg0) / 1e9
-        ok
+      def run(n: Int): Harness.Reps[Double] = {
+        val r = Harness.reps(spark, n)(Harness.timed(fn(spark, sfDir).count()))
+        hygieneSec += r.hygieneSec
+        r
       }
-      var i = 0
-      while (i < reps && err.isEmpty) {
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).count()
-          times += (System.nanoTime() - t0) / 1e9
-        } catch {
-          case e: Throwable => err = Some(e.getClass.getSimpleName)
-        }
-        val tHyg0 = System.nanoTime()
-        spark.catalog.clearCache()
-        hygieneSec += (System.nanoTime() - tHyg0) / 1e9
-        i += 1
-      }
-      // Self-defending timing (r15, VERDICT r14 item 1): when the raw
-      // reps spread > 3x — the noisy_keys tripwire, i.e. external
-      // contention or a GC landed on this key — run 2 EXTRA reps so
-      // the reported median is a trimmed median over 5 samples instead
-      // of hostage to one bad draw among 3. Additions-only: quiet keys
-      // time exactly as before, every raw rep stays in "runs", and the
-      // key is still flagged in noisy_keys (max/min can only grow). A
-      // failure inside an EXTRA rep never taints a key that already
-      // passed its main reps — the extras exist to firm the median up,
-      // not to add failure modes.
-      if (err.isEmpty && reps >= 2 && times.nonEmpty &&
-        times.min > 0 && times.max / times.min > 3.0) {
-        var j = 0
-        var extraOk = true
-        while (j < 2 && extraOk) { extraOk = runRep(); j += 1 }
-      }
-      // The GC hint runs once per QUERY, not per rep: phase accounting
-      // measured per-rep System.gc() at ~66 s of untimed wall for a
-      // ~100 s bench. Cross-QUERY isolation (the r6 fix) only needs the
-      // collector run before the next query's first rep; within a
-      // query, a rep absorbing its predecessor's garbage is steady
-      // state, and the median already absorbs one collector landing.
-      val tGc0 = System.nanoTime()
-      System.gc()
-      hygieneSec += (System.nanoTime() - tGc0) / 1e9
+      val main = run(reps)
+      val err = main.error.map(_.getClass.getSimpleName)
+      // Self-defending timing (r15, VERDICT r14 item 1): a noisy key
+      // runs 2 EXTRA reps so the reported median is a trimmed median
+      // over 5 samples instead of hostage to one bad draw among 3.
+      // Additions-only: quiet keys time exactly as before, every raw
+      // rep stays in "runs", and the key is still flagged in
+      // noisy_keys (max/min can only grow). A failing extra rep does
+      // not turn a key that passed its main reps red (the extras only
+      // firm the median up), but it is recorded in "extras_failed".
+      val extras =
+        if (err.isEmpty && reps >= 2 && noisy(main.done)) {
+          val x = run(2)
+          if (x.error.isDefined) extrasFailed += name
+          x.done
+        } else Nil
+      val times = main.done ++ extras
+      // The GC hint runs once per QUERY, not per rep (see Harness.hygiene).
+      hygieneSec += Harness.hygiene(spark)
       val median =
         if (err.isDefined) -1.0 else times.sorted.apply(times.length / 2)
-      (name, median, err, times.toSeq)
+      (name, median, err, times)
     }
     def ms(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
     // Multi-day incremental prepare: the one pipeline the per-query map
@@ -218,10 +174,7 @@ object Bench {
     // makes a noisy run self-identifying per KEY, not just per run
     // (the loadavg tripwire is process-global and misses short spikes).
     val noisyKeys = results
-      .collect {
-        case (k, _, None, ts) if ts.nonEmpty && ts.min > 0 && ts.max / ts.min > 3.0 =>
-          "\"" + k + "\""
-      }
+      .collect { case (k, _, None, ts) if noisy(ts) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     // Per-family subtotals: a regression in the total should localize
     // to a module in one glance, not a 119-entry diff. Families follow
@@ -264,7 +217,7 @@ object Bench {
     val load =
       s"""{"start":$loadStart,"end":${loadavgJson(loadEndTriple)},"contaminated":${contaminated(loadStartTriple, loadEndTriple)}}"""
     val detailJson =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","reps":$reps,"queries":$detail,"runs":$runsDetail,"noisy_keys":$noisyKeys,"families":$families,"phases":$phases,"incremental":$incrementalJson,"loadavg":$load,"errors":$errors,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","reps":$reps,"queries":$detail,"runs":$runsDetail,"noisy_keys":$noisyKeys,"families":$families,"phases":$phases,"incremental":$incrementalJson,"loadavg":$load,"errors":$errors,"sf":"$sfDir","extras_failed":${extrasFailed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_detail.json"), detailJson + "\n")
     println(s"# bench detail: $detailJson")
@@ -366,12 +319,8 @@ object Bench {
     val keys = if (args.nonEmpty) args.toSeq else sweepKeys
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
     val loadStartTriple = loadavgTriple()
-    val spark = LocalSession.create("ERROR")
-    try {
-      spark.range(1000000).selectExpr("sum(id)").count()
-      SparkEntry.queries("text_quality")(spark, sfs.head._2).count()
-    } catch { case _: Throwable => () }
-    spark.catalog.clearCache(); System.gc()
+    val spark = Harness.session()
+    Harness.warmup(spark, sfs.head._2)
     // sf-major order so parquet footer caches never carry a smaller
     // scale's warm state into a larger one's timing
     val times: Map[(String, Double), Double] = (for {
@@ -382,18 +331,9 @@ object Bench {
         name,
         throw new IllegalArgumentException(s"unknown sweep key $name")
       )
-      val ts = Array.ofDim[Double](reps)
-      var err = false
-      var i = 0
-      while (i < reps && !err) {
-        val t0 = System.nanoTime()
-        try { fn(spark, dir).count(); ts(i) = (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => err = true }
-        spark.catalog.clearCache()
-        i += 1
-      }
-      System.gc()
-      ((name, sf), if (err) -1.0 else ts.sorted.apply(reps / 2))
+      val r = Harness.reps(spark, reps)(Harness.timed(fn(spark, dir).count()))
+      Harness.hygiene(spark)
+      ((name, sf), if (r.error.isDefined) -1.0 else r.done.sorted.apply(reps / 2))
     }).toMap
     def fmt(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
     // least-squares slope of log10(t) on log10(sf), all valid points

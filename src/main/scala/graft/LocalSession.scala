@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local-mode session config shared by Bench, Verify and
-  * Explain — the gated runs and the plan audits must execute under
+/** The one local-mode session config shared by Verify, Bench and
+  * Probe — the gated runs and the plan audits must execute under
   * identical settings (shuffle partitions, timezone), or a plan audit
   * could pass against a plan the gate never runs.
   */
@@ -19,12 +19,6 @@ object LocalSession {
       .config("spark.sql.shuffle.partitions", c)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // A/B dial for functions.spread (scale-adaptive input spreading);
-      // default on — the env override exists so a perf investigation
-      // can flip it without a recompile.
-      .config(
-        "graft.spread.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_SPREAD", "true"))
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     spark

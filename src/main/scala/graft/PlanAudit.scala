@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
 import org.apache.spark.sql.execution.GlobalLimitExec
 
 /** Structural scale-anti-pattern audit over physical plans — the core
-  * shared by the [[Explain]] CLI sweep and the test-suite invariant
+  * shared by the `Probe plan` sweep and the test-suite invariant
   * (PlanAuditSpec), so "no unbounded nested-loop/cartesian join in any
   * registered query" is enforced on every `sbt test`, not just when
   * someone remembers to run the tool.

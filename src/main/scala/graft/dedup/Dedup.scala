@@ -1306,33 +1306,25 @@ object Dedup {
     * a keyed shuffle that AQE can turn into a broadcast when the
     * duplicate set is small.
     *
-    * `materializeSpans` (r14 dial; r15 auto default — the r14 ADVICE
-    * noted the flat `false` default re-ran the dominant tokenize+
-    * shingle+md5 pass twice exactly in the at-scale case):
-    * `Some(false)` re-derives the compact (id, span_hash) stream per
-    * consumer — right when the input is underparallelized: both
-    * passes then run in parallel above the spread exchange (measured
-    * 0.09-0.17 s vs 0.33-0.51 s for the checkpoint at sf0.1; note the
-    * r14 hope that ReusedExchange would collapse the two consumers
-    * was refuted by the r15 executed plans — the two spread exchanges
-    * execute separately, it is the post-spread parallelism that makes
-    * recompute cheap). `Some(true)`
-    * localCheckpoints the span stream — one scan guaranteed at the
-    * price of a compact (id, 32-byte hash) local-disk write; right on
-    * already-parallel inputs (the 100 TB case), where no shared
-    * exchange exists and recompute would tokenize the corpus twice.
-    * `None` (default) picks exactly that: recompute when `spread`
-    * inserted its exchange, materialize when the input was already
-    * parallel. Outputs are bit-identical in every mode (exact integer
-    * counts over deterministic md5 spans).
+    * How the span stream feeds its two consumers follows from the
+    * input. When `spread` inserted its exchange (an underparallelized
+    * input), the compact (id, span_hash) stream is re-derived per
+    * consumer: both passes run in parallel above the spread exchange
+    * (measured 0.09-0.17 s vs 0.33-0.51 s for a checkpoint at sf0.1;
+    * the r15 executed plans show the two spread exchanges execute
+    * separately, so it is the post-spread parallelism that makes the
+    * recompute cheap). Otherwise (the 100 TB case, where no shared
+    * exchange exists and a recompute would tokenize the corpus twice)
+    * the span stream is localCheckpointed: one scan, at the price of a
+    * compact (id, 32-byte hash) local-disk write. Outputs are identical
+    * either way (exact integer counts over deterministic md5 spans).
     */
   def dupSpanStats(
       df: DataFrame,
       textCol: String,
       idCol: String,
       spanWords: Int = 8,
-      minDocs: Int = 2,
-      materializeSpans: Option[Boolean] = None
+      minDocs: Int = 2
   ): DataFrame = {
     val spreadIn = graft.functions.spread(df) // serial-scan guard (no-op on parallel inputs)
     // reference identity IS the signal: spread returns `df` itself
@@ -1346,9 +1338,7 @@ object Dedup {
       )
       .select(col(idCol), md5(col("_span")).as("span_hash"))
     val spans =
-      if (materializeSpans.getOrElse(!wasSpread))
-        graft.functions.materialize(spanStream)
-      else spanStream
+      if (wasSpread) spanStream else graft.functions.materialize(spanStream)
     val dupHashes = spans
       .groupBy(col("span_hash"))
       .agg(countDistinct(col(idCol)).as("_nd"))

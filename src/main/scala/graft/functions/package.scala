@@ -34,15 +34,6 @@ package object functions {
     // streaming frames have no .rdd to inspect (and micro-batch
     // parallelism is the source's business) — no-op, never throw
     if (df.isStreaming) return df
-    // Lenient flag parse (r14 ADVICE): only an explicit "false"/"off"/
-    // "0" disables; any other value (e.g. SPARK_GRAFT_SPREAD=1 passed
-    // through LocalSession) keeps the default-on behavior instead of
-    // throwing IllegalArgumentException from deep inside an operator.
-    val enabled = !df.sparkSession.conf
-      .getOption("graft.spread.enabled")
-      .exists(v =>
-        v.equalsIgnoreCase("false") || v.equalsIgnoreCase("off") || v == "0")
-    if (!enabled) return df
     // Decide from the PHYSICAL plan, not df.rdd (r14 ADVICE, medium):
     // under AQE (default on in Spark 4.x) `.rdd` finalizes the adaptive
     // plan, eagerly EXECUTING every upstream shuffle/broadcast stage at

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The Explain sweep as a suite invariant: EVERY registered query must
+/** The `Probe plan` sweep as a suite invariant: EVERY registered query must
   * plan without an unbounded nested-loop or cartesian join. Planning
   * only — nothing executes — so the whole registry audits in seconds
   * and a scale anti-pattern introduced by any future change fails

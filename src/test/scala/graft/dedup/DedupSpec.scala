@@ -558,24 +558,31 @@ class DedupSpec extends SparkSpec {
   }
 
   test("dup-span stats: recompute and checkpoint modes are row-identical") {
-    // the r14 materializeSpans dial — both modes must produce the
-    // exact same table (integer counts over deterministic md5 spans)
+    // the input picks the mode: a single-partition input is spread and
+    // recomputes the span stream, an already-parallel one checkpoints
+    // it; both must produce the exact same table (integer counts over
+    // deterministic md5 spans)
     val docs = (0 until 60)
       .map(i => (i.toLong, if (i % 3 == 0) "a b c d e f g h i dup" else s"doc $i " * 5))
       .toDF("doc_id", "text")
-    val a = Dedup
-      .dupSpanStats(docs, "text", "doc_id", spanWords = 4, materializeSpans = Some(false))
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val b = Dedup
-      .dupSpanStats(docs, "text", "doc_id", spanWords = 4, materializeSpans = Some(true))
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(a === b)
-    // r15 auto default (None): input-parallelism-derived mode choice
-    // must also be row-identical to both forced modes
-    val c = Dedup
-      .dupSpanStats(docs, "text", "doc_id", spanWords = 4)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(a === c)
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Repartition}
+    import org.apache.spark.sql.execution.LogicalRDD
+    def checkpoints(p: LogicalPlan) = p.collect { case r: LogicalRDD => r }.size
+    def roundRobins(p: LogicalPlan) = p.collect { case r: Repartition if r.shuffle => r }.size
+    val serial = Dedup.dupSpanStats(docs.coalesce(1), "text", "doc_id", spanWords = 4)
+    val parallel = Dedup.dupSpanStats(docs.repartition(8), "text", "doc_id", spanWords = 4)
+    // pin the path each input took: spread's exchange under both span
+    // consumers and no checkpoint, vs a checkpointed span stream and
+    // no exchange beyond the input's own
+    assert(checkpoints(serial.queryExecution.logical) == 0)
+    assert(roundRobins(serial.queryExecution.logical) == 2)
+    assert(checkpoints(parallel.queryExecution.logical) > 0)
+    assert(roundRobins(parallel.queryExecution.logical) == 1)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val recomputed = rows(serial)
+    assert(recomputed.size == 60)
+    assert(recomputed === rows(parallel))
   }
 
   test("source overlap matrix counts shared spans and induced doc pairs") {

@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
   * spreading the heavy dedup/multimodal scan kernels apply (r14
   * optimization): it must raise an underparallelized input to the
   * session's parallelism, leave already-parallel inputs ALONE (the
-  * 100 TB no-op guarantee), respect the graft.spread.enabled dial, and
-  * never change the row multiset.
+  * 100 TB no-op guarantee) and never change the row multiset.
   */
 class SpreadSpec extends SparkSpec {
   import spark.implicits._
@@ -36,14 +35,6 @@ class SpreadSpec extends SparkSpec {
     assert(before === after)
   }
 
-  test("graft.spread.enabled=false disables spreading") {
-    spark.conf.set("graft.spread.enabled", "false")
-    try {
-      val one = (1 to 10).toDF("v").coalesce(1)
-      assert(graft.functions.spread(one).rdd.getNumPartitions == 1)
-    } finally spark.conf.unset("graft.spread.enabled")
-  }
-
   test("spread never touches a plan carrying an exchange (r15 guard)") {
     // r14 ADVICE (medium): under AQE, inspecting .rdd on a plan with
     // upstream exchanges EXECUTES those stages at construction time
@@ -53,19 +44,5 @@ class SpreadSpec extends SparkSpec {
     val shuffled = (1 to 100).toDF("v").repartition(1)
     val s = graft.functions.spread(shuffled)
     assert(s.queryExecution.logical eq shuffled.queryExecution.logical)
-  }
-
-  test("graft.spread.enabled parses leniently (r15: '1' keeps default-on)") {
-    spark.conf.set("graft.spread.enabled", "1")
-    try {
-      val one = (1 to 10).toDF("v").coalesce(1)
-      // non-false value: enabled, no IllegalArgumentException
-      assert(graft.functions.spread(one).rdd.getNumPartitions == target)
-    } finally spark.conf.unset("graft.spread.enabled")
-    spark.conf.set("graft.spread.enabled", "off")
-    try {
-      val one = (1 to 10).toDF("v").coalesce(1)
-      assert(graft.functions.spread(one).rdd.getNumPartitions == 1)
-    } finally spark.conf.unset("graft.spread.enabled")
   }
 }
