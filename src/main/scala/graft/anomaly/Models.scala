@@ -265,6 +265,136 @@ case class AutoSeasonal(candidates: Seq[Int] = Seq(7, 14), h: Int = 7)
   }
 }
 
+/** The least-squares core shared by [[AutoRegressive]] and
+  * [[CalendarRegression]]: a per-row expanding-window fit of
+  * y ~ a + Σᵢ φᵢ·rᵢ over the strictly preceding rows of every series,
+  * staged as columns in one window pass.
+  *
+  * The moments Σrᵢ, Σrᵢrⱼ, Σrᵢy accumulate through DECIMAL(38,10)
+  * (order-independent, so bit-identical in DuckDB), are centered into
+  * the (p × p) normal equations, and are solved by Cramer's rule
+  * unrolled into plain column arithmetic: a driver-free per-row solve
+  * with exact IEEE parity to the SQL mirrors, no UDF. Every stage is a
+  * COLUMN, so the determinant terms read attributes instead of
+  * re-inlining the moment trees (the inlined form made Catalyst
+  * analysis, not the data pass, the dominant family cost).
+  *
+  * Scale-free conditioning gates, mirrored exactly by the SQL side:
+  *   - each diagonal must carry real variance relative to its raw
+  *     second moment (c_ii = n·var, s_ii = n·E[x²]; the 1e-12 floor is
+  *     relative-std > 1e-6: far above double cancellation noise, far
+  *     below any real signal), refusing constant regressors;
+  *   - |det| relative to the diagonal product is EXACTLY the
+  *     correlation-matrix determinant, refusing collinear regressors at
+  *     any data scale. At p = 1 it is implied by the diagonal gate.
+  */
+private[anomaly] object LeastSquares {
+  private val dec = DecimalType(38, 10)
+
+  /** Expanding DECIMAL(38,10) sum of `e` over the `valid` rows of the
+    * strictly-preceding frame `wp`.
+    */
+  def msum(valid: Column, e: Column, wp: WindowSpec): Column =
+    sum(when(valid, e.cast(dec))).over(wp).cast("double")
+
+  /** Expanding count of the `valid` rows of the frame `wp`. */
+  def mcount(valid: Column, wp: WindowSpec): Column =
+    sum(when(valid, 1L).otherwise(0L)).over(wp)
+
+  /** Laplace expansion along the first row: deterministic term order,
+    * the same expansion the SQL oracle unrolls.
+    */
+  def det(m: Vector[Vector[Column]]): Column = m.size match {
+    case 1 => m(0)(0)
+    case n =>
+      (0 until n)
+        .map { j =>
+          val minor = m.tail.map(row => row.patch(j, Nil, 1))
+          val term = m(0)(j) * det(minor)
+          if (j % 2 == 0) term else -term
+        }
+        .reduce(_ + _)
+  }
+
+  /** Stages the fit of `y` on the regressors `rs` over the rows where
+    * `valid` holds, as `pfx`-prefixed columns: the moments `_n`, `_sy`,
+    * `_s{i}`, `_s{i}_{j}`, `_s{i}y` (plus the caller's `extra` moment
+    * columns, in the same projection), the centered entries `_c{i}_{j}`
+    * and `_c{i}y`, `_det`, the `_ok` gate, each `_phi{i}` and the
+    * intercept `_a`. Each stage is NULL until its divisor is provably
+    * nonzero (ANSI division cannot hide behind a forecast's lazy CASE
+    * once staged); a forecast gated on `_ok` only ever reads them when
+    * the same conditions hold.
+    */
+  def stage(
+      df: DataFrame,
+      pfx: String,
+      wp: WindowSpec,
+      valid: Column,
+      y: Column,
+      rs: Seq[Column],
+      extra: Seq[(String, Column)] = Nil
+  ): DataFrame = {
+    def c(s: String) = col(pfx + s)
+    val p = rs.size
+    val moments: Seq[(String, Column)] =
+      Seq("_n" -> mcount(valid, wp), "_sy" -> msum(valid, y, wp)) ++
+        (1 to p).map(i => s"_s$i" -> msum(valid, rs(i - 1), wp)) ++
+        (for { i <- 1 to p; j <- i to p }
+          yield s"_s${i}_$j" -> msum(valid, rs(i - 1) * rs(j - 1), wp)) ++
+        (1 to p).map(i => s"_s${i}y" -> msum(valid, rs(i - 1) * y, wp)) ++
+        extra
+    val withMoments = df.select(
+      col("*") +: moments.map { case (n, e) => e.as(pfx + n) }: _*
+    )
+    // centered normal-equations entries, upper triangle stored
+    val nD = c("_n").cast("double")
+    def sAt(i: Int, j: Int) = if (i <= j) c(s"_s${i}_$j") else c(s"_s${j}_$i")
+    val centered: Seq[(String, Column)] =
+      (for { i <- 1 to p; j <- i to p }
+        yield s"_c${i}_$j" ->
+          when(c("_n") > 0L, sAt(i, j) - c(s"_s$i") * c(s"_s$j") / nD)) ++
+        (1 to p).map(i =>
+          s"_c${i}y" ->
+            when(c("_n") > 0L, c(s"_s${i}y") - c(s"_s$i") * c("_sy") / nD))
+    val withCentered = withMoments.select(
+      col("*") +: centered.map { case (n, e) => e.as(pfx + n) }: _*
+    )
+    def cAt(i: Int, j: Int) =
+      if (i <= j) c(s"_c${i + 1}_${j + 1}") else c(s"_c${j + 1}_${i + 1}")
+    val cm = Vector.tabulate(p, p)(cAt)
+    val cy = Vector.tabulate(p)(i => c(s"_c${i + 1}y"))
+    val diagOk =
+      (0 until p)
+        .map(i => cm(i)(i) > lit(1e-12) * c(s"_s${i + 1}_${i + 1}"))
+        .reduce(_ && _)
+    val prodDiag = (0 until p).map(i => cm(i)(i)).reduce(_ * _)
+    val withDet = withCentered
+      .withColumn(pfx + "_det", when(c("_n") > 0L, det(cm)))
+      .withColumn(
+        pfx + "_ok",
+        diagOk && abs(c("_det")) > lit(1e-9) * prodDiag
+      )
+    val withPhi = (1 to p).foldLeft(withDet) { case (d, k) =>
+      d.withColumn(
+        pfx + s"_phi$k",
+        when(
+          c("_ok"),
+          det(Vector.tabulate(p, p)((i, j) =>
+            if (j == k - 1) cy(i) else cAt(i, j))) / c("_det")
+        )
+      )
+    }
+    val phiDotS = (1 to p)
+      .map(i => c(s"_phi$i") * c(s"_s$i"))
+      .reduce(_ + _)
+    withPhi.withColumn(
+      pfx + "_a",
+      when(c("_ok"), (c("_sy") - phiDotS) / nD)
+    )
+  }
+}
+
 /** Autoregressive AR(p) forecast fit by least squares via the normal
   * equations — the true state-space-class member of the family,
   * closing the last fidelity delta vs the reference's per-series
@@ -276,27 +406,17 @@ case class AutoSeasonal(candidates: Seq[Int] = Seq(7, 14), h: Int = 7)
   * Honest expanding-window fit: the coefficients used to forecast row
   * t are estimated from ONLY strictly preceding rows (the same
   * leak-freedom contract as every other family member), so the
-  * optimizer's forward-chaining CV never trains on the future. The
-  * mechanics:
-  *
-  *   - [[prepare]] materializes lag columns y(t-1)..y(t-p) (one window
-  *     pass; Spark cannot nest `sum(...)` over `lag(...)` in a single
-  *     window expression, and both window layers share one exchange);
-  *   - [[forecast]] accumulates the regression moments Σx_i, Σx_i x_j,
-  *     Σx_i y over the expanding strictly-preceding frame through
-  *     DECIMAL(38,10) (order-independent — bit-identical in DuckDB),
-  *     centers them into the (p x p) covariance system, and solves by
-  *     Cramer's rule unrolled into plain column arithmetic — a
-  *     driver-free per-row solve, exact IEEE parity with the SQL
-  *     mirror, no UDF;
-  *   - intercept c = (Σy − Σφ_i Σx_i)/n, forecast = c + Σφ_i y(t-i).
+  * optimizer's forward-chaining CV never trains on the future.
+  * [[prepare]] materializes lag columns y(t-1)..y(t-p) (Spark cannot
+  * nest `sum(...)` over `lag(...)` in a single window expression, and
+  * both window layers share one exchange), then hands them to the
+  * [[LeastSquares]] core as regressors; forecast = c + Σφ_i y(t-i).
   *
   * NULL until `minTrain` complete training samples precede the row, or
-  * when the centered system fails the scale-free conditioning gates
-  * (per-diagonal relative-variance floor; correlation-determinant
-  * collinearity floor — see [[forecast]]), which constant series and
-  * pure linear trends under p >= 2 produce by construction: no
-  * identifiable AR fit, and other family members already cover both.
+  * when the centered system fails the core's conditioning gates, which
+  * constant series and pure linear trends under p >= 2 produce by
+  * construction: no identifiable AR fit, and other family members
+  * already cover both.
   *
   * p is capped at 3: each extra order adds a factorial Cramer term
   * count, and metric-grain series (the profiler's output) carry
@@ -310,102 +430,25 @@ case class AutoRegressive(p: Int = 2, minTrain: Int = 8) extends ForecastModel {
     s"minTrain must be >= p + 2 = ${p + 2} for an identifiable fit, got $minTrain"
   )
   val name = s"AR-$p"
-  private def lagName(i: Int) = s"_ar${p}_l$i"
-  private def c(s: String) = col(s"_ar$p$s")
+  private val pfx = s"_ar$p"
+  private def c(s: String) = col(pfx + s)
+  private def lags = (1 to p).map(i => c(s"_l$i"))
 
-  /** Laplace expansion along the first row — deterministic term order,
-    * mirrored verbatim by the SQL oracle generator.
-    */
-  private def det(m: Vector[Vector[Column]]): Column = m.size match {
-    case 1 => m(0)(0)
-    case n =>
-      (0 until n)
-        .map { j =>
-          val minor = m.tail.map(row => row.patch(j, Nil, 1))
-          val term = m(0)(j) * det(minor)
-          if (j % 2 == 0) term else -term
-        }
-        .reduce(_ + _)
-  }
-
-  /** Staged pre-pass: lag materialization (window aggregates cannot
-    * nest window functions), then every expanding regression moment
-    * and the centered covariance entries as COLUMNS — [[forecast]]'s
-    * Cramer expansion then runs over attributes, so the moment trees
-    * are evaluated once instead of being re-inlined into every
-    * determinant term (the inlined form made Catalyst analysis, not
-    * the data pass, the dominant family cost). Same window exchange.
-    */
   override def prepare(df: DataFrame, value: Column, w: WindowSpec): DataFrame = {
-    val dec = DecimalType(38, 10)
-    val wp = w.rowsBetween(Window.unboundedPreceding, -1)
     val lagged = (1 to p).foldLeft(df) { case (d, i) =>
-      d.withColumn(lagName(i), lag(value, i).over(w))
+      d.withColumn(pfx + s"_l$i", lag(value, i).over(w))
     }
-    val ls = (1 to p).map(i => col(lagName(i))).toVector
     // a training sample is a row where target AND every regressor exist
-    val v = (value +: ls).map(_.isNotNull).reduce(_ && _)
-    def msum(e: Column) = sum(when(v, e.cast(dec))).over(wp).cast("double")
-    val moments: Seq[(String, Column)] =
-      Seq("_n" -> sum(when(v, 1L).otherwise(0L)).over(wp), "_sy" -> msum(value)) ++
-        (1 to p).map(i => s"_s$i" -> msum(ls(i - 1))) ++
-        (for { i <- 1 to p; j <- i to p } yield s"_s${i}_$j" -> msum(ls(i - 1) * ls(j - 1))) ++
-        (1 to p).map(i => s"_s${i}y" -> msum(ls(i - 1) * value))
-    val withMoments = lagged.select(
-      col("*") +: moments.map { case (n, e) => e.as(s"_ar$p$n") }: _*
-    )
-    // centered covariance entries over the attributes (upper triangle
-    // stored, symmetric reads resolved in forecast). NULL until a
-    // training sample exists — ANSI division no longer hides behind
-    // the forecast's lazy CASE once staged; the gate (n >= minTrain)
-    // only reads them when n > 0, so gated values are unchanged.
-    val nD = c("_n").cast("double")
-    def sAt(i: Int, j: Int) = if (i <= j) c(s"_s${i}_$j") else c(s"_s${j}_$i")
-    val centered: Seq[(String, Column)] =
-      (for { i <- 1 to p; j <- i to p }
-        yield s"_c${i}_$j" ->
-          when(c("_n") > 0L, sAt(i, j) - c(s"_s$i") * c(s"_s$j") / nD)) ++
-        (1 to p).map(i =>
-          s"_c${i}y" ->
-            when(c("_n") > 0L, c(s"_s${i}y") - c(s"_s$i") * c("_sy") / nD))
-    withMoments.select(
-      col("*") +: centered.map { case (n, e) => e.as(s"_ar$p$n") }: _*
-    )
+    val v = (value +: lags).map(_.isNotNull).reduce(_ && _)
+    LeastSquares.stage(
+      lagged, pfx, w.rowsBetween(Window.unboundedPreceding, -1), v, value, lags)
   }
 
   def forecast(value: Column, w: WindowSpec): Column = {
-    val ls = (1 to p).map(i => col(lagName(i))).toVector
-    val nT = c("_n")
-    val nD = nT.cast("double")
-    val sy = c("_sy")
-    val si = (1 to p).map(i => c(s"_s$i")).toVector
-    def sAt(i: Int, j: Int) =
-      if (i <= j) c(s"_s${i + 1}_${j + 1}") else c(s"_s${j + 1}_${i + 1}")
-    val cm = Vector.tabulate(p, p)((i, j) =>
-      if (i <= j) c(s"_c${i + 1}_${j + 1}") else c(s"_c${j + 1}_${i + 1}"))
-    val cy = Vector.tabulate(p)(i => c(s"_c${i + 1}y"))
-    val d = det(cm)
-    val phi = Vector.tabulate(p) { k =>
-      det(Vector.tabulate(p, p)((i, j) => if (j == k) cy(i) else cm(i)(j))) / d
-    }
-    val c0 =
-      (sy - phi.zip(si).map { case (f, s1) => f * s1 }.reduce(_ + _)) / nD
-    val pred = c0 + phi.zip(ls).map { case (f, l) => f * l }.reduce(_ + _)
-    // Scale-free conditioning gates (both sides mirror these exactly):
-    //  - each diagonal must carry real variance relative to its raw
-    //    second moment (c_ii = n*var, s_ii = n*E[x²]; the 1e-12 floor
-    //    is relative-std > 1e-6 — far above double cancellation noise,
-    //    far below any real signal), refusing constant series;
-    //  - |det| relative to the diagonal product is EXACTLY the
-    //    correlation-matrix determinant, refusing collinear regressors
-    //    (e.g. any pure linear trend under p >= 2) at any data scale.
-    val diagOk =
-      (0 until p).map(i => cm(i)(i) > lit(1e-12) * sAt(i, i)).reduce(_ && _)
-    val prodDiag = (0 until p).map(i => cm(i)(i)).reduce(_ * _)
-    when(
-      nT >= lit(minTrain.toLong) && diagOk && abs(d) > lit(1e-9) * prodDiag,
-      pred
-    )
+    val pred = c("_a") + lags.zipWithIndex
+      .map { case (l, i) => c(s"_phi${i + 1}") * l }
+      .reduce(_ + _)
+    when(c("_n") >= lit(minTrain.toLong) && c("_ok"), pred)
   }
 }
 
@@ -414,22 +457,20 @@ case class AutoRegressive(p: Int = 2, minTrain: Int = 8) extends ForecastModel {
   * piecewise trend plus calendar regressors). graft's distributed
   * equivalent: a per-series expanding-window least-squares fit of
   *
-  *   value ~ a + b * days_since_epoch + dow_effect(day_of_week)
-  *             [+ holiday_effect when the row's date is in `holidays`]
+  *   value ~ a + φ₁·x + Σᵢ φ_{1+i}·max(0, x − cp_i)
+  *             + dow_effect(day_of_week) [+ holiday_effect],
   *
-  * computed for EVERY series at every row in one window exchange, the
-  * same normal-equations machinery as [[AutoRegressive]] with calendar
-  * indicator columns in place of lag columns. Two-stage decomposition
-  * instead of the joint 8x8 solve (whose unrolled Cramer expansion is
-  * factorial): (1) the trend (a, b) is the closed-form 2-regressor OLS
-  * over all strictly-preceding rows through DECIMAL(38,10) expanding
-  * moments (order-independent, bit-identical in DuckDB); (2) each
-  * calendar slot's effect is the mean residual y - (a + b*x) over the
-  * strictly-preceding rows IN that slot, evaluated with the row-t
-  * coefficients — all conditional expanding sums, no second pass. On a
-  * noiseless linear-trend + balanced day-of-week series the estimates
-  * converge to the exact planted effects (the seasonal component is
-  * orthogonal to the trend over complete weeks).
+  * x = days since epoch, computed for EVERY series at every row in one
+  * window exchange. Two-stage decomposition instead of the joint solve
+  * (whose unrolled Cramer expansion is factorial): (1) the trend is the
+  * [[LeastSquares]] fit on x and one hinge per changepoint over all
+  * strictly-preceding rows; (2) each calendar slot's effect is the mean
+  * residual under that trend over the strictly-preceding rows IN the
+  * slot, evaluated with the row-t coefficients — all conditional
+  * expanding sums, no second pass. On a noiseless linear-trend +
+  * balanced day-of-week series the estimates converge to the exact
+  * planted effects (the seasonal component is orthogonal to the trend
+  * over complete weeks).
   *
   * What this buys over [[HoltWinters]]/[[SeasonalNaive]] (row-lag
   * seasonality): the regressors read the CALENDAR, not row offsets —
@@ -439,176 +480,42 @@ case class AutoRegressive(p: Int = 2, minTrain: Int = 8) extends ForecastModel {
   * out of phase. Trend time is days-since-epoch, so gaps also leave
   * the slope honest.
   *
+  * Changepoints (Taylor & Letham 2018 "Forecasting at Scale" §3.1.2)
+  * let the slope CHANGE at known dates: a deploy, a pricing change, a
+  * crawler rollout stops bending the global fit and lands on its hinge
+  * instead. They are an explicit roster (k ≤ 2): unlike Prophet's
+  * automatic candidate grid + L1 selection (a per-series driver fit), a
+  * fixed roster keeps the model ONE window expression over every series
+  * at once; the optimizer's CV picks per series between rosters and the
+  * rest of the family, so model selection does the changepoint
+  * acceptance job, distributed. With no changepoints the trend is the
+  * global line a + φ₁·x.
+  *
   * A slot effect activates once >= 2 training rows carry it (else 0 —
   * falls back to the pure trend, flagged by construction rather than
-  * guessed from one point). NULL until `minTrain` training rows
-  * precede the row or when the trend system fails the same scale-free
-  * conditioning gate as AR (relative variance floor on centered x —
-  * refuses single-timestamp degenerate series).
+  * guessed from one point). NULL until `minTrain` training rows precede
+  * the row or when the trend system fails the core's conditioning
+  * gates: a single-timestamp series has no x variance, and a changepoint
+  * outside a series' observed span makes its hinge zero-variance or
+  * collinear with x, so the fit is refused instead of guessed.
   */
 case class CalendarRegression(
-    tsCol: String = "ts",
-    holidays: Seq[String] = Nil,
-    minTrain: Int = 14
-) extends ForecastModel {
-  require(minTrain >= 4, s"minTrain must be >= 4, got $minTrain")
-  // Roster CONTENT hash in both name and prefix: two same-size rosters
-  // in one optimizer family must never alias each other's stored
-  // best_model names or prepare columns (size alone did, pre-r13).
-  private val hTag =
-    if (holidays.isEmpty) "" else s"-h${holidays.size}x${Models.rosterTag(holidays)}"
-  val name: String = s"Calendar-dow$hTag"
-  private val pfx = if (holidays.isEmpty) "_cal" else s"_calh$hTag"
-  private def c(s: String) = col(pfx + s)
-
-  /** Staged pre-pass — EVERY expanding moment (5 global + 3 per
-    * calendar slot) and the closed-form (a, b) trend solve materialize
-    * as columns here, so [[forecast]] combines ATTRIBUTES instead of
-    * re-inlining the moment expression trees into all 7 slot effects.
-    * Same single window exchange (all sums share one frame); without
-    * the staging the duplicated trees made Catalyst analysis — not the
-    * data pass — the dominant cost of the whole model family.
-    */
-  override def prepare(df: DataFrame, value: Column, w: WindowSpec): DataFrame = {
-    val dec = DecimalType(38, 10)
-    val wp = w.rowsBetween(Window.unboundedPreceding, -1)
-    val base = df
-      .withColumn(
-        pfx + "_x",
-        datediff(col(tsCol), to_date(lit("1970-01-01"))).cast("double")
-      )
-      .withColumn(pfx + "_dow", dayofweek(col(tsCol)))
-    val x = c("_x")
-    val dw = c("_dow")
-    val v = value.isNotNull
-    def msum(e: Column) = sum(when(v, e.cast(dec))).over(wp).cast("double")
-    def slotCols(tag: String, cond: Column): Seq[(String, Column)] = Seq(
-      s"_n$tag" -> sum(when(v && cond, 1L).otherwise(0L)).over(wp),
-      s"_sy$tag" -> msum(when(cond, value)),
-      s"_sx$tag" -> msum(when(cond, x))
-    )
-    val holCond: Option[Column] =
-      if (holidays.isEmpty) None
-      else Some(to_date(col(tsCol)).isin(holidays.map(Date.valueOf): _*))
-    val moments: Seq[(String, Column)] = Seq(
-      "_n" -> sum(when(v, 1L).otherwise(0L)).over(wp),
-      "_sx" -> msum(x),
-      "_sy" -> msum(value),
-      "_sxx" -> msum(x * x),
-      "_sxy" -> msum(x * value)
-    ) ++ (1 to 7).flatMap(d => slotCols(d.toString, dw === d)) ++
-      holCond.toSeq.flatMap(hc => slotCols("hol", hc)) ++
-      holCond.map(hc => "_ishol" -> hc).toSeq
-    val withMoments = base.select(
-      col("*") +: moments.map { case (n, e) => e.as(pfx + n) }: _*
-    )
-    // second projection: the 2-regressor solve over the attributes.
-    // Each stage is NULL until its divisor is provably nonzero (ANSI
-    // division no longer hides behind the forecast's lazy CASE once
-    // staged) — the forecast gate only ever reads them when the same
-    // conditions hold, so gated values are bit-identical to the
-    // inline form.
-    val nD = c("_n").cast("double")
-    withMoments
-      .withColumn(
-        pfx + "_cxx",
-        when(c("_n") > 0L, c("_sxx") - c("_sx") * c("_sx") / nD)
-      )
-      .withColumn(
-        pfx + "_b",
-        when(
-          c("_cxx") > lit(1e-12) * c("_sxx"),
-          (c("_sxy") - c("_sx") * c("_sy") / nD) / c("_cxx")
-        )
-      )
-      .withColumn(
-        pfx + "_a",
-        when(c("_b").isNotNull, (c("_sy") - c("_b") * c("_sx")) / nD)
-      )
-  }
-
-  def forecast(value: Column, w: WindowSpec): Column = {
-    val x = c("_x")
-    val dw = c("_dow")
-    val a = c("_a")
-    val b = c("_b")
-    // mean residual of the strictly-preceding rows in a calendar slot,
-    // under the row-t trend; 0 (pure trend) until the slot has >= 2
-    // training rows
-    def slotEff(tag: String): Column = {
-      val nd = c(s"_n$tag")
-      val ndD = nd.cast("double")
-      when(
-        nd >= 2L,
-        (c(s"_sy$tag") - a * ndD - b * c(s"_sx$tag")) / ndD
-      ).otherwise(lit(0.0))
-    }
-    val dowEff = (1 to 7).foldRight(lit(0.0)) { case (d, acc) =>
-      when(dw === d, slotEff(d.toString)).otherwise(acc)
-    }
-    // no trailing `+ 0.0` when holidays are off: IEEE identity except
-    // for -0.0, whose sign a hash-exact oracle would see
-    val pred =
-      if (holidays.isEmpty) a + b * x + dowEff
-      else a + b * x + dowEff +
-        when(c("_ishol"), slotEff("hol")).otherwise(lit(0.0))
-    when(
-      c("_n") >= lit(minTrain.toLong) &&
-        c("_cxx") > lit(1e-12) * c("_sxx"),
-      pred
-    )
-  }
-}
-
-/** Piecewise-linear-trend calendar forecast — the full Prophet trend
-  * formulation of the AutoProphet slot (reference models.py:216-241;
-  * Taylor & Letham 2018 "Forecasting at Scale" §3.1.2): trend slope is
-  * allowed to CHANGE at known changepoint dates via hinge regressors
-  *
-  *   value ~ a + φ₁·x + Σᵢ φ_{1+i}·max(0, x − cp_i)
-  *             + dow_effect(day_of_week) [+ holiday_effect],
-  *
-  * x = days since epoch. A deploy, a pricing change, a crawler rollout
-  * — the level-AND-slope breaks daily business metrics actually have —
-  * stops bending the global fit of [[CalendarRegression]] and lands on
-  * its hinge instead. Fit machinery is [[AutoRegressive]]'s normal
-  * equations with hinge columns in place of lag columns: DECIMAL
-  * (38,10) expanding moments, centered (1+k)×(1+k) system, unrolled
-  * Cramer solve, all staged as columns in [[prepare]] (the r12
-  * analysis-cost lesson), then day-of-week/holiday effects as per-slot
-  * mean residuals under the piecewise trend.
-  *
-  * Changepoints are an explicit roster (k ≤ 2): unlike Prophet's
-  * automatic uniform candidate grid + L1 selection (a per-series
-  * driver fit), a fixed roster keeps the model ONE window expression
-  * over every series at once; the optimizer's CV picks per series
-  * between this, the global-trend calendar fit, and the rest of the
-  * family — model selection does the changepoint acceptance job,
-  * distributed.
-  *
-  * Flagged, never guessed: a changepoint outside a series' observed
-  * span makes the hinge zero-variance or collinear with x — the same
-  * scale-free diagonal/determinant gates as AR refuse the fit (NULL)
-  * instead of emitting a garbage solve, and the plain calendar model
-  * in the family covers the series.
-  */
-case class PiecewiseCalendar(
     tsCol: String = "ts",
     changepoints: Seq[String] = Nil,
     holidays: Seq[String] = Nil,
     minTrain: Int = 14
 ) extends ForecastModel {
   require(
-    changepoints.nonEmpty && changepoints.size <= 2,
-    s"1..2 changepoint dates required, got ${changepoints.size} " +
-      "(each adds a factorial Cramer term count; use CalendarRegression for none)"
+    changepoints.size <= 2,
+    s"0..2 changepoint dates allowed, got ${changepoints.size} " +
+      "(each adds a factorial Cramer term count)"
   )
   require(changepoints.distinct.size == changepoints.size,
     s"changepoint dates must be distinct, got $changepoints " +
       "(a duplicate hinge is exactly collinear — the gates would refuse every fit)")
-  require(minTrain >= changepoints.size + 5,
-    s"minTrain must be >= ${changepoints.size + 5}, got $minTrain")
   private val k = changepoints.size
+  private val minFloor = if (k == 0) 4 else k + 5
+  require(minTrain >= minFloor, s"minTrain must be >= $minFloor, got $minTrain")
   private val p = 1 + k // trend regressors: x plus one hinge per changepoint
   // Roster order is NORMALIZED at construction: the content-hashed tag
   // sorts dates, so two permutations of one roster share a name and a
@@ -616,36 +523,27 @@ case class PiecewiseCalendar(
   // order, or co-existing permutations in one family would alias
   // same-named prepare columns holding different hinge moments.
   private val cpSorted = changepoints.sorted
-  // Content-hashed tags (see CalendarRegression): distinct changepoint
-  // or holiday rosters yield distinct model names AND distinct
-  // prepare-column prefixes even at equal roster sizes.
-  private val cpTag = s"x${Models.rosterTag(cpSorted)}"
+  // Roster CONTENT hashes in both name and prefix: two same-size
+  // changepoint or holiday rosters in one optimizer family must never
+  // alias each other's stored best_model names or prepare columns
+  // (size alone did, pre-r13).
+  private val trendTag = if (k == 0) "" else s"pw${k}x${Models.rosterTag(cpSorted)}"
   private val hTag =
     if (holidays.isEmpty) "" else s"-h${holidays.size}x${Models.rosterTag(holidays)}"
-  val name: String = s"Calendar-pw$k$cpTag$hTag"
-  private val pfx = s"_calpw$k$cpTag" + (if (holidays.isEmpty) "" else s"h$hTag")
+  val name: String = (if (k == 0) "Calendar-dow" else s"Calendar-$trendTag") + hTag
+  private val pfx = s"_cal$trendTag" + (if (holidays.isEmpty) "" else s"h$hTag")
   private def c(s: String) = col(pfx + s)
   // epoch-day constants of the changepoints (parse fails loudly)
   private val cpDays: Seq[Double] =
     cpSorted.map(d => java.time.LocalDate.parse(d).toEpochDay.toDouble)
+  // regressor columns r1 = x, r2.. = hinges
+  private def rs = c("_x") +: (2 to p).map(i => c(s"_r$i"))
 
-  /** Laplace expansion along the first row — deterministic term order,
-    * the same expansion the SQL oracle unrolls.
+  /** Staged pre-pass: the calendar columns and hinges, then the
+    * [[LeastSquares]] trend fit with 2 + p expanding sums per calendar
+    * slot as extra moments — one window exchange.
     */
-  private def det(m: Vector[Vector[Column]]): Column = m.size match {
-    case 1 => m(0)(0)
-    case n =>
-      (0 until n)
-        .map { j =>
-          val minor = m.tail.map(row => row.patch(j, Nil, 1))
-          val term = m(0)(j) * det(minor)
-          if (j % 2 == 0) term else -term
-        }
-        .reduce(_ + _)
-  }
-
   override def prepare(df: DataFrame, value: Column, w: WindowSpec): DataFrame = {
-    val dec = DecimalType(38, 10)
     val wp = w.rowsBetween(Window.unboundedPreceding, -1)
     val base0 = df
       .withColumn(
@@ -656,90 +554,28 @@ case class PiecewiseCalendar(
     val base = cpDays.zipWithIndex.foldLeft(base0) { case (d, (cp, i)) =>
       d.withColumn(pfx + s"_r${i + 2}", greatest(lit(0.0), c("_x") - lit(cp)))
     }
-    // regressor columns r1 = x, r2.. = hinges
-    val rs = c("_x") +: (2 to p).map(i => c(s"_r$i"))
-    val dw = c("_dow")
     val v = value.isNotNull
-    def msum(e: Column) = sum(when(v, e.cast(dec))).over(wp).cast("double")
     def slotCols(tag: String, cond: Column): Seq[(String, Column)] =
       Seq(
-        s"_n$tag" -> sum(when(v && cond, 1L).otherwise(0L)).over(wp),
-        s"_sy$tag" -> msum(when(cond, value))
-      ) ++ (1 to p).map(i => s"_sr$i$tag" -> msum(when(cond, rs(i - 1))))
+        s"_n$tag" -> LeastSquares.mcount(v && cond, wp),
+        s"_sy$tag" -> LeastSquares.msum(v, when(cond, value), wp)
+      ) ++ (1 to p).map(i => s"_sr$i$tag" -> LeastSquares.msum(v, when(cond, rs(i - 1)), wp))
     val holCond: Option[Column] =
       if (holidays.isEmpty) None
       else Some(to_date(col(tsCol)).isin(holidays.map(Date.valueOf): _*))
-    val moments: Seq[(String, Column)] =
-      Seq(
-        "_n" -> sum(when(v, 1L).otherwise(0L)).over(wp),
-        "_sy" -> msum(value)
-      ) ++ (1 to p).map(i => s"_s$i" -> msum(rs(i - 1))) ++
-        (for { i <- 1 to p; j <- i to p }
-          yield s"_s${i}_$j" -> msum(rs(i - 1) * rs(j - 1))) ++
-        (1 to p).map(i => s"_s${i}y" -> msum(rs(i - 1) * value)) ++
-        (1 to 7).flatMap(d => slotCols(d.toString, dw === d)) ++
+    val slots =
+      (1 to 7).flatMap(d => slotCols(d.toString, c("_dow") === d)) ++
         holCond.toSeq.flatMap(hc => slotCols("hol", hc)) ++
         holCond.map(hc => "_ishol" -> hc).toSeq
-    val withMoments = base.select(
-      col("*") +: moments.map { case (n, e) => e.as(pfx + n) }: _*
-    )
-    // centered normal-equations entries (ANSI: NULL until n > 0)
-    val nD = c("_n").cast("double")
-    def sAt(i: Int, j: Int) = if (i <= j) c(s"_s${i}_$j") else c(s"_s${j}_$i")
-    val centered: Seq[(String, Column)] =
-      (for { i <- 1 to p; j <- i to p }
-        yield s"_c${i}_$j" ->
-          when(c("_n") > 0L, sAt(i, j) - c(s"_s$i") * c(s"_s$j") / nD)) ++
-        (1 to p).map(i =>
-          s"_c${i}y" ->
-            when(c("_n") > 0L, c(s"_s${i}y") - c(s"_s$i") * c("_sy") / nD))
-    val withCentered = withMoments.select(
-      col("*") +: centered.map { case (n, e) => e.as(pfx + n) }: _*
-    )
-    // Cramer solve over attributes, AR's gates: per-diagonal relative
-    // variance floor + correlation-determinant collinearity floor
-    def cAt(i: Int, j: Int) =
-      if (i <= j) c(s"_c${i + 1}_${j + 1}") else c(s"_c${j + 1}_${i + 1}")
-    val cm = Vector.tabulate(p, p)(cAt)
-    val cy = Vector.tabulate(p)(i => c(s"_c${i + 1}y"))
-    val dDet = det(cm)
-    val diagOk =
-      (0 until p)
-        .map(i => cm(i)(i) > lit(1e-12) * c(s"_s${i + 1}_${i + 1}"))
-        .reduce(_ && _)
-    val prodDiag = (0 until p).map(i => cm(i)(i)).reduce(_ * _)
-    val withDet = withCentered
-      .withColumn(pfx + "_det", when(c("_n") > 0L, dDet))
-      .withColumn(
-        pfx + "_ok",
-        diagOk && abs(c("_det")) > lit(1e-9) * prodDiag
-      )
-    val withPhi = (1 to p).foldLeft(withDet) { case (d, kk) =>
-      d.withColumn(
-        pfx + s"_phi$kk",
-        when(
-          c("_ok"),
-          det(Vector.tabulate(p, p)((i, j) =>
-            if (j == kk - 1) cy(i) else cAt(i, j))) / c("_det")
-        )
-      )
-    }
-    val phiDotS = (1 to p)
-      .map(i => c(s"_phi$i") * c(s"_s$i"))
-      .reduce(_ + _)
-    withPhi.withColumn(
-      pfx + "_a",
-      when(c("_ok"), (c("_sy") - phiDotS) / nD)
-    )
+    LeastSquares.stage(base, pfx, wp, v, value, rs, slots)
   }
 
   def forecast(value: Column, w: WindowSpec): Column = {
-    val rs = c("_x") +: (2 to p).map(i => c(s"_r$i"))
     val dw = c("_dow")
     val a = c("_a")
     val phis = (1 to p).map(i => c(s"_phi$i"))
-    // per-slot mean residual under the PIECEWISE trend; 0 until >= 2
-    // training rows carry the slot
+    // per-slot mean residual under the trend; 0 until >= 2 training
+    // rows carry the slot
     def slotEff(tag: String): Column = {
       val nd = c(s"_n$tag")
       val ndD = nd.cast("double")
@@ -752,6 +588,8 @@ case class PiecewiseCalendar(
       when(dw === d, slotEff(d.toString)).otherwise(acc)
     }
     val trend = rs.zip(phis).foldLeft(a) { case (acc, (r, f)) => acc + f * r }
+    // no trailing `+ 0.0` when holidays are off: IEEE identity except
+    // for -0.0, whose sign a hash-exact oracle would see
     val pred =
       if (holidays.isEmpty) trend + dowEff
       else trend + dowEff + when(c("_ishol"), slotEff("hol")).otherwise(lit(0.0))
@@ -852,9 +690,10 @@ object Models {
       changepoints: Seq[String],
       holidays: Seq[String] = Nil
   ): Seq[ForecastModel] = {
+    require(changepoints.nonEmpty, "pass a non-empty changepoint roster (or use extended)")
     val base =
       if (holidays.isEmpty) extended else extendedWithHolidays(holidays)
-    base :+ PiecewiseCalendar(changepoints = changepoints, holidays = holidays)
+    base :+ CalendarRegression(changepoints = changepoints, holidays = holidays)
   }
 
   /** Prophet-style automatic changepoint CANDIDATES: `n` dates
@@ -900,7 +739,7 @@ object Models {
   /** AUTOMATIC changepoint discovery (the last AutoProphet fidelity
     * sliver): no known break dates required. A [[changepointGrid]]
     * candidate roster is generated over the observation span, each
-    * candidate becomes its own single-changepoint [[PiecewiseCalendar]]
+    * candidate becomes its own single-changepoint [[CalendarRegression]]
     * (distinct content-hashed names), and the optimizer's
     * forward-chaining CV selects per series — a series with an unknown
     * break date lands on the grid candidate nearest its true break,
@@ -922,7 +761,7 @@ object Models {
     val base =
       if (holidays.isEmpty) extended else extendedWithHolidays(holidays)
     base ++ changepointGrid(start, end, nCandidates).map(cp =>
-      PiecewiseCalendar(changepoints = Seq(cp), holidays = holidays))
+      CalendarRegression(changepoints = Seq(cp), holidays = holidays))
   }
 
   /** Simple family (reference SimpleModelFactory): trailing means only. */

@@ -90,10 +90,6 @@ object Optimizer {
         require(m.tsCol == tsCol,
           s"${m.name} was built with tsCol='${m.tsCol}' but forecastErrors " +
             s"was called with tsCol='$tsCol' — construct the model with the same column")
-      case m: PiecewiseCalendar =>
-        require(m.tsCol == tsCol,
-          s"${m.name} was built with tsCol='${m.tsCol}' but forecastErrors " +
-            s"was called with tsCol='$tsCol' — construct the model with the same column")
       case _ => ()
     }
     val w = Window.partitionBy(seriesCols.map(col): _*).orderBy(col(tsCol))

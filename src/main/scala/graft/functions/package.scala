@@ -5,16 +5,6 @@ import org.apache.spark.sql.functions.round
 
 package object functions {
 
-  /** Eagerly materialize an intermediate that is (a) consumed by
-    * multiple plan branches or (b) an iteration step whose lineage must
-    * be truncated. Default is `localCheckpoint` (executor-local blocks,
-    * no configured dir needed) — fine on local[*] and for short-lived
-    * jobs, but the blocks die with an executor. On a real cluster set
-    * `graft.checkpoint.reliable=true` (plus
-    * `sparkContext.setCheckpointDir(...)`) to write reliable HDFS/
-    * object-store checkpoints that survive executor loss — the standard
-    * hardening for long LSH/connected-components pipelines at 100 TB.
-    */
   /** Scale-adaptive input spreading (optimization guide §2.5 "input
     * skew": one huge unsplittable file → repartition immediately after
     * the read). The driver test tables are single-row-group parquet
@@ -57,12 +47,33 @@ package object functions {
     else df
   }
 
+  /** Eagerly materialize an intermediate that is (a) consumed by
+    * multiple plan branches or (b) an iteration step whose lineage must
+    * be truncated. Default is `localCheckpoint` (executor-local blocks,
+    * no configured dir needed) — fine on local[*] and for short-lived
+    * jobs, but the blocks die with an executor. On a real cluster set
+    * `graft.checkpoint.reliable=true` (plus
+    * `sparkContext.setCheckpointDir(...)`) to write reliable HDFS/
+    * object-store checkpoints that survive executor loss — the standard
+    * hardening for long LSH/connected-components pipelines at 100 TB.
+    */
   def materialize(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val reliable = df.sparkSession.conf
       .getOption("graft.checkpoint.reliable")
       .exists(_.toBoolean)
     if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
   }
+
+  /** Releases the blocks of a [[materialize]]d frame once its last
+    * consumer has run; a local checkpoint otherwise stays resident
+    * until the driver garbage-collects the frame. The frame cannot be
+    * read afterwards. A reliable checkpoint keeps its files.
+    */
+  def release(df: org.apache.spark.sql.DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 
   /** Cross-engine-stable 6-dp rounding. DuckDB's `round(x,6)` computes
     * `std::round(x*1e6)/1e6` — the x1e6 double multiply can itself

@@ -310,63 +310,72 @@ object Incremental {
     // tokenize+minhashed twice (once inside the join, once for the
     // write). A signature depends only on the text, so candidate-set
     // signatures filtered to final keeps are bit-identical to
-    // recomputing over the final keeps.
-    val (withNear, candidateSigs) = nearDupThreshold
-      .flatMap(thr => priorSignatures(spark, root).map((_, thr)))
-      .fold((withPrior, Option.empty[DataFrame])) { case (sigs, thr) =>
-        val once = graft.functions.materialize(withPrior)
-        val batchSigs = graft.functions.materialize(
-          graft.dedup.Dedup.minhashSignatureTable(
-            once.where(col("kept")).select(col(idCol), col(textCol)),
-            textCol, idCol, shingleN, numHashes)
-        )
-        val nearIds = graft.dedup.Dedup
-          .crossMinhashPairsBetweenSigs(
-            sigs, batchSigs, numHashes, bands, thr, priorBucketCap)
-          .select(col("id_r").as(idCol))
-          .distinct()
-          .withColumn("_near_prior", lit(true))
-        val flagged = once
-          .join(nearIds, Seq(idCol), "left")
-          .withColumn(
-            "drop_reason",
-            when(col("kept") && col("_near_prior"), lit("near_duplicate_prior"))
-              .otherwise(col("drop_reason"))
+    // recomputing over the final keeps. Both checkpoints are released
+    // in the finally below, after the signature write; otherwise their
+    // blocks stay resident until the driver garbage-collects them.
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = {
+      held += graft.functions.materialize(df)
+      held.last
+    }
+    try {
+      val (withNear, candidateSigs) = nearDupThreshold
+        .flatMap(thr => priorSignatures(spark, root).map((_, thr)))
+        .fold((withPrior, Option.empty[DataFrame])) { case (sigs, thr) =>
+          val once = hold(withPrior)
+          val batchSigs = hold(
+            graft.dedup.Dedup.minhashSignatureTable(
+              once.where(col("kept")).select(col(idCol), col(textCol)),
+              textCol, idCol, shingleN, numHashes)
           )
-          .withColumn("kept", col("drop_reason") === "kept")
-          .drop("_near_prior")
-        (flagged, Some(batchSigs))
-      }
-    withNear.write.mode("overwrite").parquet(s"$root/batches/batch=$batchId")
-    // fingerprints and signatures are derived from the WRITTEN output
-    // (cheap scans of kept rows), not from the live plan — deriving
-    // from the plan would re-execute the whole funnel again
-    val kept = spark.read
-      .parquet(s"$root/batches/batch=$batchId")
-      .where(col("kept"))
-    kept
-      .select(col("fp"))
-      .write
-      .mode("overwrite")
-      .parquet(s"$root/fingerprints/batch=$batchId")
-    candidateSigs
-      .fold(
-        // no near-dup pass computed signatures: one tokenize+minhash
-        // over the written kept rows, as before
-        graft.dedup.Dedup
-          .minhashSignatureTable(kept, textCol, idCol, shingleN, numHashes)
-      )(sigTable =>
-        // reuse the checkpointed candidate signatures: final keeps are
-        // a subset of candidates, so a semi-join on the committed kept
-        // ids IS the final signature table — no second minhash pass
-        sigTable.join(
-          kept.select(col(idCol).as("id")),
-          Seq("id"),
-          "left_semi"
-        ))
-      .write
-      .mode("overwrite")
-      .parquet(s"$root/signatures/batch=$batchId")
+          val nearIds = graft.dedup.Dedup
+            .crossMinhashPairsBetweenSigs(
+              sigs, batchSigs, numHashes, bands, thr, priorBucketCap)
+            .select(col("id_r").as(idCol))
+            .distinct()
+            .withColumn("_near_prior", lit(true))
+          val flagged = once
+            .join(nearIds, Seq(idCol), "left")
+            .withColumn(
+              "drop_reason",
+              when(col("kept") && col("_near_prior"), lit("near_duplicate_prior"))
+                .otherwise(col("drop_reason"))
+            )
+            .withColumn("kept", col("drop_reason") === "kept")
+            .drop("_near_prior")
+          (flagged, Some(batchSigs))
+        }
+      withNear.write.mode("overwrite").parquet(s"$root/batches/batch=$batchId")
+      // fingerprints and signatures are derived from the WRITTEN output
+      // (cheap scans of kept rows), not from the live plan — deriving
+      // from the plan would re-execute the whole funnel again
+      val kept = spark.read
+        .parquet(s"$root/batches/batch=$batchId")
+        .where(col("kept"))
+      kept
+        .select(col("fp"))
+        .write
+        .mode("overwrite")
+        .parquet(s"$root/fingerprints/batch=$batchId")
+      candidateSigs
+        .fold(
+          // no near-dup pass computed signatures: one tokenize+minhash
+          // over the written kept rows, as before
+          graft.dedup.Dedup
+            .minhashSignatureTable(kept, textCol, idCol, shingleN, numHashes)
+        )(sigTable =>
+          // reuse the checkpointed candidate signatures: final keeps are
+          // a subset of candidates, so a semi-join on the committed kept
+          // ids IS the final signature table — no second minhash pass
+          sigTable.join(
+            kept.select(col(idCol).as("id")),
+            Seq("id"),
+            "left_semi"
+          ))
+        .write
+        .mode("overwrite")
+        .parquet(s"$root/signatures/batch=$batchId")
+    } finally held.foreach(graft.functions.release)
     val f = fs(spark, root)
     f.mkdirs(new org.apache.hadoop.fs.Path(s"$root/_manifest"))
     f.create(marker(root, batchId), true).close()

@@ -262,7 +262,7 @@ object AnomalyQueries extends QueryPack {
   }
 
   /** Exact SQL mirror of [[graft.anomaly.CalendarRegression]]("ts",
-    * `holidays`, 14) as a CTE chain ending in
+    * Nil, `holidays`, 14) as a CTE chain ending in
     * `scal(event_type, ts, value, cal_pred)`: days-since-epoch +
     * day-of-week projection (DuckDB dayofweek is 0=Sunday, Spark's is
     * 1=Sunday — hence the +1), DECIMAL(38,10) expanding trend moments
@@ -330,7 +330,7 @@ object AnomalyQueries extends QueryPack {
 
   private val calCtes: String = calCtesFor(Nil)
 
-  /** Exact SQL mirror of [[graft.anomaly.PiecewiseCalendar]]("ts",
+  /** Exact SQL mirror of [[graft.anomaly.CalendarRegression]]("ts",
     * Seq(cpDate), Nil, 14) — one changepoint, p = 2 trend regressors
     * (x and the hinge max(0, x − cp)) — as a CTE chain ending in
     * `scp(event_type, ts, value, pw_pred)`: DECIMAL(38,10) expanding
@@ -551,7 +551,7 @@ object AnomalyQueries extends QueryPack {
         .forecastErrors(
           series(s, d),
           seriesCols,
-          cfg = cfg(Seq(PiecewiseCalendar(changepoints = Seq(calChangepoint))))
+          cfg = cfg(Seq(CalendarRegression(changepoints = Seq(calChangepoint))))
         )
         .select(
           col("event_type"),
@@ -630,7 +630,7 @@ object AnomalyQueries extends QueryPack {
   // reference models.py:216-241): no break date is supplied — a
   // uniform candidate grid over the observation span (Models
   // .changepointGrid, Prophet's changepoint_range=0.8 placement) turns
-  // into one single-changepoint PiecewiseCalendar per candidate, and
+  // into one single-changepoint CalendarRegression per candidate, and
   // forward-chaining CV SELECTS per series: a series with a real break
   // lands on the nearest grid candidate, one without keeps the
   // global-trend calendar fit. The oracle unrolls the full fit of the
@@ -638,8 +638,8 @@ object AnomalyQueries extends QueryPack {
   // mirrors Optimizer.optimize's qualify-and-select exactly.
   private val autoCpGrid: Seq[String] =
     Models.changepointGrid("2024-01-01", "2024-01-30", 3)
-  private val autoCpModels: Seq[PiecewiseCalendar] =
-    autoCpGrid.map(cp => PiecewiseCalendar(changepoints = Seq(cp)))
+  private val autoCpModels: Seq[CalendarRegression] =
+    autoCpGrid.map(cp => CalendarRegression(changepoints = Seq(cp)))
   private val bestModelAutoCp = Q(
     fn = (s, d) =>
       Optimizer

@@ -342,23 +342,14 @@ class ParquetRepository(spark: SparkSession, basePath: String) extends MetricsRe
               resolved.where(col("ts").isNull || col("ts") >= lit(cut))
             case _ => resolved
           }
-          // staging key = the collision-free escaped partition value
-          val staging = s"${path(table)}.staging_" +
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(uri)
-          retained.coalesce(1).write.mode("overwrite").parquet(staging)
           // CRASH ORDER: append the compacted copy FIRST (its part-
           // files get fresh names, so the duplicate rows it briefly
           // creates resolve by the same batch_seq window every reader
           // already applies), delete the snapshot LAST — the reverse
           // order had a window where a crash left the partition EMPTY
           // and every read silently returned no rows
-          spark.read
-            .parquet(staging)
-            .write
-            .mode("append")
-            .parquet(partDir)
+          retained.coalesce(1).write.mode("append").parquet(partDir)
           snapshot.foreach(fs.delete(_, false))
-          fs.delete(new org.apache.hadoop.fs.Path(staging), true)
         }
       }
     }

@@ -5,7 +5,7 @@ import graft.anomaly.{Optimizer, Scorer}
 import graft.profiler.{Profiler, ProfilingBuilder}
 import graft.quality.{AnomalousScore, LogHandler, NotificationHandler, Quality}
 import graft.repository.MetricsRepository
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,6 +22,44 @@ object Service {
     */
   private def tsKey(ts: java.sql.Timestamp): Long =
     if (ts == null) Long.MinValue else ts.getTime
+
+  /** Alert-budget dispatch of the batch assessments: only the
+    * `exceeding` subset reaches the driver, at most `maxAlerts` rows in
+    * `order` plus one row past the budget to detect truncation. Kept
+    * rows notify grouped by their timestamp, oldest first. A truncated
+    * budget counts what was cut and fires one synthetic
+    * `_alert_budget/alerts_truncated` alert (score = dropped count) at
+    * the newest kept timestamp, through the same handlers — flagged,
+    * never silent.
+    */
+  private def dispatchAlerts(
+      datasetUri: String,
+      exceeding: DataFrame,
+      order: Seq[Column],
+      maxAlerts: Int,
+      handlers: Seq[NotificationHandler]
+  )(tsOf: Row => java.sql.Timestamp, alert: Row => AnomalousScore): Unit = {
+    val capped = exceeding.orderBy(order: _*).limit(maxAlerts + 1).collect().toSeq
+    val kept = capped.take(maxAlerts)
+    kept
+      .groupBy(tsOf)
+      .toSeq
+      .sortBy(p => tsKey(p._1))
+      .foreach { case (ts, rows) =>
+        handlers.foreach(_.notify(datasetUri, ts, rows.map(alert)))
+      }
+    if (capped.size > maxAlerts) {
+      val dropped = exceeding.count() - maxAlerts
+      val budget = AnomalousScore(
+        entity = "_alert_budget",
+        instance = datasetUri,
+        name = "alerts_truncated",
+        score = dropped.toDouble,
+        threshold = maxAlerts.toDouble
+      )
+      handlers.foreach(_.notify(datasetUri, kept.map(tsOf).maxBy(tsKey), Seq(budget)))
+    }
+  }
 
   /** The metric-series key used across optimize/score/assess. */
   val seriesCols: Seq[String] = Seq("entity", "instance", "name")
@@ -464,52 +502,24 @@ object Service {
     )
     repo.addProfiling(datasetUri, psi)
     // alert PER DRIFTED DAY — an alert must name the day the
-    // distribution moved, not the batch's newest day; only the
-    // exceeding subset reaches the driver, one row past the budget to
-    // detect truncation
-    val capped = psi
-      .where(col("value") > threshold)
-      .orderBy(col("value").desc, col("instance"), col("ts"))
-      .limit(maxAlerts + 1)
-      .collect()
-      .toSeq
-    val truncated = capped.size > maxAlerts
-    val kept = capped.take(maxAlerts)
-    kept
-      .groupBy(_.getTimestamp(0))
-      .toSeq
-      .sortBy(p => tsKey(p._1))
-      .foreach { case (ts, dayRows) =>
-        val alerts = dayRows.map { r =>
-          AnomalousScore(
-            entity = r.getString(1),
-            instance = r.getString(2),
-            name = r.getString(3),
-            score = r.getDouble(4),
-            threshold = threshold
-          )
-        }
-        handlers.foreach(_.notify(datasetUri, ts, alerts))
-      }
-    if (truncated) {
-      val totalExceeding = psi.where(col("value") > threshold).count()
-      val newestTs = kept.map(_.getTimestamp(0)).maxBy(tsKey)
-      handlers.foreach(
-        _.notify(
-          datasetUri,
-          newestTs,
-          Seq(
-            AnomalousScore(
-              entity = "_alert_budget",
-              instance = datasetUri,
-              name = "alerts_truncated",
-              score = (totalExceeding - maxAlerts).toDouble,
-              threshold = maxAlerts.toDouble
-            )
-          )
+    // distribution moved, not the batch's newest day
+    dispatchAlerts(
+      datasetUri,
+      psi.where(col("value") > threshold),
+      Seq(col("value").desc, col("instance"), col("ts")),
+      maxAlerts,
+      handlers
+    )(
+      _.getTimestamp(0),
+      r =>
+        AnomalousScore(
+          entity = r.getString(1),
+          instance = r.getString(2),
+          name = r.getString(3),
+          score = r.getDouble(4),
+          threshold = threshold
         )
-      )
-    }
+    )
     psi
   }
 
@@ -590,61 +600,25 @@ object Service {
       .select(col("ts"), col("entity"), col("instance"),
         col("_m.name").as("name"), col("_m.value").as("value"))
     repo.addProfiling(datasetUri, stored)
-    // alert subset only: significant series, most-significant first,
-    // one row past the budget to detect truncation
-    val capped = verdicts
-      .where(abs(col("z")) > zThreshold)
-      .orderBy(
-        abs(col("z")).desc,
-        col("entity"),
-        col("instance"),
-        col("name")
-      )
-      .limit(maxAlerts + 1)
-      .collect()
-      .toSeq
-    val truncated = capped.size > maxAlerts
-    val kept = capped.take(maxAlerts)
-    kept
-      .groupBy(_.getAs[java.sql.Timestamp]("_ts"))
-      .toSeq
-      .sortBy(p => tsKey(p._1))
-      .foreach { case (ts, seriesRows) =>
-        val alerts = seriesRows.map { r =>
-          AnomalousScore(
-            entity = r.getAs[String]("entity"),
-            instance = r.getAs[String]("instance"),
-            name = r.getAs[String]("name"),
-            score = r.getAs[java.lang.Double]("z").doubleValue,
-            threshold = zThreshold,
-            thinned = r.getAs[Boolean]("thinned")
-          )
-        }
-        handlers.foreach(_.notify(datasetUri, ts, alerts))
-      }
-    if (truncated) {
-      // count what was cut so the budget breach itself alerts loudly
-      val totalSignificant =
-        verdicts.where(abs(col("z")) > zThreshold).count()
-      val newestTs = kept
-        .map(_.getAs[java.sql.Timestamp]("_ts"))
-        .maxBy(tsKey)
-      handlers.foreach(
-        _.notify(
-          datasetUri,
-          newestTs,
-          Seq(
-            AnomalousScore(
-              entity = "_alert_budget",
-              instance = datasetUri,
-              name = "alerts_truncated",
-              score = (totalSignificant - maxAlerts).toDouble,
-              threshold = maxAlerts.toDouble
-            )
-          )
+    // alert subset only: significant series, most-significant first
+    dispatchAlerts(
+      datasetUri,
+      verdicts.where(abs(col("z")) > zThreshold),
+      Seq(abs(col("z")).desc, col("entity"), col("instance"), col("name")),
+      maxAlerts,
+      handlers
+    )(
+      _.getAs[java.sql.Timestamp]("_ts"),
+      r =>
+        AnomalousScore(
+          entity = r.getAs[String]("entity"),
+          instance = r.getAs[String]("instance"),
+          name = r.getAs[String]("name"),
+          score = r.getAs[java.lang.Double]("z").doubleValue,
+          threshold = zThreshold,
+          thinned = r.getAs[Boolean]("thinned")
         )
-      )
-    }
+    )
     verdicts.drop("_ts")
   }
 

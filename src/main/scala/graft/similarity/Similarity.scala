@@ -325,7 +325,18 @@ object Similarity {
     // information and shorter ones on what they have (dot truncates to
     // min length). The aggregate is one full corpus-column scan BEFORE
     // the query starts — acceptable at test scale, the thing to avoid
-    // at 100 TB, hence the explicit-dim fast path.
+    // at 100 TB, hence the explicit-dim fast path. An explicit dim is a
+    // contract: a longer vector would hash on its first `dim`
+    // components only, so it fails the query instead — as a LAZY guard
+    // in the projections (the Scorer idiom), still no plan-time scan.
+    val vec = dim.fold(col(vecCol)) { d =>
+      when(
+        size(col(vecCol)) > d,
+        raise_error(format_string(
+          s"lshTopK: a $vecCol vector has %d components, more than dim = $d",
+          size(col(vecCol))))
+      ).otherwise(col(vecCol))
+    }
     val resolvedDim = dim.getOrElse {
       val dimRow = corpus
         .where(col(vecCol).isNotNull)
@@ -350,10 +361,10 @@ object Similarity {
     val q = queries
       .select(
         col(idCol).as("query_id"),
-        col(vecCol).as("_qv"),
-        filteredNorm(col(vecCol)).as("_qn"),
+        vec.as("_qv"),
+        filteredNorm(vec).as("_qn"),
         tableEntries { t =>
-          val own = lshBucket(col(vecCol), nPlanes, resolvedDim, t * nPlanes)
+          val own = lshBucket(vec, nPlanes, resolvedDim, t * nPlanes)
           if (!multiProbe) array(own)
           else array(own +: (0 until nPlanes).map(j => own.bitwiseXOR(lit(1L << j))): _*)
         }.as("_e")
@@ -368,9 +379,9 @@ object Similarity {
     val c = corpus
       .select(
         col(idCol).as("neighbor_id"),
-        col(vecCol).as("_cv"),
-        filteredNorm(col(vecCol)).as("_cn"),
-        tableEntries(t => lshBucket(col(vecCol), nPlanes, resolvedDim, t * nPlanes)).as("_e")
+        vec.as("_cv"),
+        filteredNorm(vec).as("_cn"),
+        tableEntries(t => lshBucket(vec, nPlanes, resolvedDim, t * nPlanes)).as("_e")
       )
       .select(
         col("neighbor_id"),

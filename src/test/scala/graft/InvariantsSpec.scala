@@ -371,7 +371,7 @@ class InvariantsSpec extends SparkSpec {
     // the whole family — if a refactor gave one model a different
     // partitioning/ordering, the exchange count would grow with the
     // candidate grid and this pins it.
-    import graft.anomaly.{Models, Optimizer, PiecewiseCalendar, CalendarRegression}
+    import graft.anomaly.{Models, Optimizer, CalendarRegression}
     val d = "/root/testdata/sf0.001"
     val series = graft.Tables
       .events(spark, d)
@@ -380,7 +380,7 @@ class InvariantsSpec extends SparkSpec {
     def exchanges(nCandidates: Int): Int = {
       val grid = Models.changepointGrid("2024-01-01", "2024-01-30", nCandidates)
       val fam = CalendarRegression() +:
-        grid.map(cp => PiecewiseCalendar(changepoints = Seq(cp)))
+        grid.map(cp => CalendarRegression(changepoints = Seq(cp)))
       val errs = Optimizer.forecastErrors(
         series,
         Seq("event_type"),

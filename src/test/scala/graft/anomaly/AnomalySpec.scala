@@ -456,6 +456,87 @@ class AnomalySpec extends SparkSpec {
     assert(a == b, "future data leaked into an earlier fit")
   }
 
+  test("AR matches a plain-JVM reference bit-for-bit on seeded noisy series") {
+    // independent reimplementation of the staged math (DECIMAL(38,10)
+    // expanding moments, centered normal equations, Laplace/Cramer
+    // solve in the Column term order, both conditioning gates). The
+    // series open on a constant stretch, so the first fits that clear
+    // minTrain are refused and must stay NULL. Seeded, so failures
+    // reproduce.
+    import java.math.{BigDecimal => JBD, MathContext, RoundingMode}
+    val mc = new MathContext(38)
+    def dec10(d: Double): JBD =
+      JBD.valueOf(d).setScale(10, RoundingMode.HALF_UP)
+    def det(m: Vector[Vector[Double]]): Double = m.size match {
+      case 1 => m(0)(0)
+      case n =>
+        (0 until n)
+          .map { j =>
+            val term = m(0)(j) * det(m.tail.map(_.patch(j, Nil, 1)))
+            if (j % 2 == 0) term else -term
+          }
+          .reduce(_ + _)
+    }
+    def jvmForecasts(vals: Seq[Double], p: Int, minTrain: Int): Seq[Option[Double]] =
+      vals.indices.map { t =>
+        def l(s: Int, i: Int) = vals(s - i)
+        // training samples: strictly preceding rows with every lag
+        val hist = (p until t).toVector
+        val n = hist.size
+        if (n < minTrain) None
+        else {
+          def msum(f: Int => Double): Double =
+            hist.foldLeft(JBD.ZERO)((acc, s) => acc.add(dec10(f(s)), mc)).doubleValue
+          val nD = n.toDouble
+          val sy = msum(s => vals(s))
+          val si = Vector.tabulate(p)(i => msum(s => l(s, i + 1)))
+          val sij = Vector.tabulate(p, p)((i, j) =>
+            msum(s => l(s, math.min(i, j) + 1) * l(s, math.max(i, j) + 1)))
+          val siy = Vector.tabulate(p)(i => msum(s => l(s, i + 1) * vals(s)))
+          val cm = Vector.tabulate(p, p)((i, j) =>
+            sij(i)(j) - si(math.min(i, j)) * si(math.max(i, j)) / nD)
+          val cy = Vector.tabulate(p)(i => siy(i) - si(i) * sy / nD)
+          val d = det(cm)
+          val diagOk = (0 until p).forall(i => cm(i)(i) > 1e-12 * sij(i)(i))
+          val prodDiag = (0 until p).map(i => cm(i)(i)).reduce(_ * _)
+          if (!(diagOk && math.abs(d) > 1e-9 * prodDiag)) None
+          else {
+            val phi = Vector.tabulate(p)(k =>
+              det(Vector.tabulate(p, p)((i, j) => if (j == k) cy(i) else cm(i)(j))) / d)
+            val a = (sy - (0 until p).map(i => phi(i) * si(i)).reduce(_ + _)) / nD
+            Some(a + (0 until p).map(i => phi(i) * l(t, i + 1)).reduce(_ + _))
+          }
+        }
+      }
+    val rng = new scala.util.Random(20261017L)
+    for { p <- Seq(1, 2); trial <- 1 to 2 } {
+      val noisy = Iterator
+        .iterate((20.0, 21.0)) { case (a, b) =>
+          (b, 10.0 + 0.4 * b - 0.3 * a + rng.nextGaussian())
+        }
+        .take(40)
+        .map(_._1)
+        .toSeq
+      val vals = Seq.fill(14)(42.0) ++ noisy
+      val spark_ = arForecasts(AutoRegressive(p), vals)
+      val jvm = jvmForecasts(vals, p, minTrain = 8)
+      // the constant stretch clears minTrain but every fit is refused
+      assert(jvm.take(14).forall(_.isEmpty) && jvm.exists(_.isDefined))
+      vals.indices.foreach { i =>
+        (spark_(i), jvm(i)) match {
+          case (None, None) => ()
+          case (Some(s), Some(j)) =>
+            assert(
+              java.lang.Double.compare(s, j) == 0,
+              s"AR($p) trial $trial row $i: spark=$s jvm=$j"
+            )
+          case other =>
+            fail(s"AR($p) trial $trial row $i: null-mismatch $other")
+        }
+      }
+    }
+  }
+
   // (dayIndex, value) rows at day granularity — gaps allowed, unlike
   // arSeries' dense index
   private def calSeries(rows: Seq[(Int, Double)], key: String = "s") = {
@@ -681,21 +762,6 @@ class AnomalySpec extends SparkSpec {
     }
   }
 
-  private def pwForecasts(
-      m: PiecewiseCalendar,
-      rows: Seq[(Int, Double)]
-  ): Seq[Option[Double]] = {
-    val w = Window.partitionBy($"series").orderBy($"ts")
-    val df = calSeries(rows)
-    m.prepare(df, $"value", w)
-      .withColumn("f", m.forecast($"value", w))
-      .orderBy("ts")
-      .select("f")
-      .collect()
-      .toSeq
-      .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
-  }
-
   private def epochDate(day: Int): String =
     java.time.LocalDate.ofEpochDay(day.toLong).toString
 
@@ -706,7 +772,7 @@ class AnomalySpec extends SparkSpec {
     val cp = 20
     def y(d: Int): Double = 10.0 + 0.5 * d + 1.5 * math.max(0, d - cp)
     val rows = (1 to 60).map(d => d -> y(d))
-    val fc = pwForecasts(PiecewiseCalendar(changepoints = Seq(epochDate(cp))), rows)
+    val fc = calForecasts(CalendarRegression(changepoints = Seq(epochDate(cp))), rows)
     // well past the changepoint: hinge has variance, system regular
     rows.zipWithIndex.foreach { case ((d, want), i) =>
       if (d >= 30)
@@ -720,31 +786,34 @@ class AnomalySpec extends SparkSpec {
   test("PiecewiseCalendar refuses out-of-span changepoints instead of guessing") {
     val rows = (1 to 40).map(d => d -> (10.0 + 0.5 * d))
     // changepoint after every observation: hinge is all-zero
-    assert(pwForecasts(
-      PiecewiseCalendar(changepoints = Seq(epochDate(90))), rows).forall(_.isEmpty))
+    assert(calForecasts(
+      CalendarRegression(changepoints = Seq(epochDate(90))), rows).forall(_.isEmpty))
     // changepoint before every observation: hinge == x - cp, collinear
-    assert(pwForecasts(
-      PiecewiseCalendar(changepoints = Seq(epochDate(0))), rows).forall(_.isEmpty))
+    assert(calForecasts(
+      CalendarRegression(changepoints = Seq(epochDate(0))), rows).forall(_.isEmpty))
     // roster validation
-    intercept[IllegalArgumentException](PiecewiseCalendar(changepoints = Nil))
+    // no changepoints is the global-trend calendar model, name and all
+    assert(CalendarRegression(changepoints = Nil) == CalendarRegression())
+    assert(CalendarRegression(changepoints = Nil).name == "Calendar-dow")
+    intercept[IllegalArgumentException](Models.extendedWithChangepoints(Nil))
     intercept[IllegalArgumentException](
-      PiecewiseCalendar(changepoints = Seq("2024-01-01", "2024-02-01", "2024-03-01")))
+      CalendarRegression(changepoints = Seq("2024-01-01", "2024-02-01", "2024-03-01")))
     // duplicate hinge = exact collinearity — refused loudly at construction
     intercept[IllegalArgumentException](
-      PiecewiseCalendar(changepoints = Seq(epochDate(20), epochDate(20))))
+      CalendarRegression(changepoints = Seq(epochDate(20), epochDate(20))))
     // permuted rosters are the SAME model: same name (content hash
     // sorts) AND same normalized regressor order, so co-existing
     // permutations can never alias same-named prepare columns with
     // different hinge moments — identical forecasts, bit for bit
     val permRows = (1 to 50).map(d =>
       d -> (10.0 + 0.5 * d + 1.5 * math.max(0, d - 15) - 0.8 * math.max(0, d - 30)))
-    val permA = PiecewiseCalendar(changepoints = Seq(epochDate(15), epochDate(30)))
-    val permB = PiecewiseCalendar(changepoints = Seq(epochDate(30), epochDate(15)))
+    val permA = CalendarRegression(changepoints = Seq(epochDate(15), epochDate(30)))
+    val permB = CalendarRegression(changepoints = Seq(epochDate(30), epochDate(15)))
     assert(permA.name == permB.name)
-    assert(pwForecasts(permA, permRows) == pwForecasts(permB, permRows))
-    assert(PiecewiseCalendar(changepoints = Seq(epochDate(20))).name
+    assert(calForecasts(permA, permRows) == calForecasts(permB, permRows))
+    assert(CalendarRegression(changepoints = Seq(epochDate(20))).name
       .matches("Calendar-pw1x[0-9a-f]{16}"))
-    assert(PiecewiseCalendar(
+    assert(CalendarRegression(
       changepoints = Seq(epochDate(20)),
       holidays = Seq(epochDate(9))).name
       .matches("Calendar-pw1x[0-9a-f]{16}-h1x[0-9a-f]{16}"))
@@ -776,7 +845,7 @@ class AnomalySpec extends SparkSpec {
       .collect()
       .head
     assert(
-      best.getAs[String]("best_model") == PiecewiseCalendar(changepoints = Seq(epochDate(cp))).name,
+      best.getAs[String]("best_model") == CalendarRegression(changepoints = Seq(epochDate(cp))).name,
       s"piecewise calendar fit must win CV on a slope-break weekday " +
         s"series, got ${best.getAs[String]("best_model")}"
     )
@@ -880,7 +949,7 @@ class AnomalySpec extends SparkSpec {
       )
       .collect()
       .head
-    val nearest = PiecewiseCalendar(changepoints = Seq(epochDate(42))).name
+    val nearest = CalendarRegression(changepoints = Seq(epochDate(42))).name
     assert(
       best.getAs[String]("best_model") == nearest,
       s"CV must discover the grid candidate nearest the unknown break, " +

@@ -133,6 +133,21 @@ class IncrementalSpec extends SparkSpec {
       .select("id").as[Long].collect().toSeq === Seq(3L))
   }
 
+  test("near-dup batches release their persisted intermediates") {
+    // the second batch runs the near-dup pass (the first has no prior
+    // signatures to join): its funnel frame and candidate signatures
+    // are cached for the batch and must be gone once it commits
+    val textA2 = textA.replaceFirst("quick brown", "big brown")
+    val root = java.nio.file.Files.createTempDirectory("increm-release").toString
+    val baseline = spark.sparkContext.getPersistentRDDs.keySet
+    assert(Incremental.prepareBatch(Seq((1L, textA)).toDF("doc_id", "text"),
+      root, "d1", nearDupThreshold = Some(0.5)))
+    assert(Incremental.prepareBatch(Seq((2L, textA2), (3L, textB)).toDF("doc_id", "text"),
+      root, "d2", nearDupThreshold = Some(0.5)))
+    assert(spark.read.parquet(s"$root/batches/batch=d2").where($"kept").count() === 1L)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === baseline)
+  }
+
   test("mismatched signature parameters fail loudly instead of comparing junk") {
     val root = java.nio.file.Files.createTempDirectory("increm5").toString
     val b1 = Seq((1L, textA)).toDF("doc_id", "text")

@@ -150,6 +150,22 @@ class SimilaritySpec extends SparkSpec {
     assert(derived === explicit)
   }
 
+  test("lshTopK explicit dim fails the query on a longer vector instead of hashing a prefix") {
+    val q = vecs.where($"vec_id" === 1L)
+    // every vector is 3-dim: dim = 2 would hash on the first two
+    // components only — refused when the query runs, not at plan time
+    val short = Similarity.lshTopK(q, vecs, "vec_id", "embedding", 3, nPlanes = 4, dim = Some(2))
+    val ex = intercept[Exception](short.collect())
+    assert(ex.getMessage.contains("more than dim = 2"))
+    // a query-side vector longer than dim fails the same way
+    val longQ = Seq((9L, Array(1.0f, 0.0f, 0.0f, 0.5f), "q")).toDF("vec_id", "embedding", "label")
+    intercept[Exception](
+      Similarity.lshTopK(longQ, vecs, "vec_id", "embedding", 3, nPlanes = 4, dim = Some(3)).collect())
+    // dim equal to the vector length passes untouched
+    assert(Similarity.lshTopK(q, vecs, "vec_id", "embedding", 3, nPlanes = 4, dim = Some(3))
+      .collect().nonEmpty)
+  }
+
   test("zero-norm exclusion filters stay ABOVE the norm projections") {
     // The r13 regression: a plain `.where(_cn > 0)` was rewritten
     // through the Project by predicate pushdown, re-evaluating the
