@@ -46,16 +46,9 @@ class JdbcMetricsRepository(
   // identifiers are created QUOTED lowercase so the DataFrames that
   // come back carry the exact trait-contract column names (unquoted
   // DDL would uppercase them in Derby/Postgres)
-  private val profilingCols =
-    Seq("dataset_uri", "ts", "entity", "instance", "name", "value")
-  private val optimizationCols = Seq(
-    "dataset_uri", "entity", "instance", "name",
-    "best_model", "threshold", "mean_error", "optimization_failed"
-  )
-  private val scoringCols = Seq(
-    "dataset_uri", "ts", "entity", "instance", "name",
-    "value", "predicted", "score"
-  )
+  private val profilingCols = "dataset_uri" +: profilingSchema.fieldNames.toSeq
+  private val optimizationCols = "dataset_uri" +: optimizationSchema.fieldNames.toSeq
+  private val scoringCols = "dataset_uri" +: scoringSchema.fieldNames.toSeq
 
   private def withConn[A](f: Connection => A): A = {
     val c = DriverManager.getConnection(url, props)

@@ -1,7 +1,8 @@
 package graft.repository
 
 import graft.core.DatasetMeta
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,7 +19,7 @@ import org.apache.spark.sql.types._
   * Table shapes (SURVEY §4):
   *  - profiling:    (dataset_uri, ts, entity, instance, name, value)
   *  - optimization: (dataset_uri, entity, instance, name, best_model,
-  *                   threshold, mean_error)
+  *                   threshold, mean_error, optimization_failed)
   *  - scoring:      (dataset_uri, ts, entity, instance, name, value,
   *                   predicted, score)
   *
@@ -76,6 +77,30 @@ object MetricsRepository {
     val upper = end.map(col("ts") <= lit(_)).getOrElse(lit(true))
     df.where(lower && upper)
   }
+
+  private def field(name: String, t: DataType) = StructField(name, t)
+  private val seriesFields = Seq("entity", "instance", "name").map(field(_, StringType))
+
+  /** The declared rows of each table, in stored column order. */
+  val profilingSchema: StructType =
+    StructType(field("ts", TimestampType) +: seriesFields :+ field("value", DoubleType))
+  val optimizationSchema: StructType = StructType(
+    seriesFields ++ Seq(
+      field("best_model", StringType),
+      field("threshold", DoubleType),
+      field("mean_error", DoubleType),
+      field("optimization_failed", BooleanType)
+    )
+  )
+  val scoringSchema: StructType = StructType(
+    (field("ts", TimestampType) +: seriesFields) ++
+      Seq("value", "predicted", "score").map(field(_, DoubleType))
+  )
+
+  private[repository] def emptyOf(schema: StructType): DataFrame = {
+    val spark = SparkSession.active
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+  }
 }
 
 /** In-memory repository for tests and notebooks: plain upsert via
@@ -125,13 +150,13 @@ class InMemoryRepository extends MetricsRepository {
       start: Option[java.sql.Timestamp],
       end: Option[java.sql.Timestamp]
   ): DataFrame =
-    tsBounded(profiling.getOrElse(uri, emptyProfiling()), start, end)
+    tsBounded(profiling.getOrElse(uri, emptyOf(profilingSchema)), start, end)
 
   def addOptimization(uri: String, rows: DataFrame): Unit = synchronized {
     optimization = upsert(optimization, uri, rows, optimizationKey)
   }
   def getOptimization(uri: String): DataFrame =
-    optimization.getOrElse(uri, emptyOptimization())
+    optimization.getOrElse(uri, emptyOf(optimizationSchema))
 
   def addScoring(uri: String, rows: DataFrame): Unit = synchronized {
     scoring = upsert(scoring, uri, rows, scoringKey)
@@ -141,48 +166,7 @@ class InMemoryRepository extends MetricsRepository {
       start: Option[java.sql.Timestamp],
       end: Option[java.sql.Timestamp]
   ): DataFrame =
-    tsBounded(scoring.getOrElse(uri, emptyScoring()), start, end)
-
-  private def spark = SparkSession.active
-  private def emptyOf(schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  private def emptyProfiling() = emptyOf(
-    StructType(
-      Seq(
-        StructField("ts", TimestampType),
-        StructField("entity", StringType),
-        StructField("instance", StringType),
-        StructField("name", StringType),
-        StructField("value", DoubleType)
-      )
-    )
-  )
-  private def emptyOptimization() = emptyOf(
-    StructType(
-      Seq(
-        StructField("entity", StringType),
-        StructField("instance", StringType),
-        StructField("name", StringType),
-        StructField("best_model", StringType),
-        StructField("threshold", DoubleType),
-        StructField("mean_error", DoubleType),
-        StructField("optimization_failed", BooleanType)
-      )
-    )
-  )
-  private def emptyScoring() = emptyOf(
-    StructType(
-      Seq(
-        StructField("ts", TimestampType),
-        StructField("entity", StringType),
-        StructField("instance", StringType),
-        StructField("name", StringType),
-        StructField("value", DoubleType),
-        StructField("predicted", DoubleType),
-        StructField("score", DoubleType)
-      )
-    )
-  )
+    tsBounded(scoring.getOrElse(uri, emptyOf(scoringSchema)), start, end)
 }
 
 /** Parquet-backed repository, partitioned by `dataset_uri`.
@@ -190,13 +174,16 @@ class InMemoryRepository extends MetricsRepository {
   * Writes are APPEND-ONLY with a monotonically increasing `batch_seq`;
   * reads resolve the latest row per logical key (merge-on-read,
   * Delta-style without Delta). This is the shape that scales: an upsert
-  * never rewrites history, partition pruning on `dataset_uri` keeps
-  * every read local to one dataset, and compaction is an offline
-  * rewrite (planned r2). Dataset registrations live in a tiny JSON-line
-  * parquet alongside.
+  * never rewrites history, and every read lists and scans ONE dataset's
+  * partition directory under the table's declared schema — no schema
+  * inference job, and no listing of the other datasets' partitions
+  * (above 32 of them that listing is itself a Spark job). Compaction
+  * ([[compact]], [[maintain]]) is an offline per-partition rewrite.
+  * Dataset registrations live in a small parquet table alongside.
   */
 class ParquetRepository(spark: SparkSession, basePath: String) extends MetricsRepository {
   import MetricsRepository._
+  import ParquetRepository._
 
   private val seq = new java.util.concurrent.atomic.AtomicLong(System.currentTimeMillis())
 
@@ -209,15 +196,28 @@ class ParquetRepository(spark: SparkSession, basePath: String) extends MetricsRe
   private def nextSeq(): Long =
     seq.updateAndGet(prev => math.max(prev + 1, System.currentTimeMillis()))
 
+  /** The `batch_seq` column of one write. A LongType literal is inlined
+    * into the generated Java, so every write would compile new classes;
+    * a zero-argument UDF closing over the value is referenced as an
+    * object instead, and the generated code stays identical across
+    * writes (same stored values, no extra job).
+    */
+  private def stamp(): Column = {
+    val s = nextSeq()
+    udf(() => s).apply()
+  }
+
   private def path(table: String) = s"$basePath/$table"
+
+  private def fs(p: Path) = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Hadoop-FS existence check — works for any scheme (local, hdfs://,
     * s3a://), unlike java.io.File which silently reports false on
     * remote filesystems.
     */
   private def fsExists(p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
+    val hp = new Path(p)
+    fs(hp).exists(hp)
   }
 
   /** Partition directory for a dataset, with Spark's partition-value
@@ -230,75 +230,92 @@ class ParquetRepository(spark: SparkSession, basePath: String) extends MetricsRe
     s"${path(table)}/dataset_uri=$escaped"
   }
 
-  private def append(table: String, uri: String, rows: DataFrame): Unit =
+  /** The batch files of one dataset's partition of a table. */
+  private def batchFiles(t: Table, uri: String): Seq[Path] = {
+    val dir = new Path(partitionDir(t.name, uri))
+    val dirFs = fs(dir)
+    if (!dirFs.exists(dir)) Seq.empty
+    else dirFs.listStatus(dir).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
+  }
+
+  /** Appends rows selected and cast to the table's declared columns (by
+    * name; extra columns are not stored). A missing column fails here,
+    * on the driver, before any job runs.
+    */
+  private def append(t: Table, uri: String, rows: DataFrame): Unit = {
+    val missing = t.rows.fieldNames.filterNot(f => rows.columns.exists(_.equalsIgnoreCase(f)))
+    require(
+      missing.isEmpty,
+      s"${t.name} rows lack column(s) ${missing.mkString(", ")} (got ${rows.columns.mkString(", ")})"
+    )
+    val cols = t.rows.fields.map(f => col(f.name).cast(f.dataType).as(f.name))
     rows
-      .withColumn("dataset_uri", lit(uri))
-      .withColumn("batch_seq", lit(nextSeq()))
+      .select(cols.toSeq :+ lit(uri).as("dataset_uri") :+ stamp().as("batch_seq"): _*)
       .write
       .mode("append")
       .partitionBy("dataset_uri")
-      .parquet(path(table))
-
-  /** Latest row per logical key within one dataset partition. The
-    * window shuffles only that dataset's slice (partition-pruned scan).
-    */
-  private def latest(table: String, uri: String, key: Seq[String], schema: => DataFrame): DataFrame = {
-    if (!fsExists(path(table))) schema
-    else {
-      val df = spark.read.parquet(path(table)).where(col("dataset_uri") === uri)
-      val w = Window.partitionBy(key.map(col): _*).orderBy(col("batch_seq").desc)
-      df.withColumn("_rn", row_number().over(w))
-        .where(col("_rn") === 1)
-        .drop("_rn", "batch_seq", "dataset_uri")
-    }
+      .parquet(path(t.name))
   }
+
+  /** Latest row per logical key within one dataset partition. */
+  private def latest(t: Table, uri: String): DataFrame = {
+    val dir = partitionDir(t.name, uri)
+    if (!fsExists(dir)) emptyOf(t.rows)
+    else resolve(spark.read.schema(t.stored).parquet(dir), t.key).drop("batch_seq")
+  }
+
+  private def registrations(): Option[DataFrame] =
+    if (!fsExists(path("datasets"))) None
+    else Some(spark.read.schema(datasetsSchema).parquet(path("datasets")))
 
   def registerDataset(meta: DatasetMeta): Unit = {
     import spark.implicits._
-    Seq(meta).toDF().withColumn("batch_seq", lit(nextSeq()))
+    Seq(meta).toDF().withColumn("batch_seq", stamp())
       .write.mode("append").parquet(path("datasets"))
   }
-  def getDataset(uri: String): Option[DatasetMeta] = listDatasets().find(_.uri == uri)
-  def listDatasets(): Seq[DatasetMeta] = {
+
+  /** One job: the uri's registrations are collected and the newest wins
+    * on the driver.
+    */
+  def getDataset(uri: String): Option[DatasetMeta] = registrations().flatMap { df =>
     import spark.implicits._
-    if (!fsExists(path("datasets"))) Seq.empty
-    else {
-      val w = Window.partitionBy(col("uri")).orderBy(col("batch_seq").desc)
-      spark.read
-        .parquet(path("datasets"))
-        .withColumn("_rn", row_number().over(w))
-        .where(col("_rn") === 1)
-        .drop("_rn", "batch_seq")
-        .as[DatasetMeta]
-        .collect()
-        .toSeq
-    }
+    val meta = struct(datasetsSchema.fieldNames.filter(_ != "batch_seq").map(col).toSeq: _*)
+    df.where(col("uri") === uri)
+      .select(col("batch_seq").as("_1"), meta.as("_2"))
+      .as[(Long, DatasetMeta)]
+      .collect()
+      .maxByOption(_._1)
+      .map(_._2)
   }
 
-  def addProfiling(uri: String, rows: DataFrame): Unit = append("profiling", uri, rows)
+  def listDatasets(): Seq[DatasetMeta] = registrations().fold(Seq.empty[DatasetMeta]) { df =>
+    import spark.implicits._
+    resolve(df, Seq("uri")).drop("batch_seq").as[DatasetMeta].collect().toSeq
+  }
+
+  def addProfiling(uri: String, rows: DataFrame): Unit = append(Profiling, uri, rows)
   def getProfiling(
       uri: String,
       start: Option[java.sql.Timestamp],
       end: Option[java.sql.Timestamp]
   ): DataFrame =
-    tsBounded(latest("profiling", uri, profilingKey, new InMemoryRepository().getProfiling(uri)), start, end)
+    tsBounded(latest(Profiling, uri), start, end)
 
-  def addOptimization(uri: String, rows: DataFrame): Unit = append("optimization", uri, rows)
-  def getOptimization(uri: String): DataFrame =
-    latest("optimization", uri, optimizationKey, new InMemoryRepository().getOptimization(uri))
+  def addOptimization(uri: String, rows: DataFrame): Unit = append(Optimization, uri, rows)
+  def getOptimization(uri: String): DataFrame = latest(Optimization, uri)
 
-  def addScoring(uri: String, rows: DataFrame): Unit = append("scoring", uri, rows)
+  def addScoring(uri: String, rows: DataFrame): Unit = append(Scoring, uri, rows)
   def getScoring(
       uri: String,
       start: Option[java.sql.Timestamp],
       end: Option[java.sql.Timestamp]
   ): DataFrame =
-    tsBounded(latest("scoring", uri, scoringKey, new InMemoryRepository().getScoring(uri)), start, end)
+    tsBounded(latest(Scoring, uri), start, end)
 
-  /** Compact one dataset's partition of a table: resolve merge-on-read
-    * down to the latest row per key and rewrite the partition AS ONE
-    * FILE. Reads stay O(live rows) afterwards. Offline maintenance
-    * (Delta OPTIMIZE-style) — per dataset, no global lock.
+  /** Compact one dataset's partition of every table: resolve
+    * merge-on-read down to the latest row per key and rewrite the
+    * partition AS ONE FILE. Reads stay O(live rows) afterwards. Offline
+    * maintenance (Delta OPTIMIZE-style) — per dataset, no global lock.
     * `retainSince` additionally drops rows with ts before the cutoff
     * from the ts-keyed tables (profiling, scoring) — the retention
     * sweep that keeps a years-long metric history bounded.
@@ -311,56 +328,44 @@ class ParquetRepository(spark: SparkSession, basePath: String) extends MetricsRe
     * read against the rewritten rows. All paths go through Hadoop FS
     * so any scheme (local/hdfs/s3a) works.
     */
-  def compact(uri: String, retainSince: Option[java.sql.Timestamp] = None): Unit = {
-    val tables = Seq(
-      ("profiling", profilingKey),
-      ("optimization", optimizationKey),
-      ("scoring", scoringKey)
-    )
-    tables.foreach { case (table, key) =>
-      val partDir = partitionDir(table, uri)
-      if (fsExists(partDir)) {
-        val hPart = new org.apache.hadoop.fs.Path(partDir)
-        val fs = hPart.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val snapshot = fs
-          .listStatus(hPart)
-          .map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-        if (snapshot.nonEmpty) {
-          // leaf-file read: no partition column, batch_seq retained
-          val df = spark.read.parquet(snapshot.map(_.toString).toSeq: _*)
-          val w = Window.partitionBy(key.map(col): _*).orderBy(col("batch_seq").desc)
-          val resolved = df
-            .withColumn("_rn", row_number().over(w))
-            .where(col("_rn") === 1)
-            .drop("_rn")
-          val retained = retainSince match {
-            case Some(cut) if df.columns.contains("ts") =>
-              // NULL-ts rows are a supported logical key (the upserts'
-              // null-safe matches exist for them) and are NOT "before
-              // the cutoff" — retention must keep them
-              resolved.where(col("ts").isNull || col("ts") >= lit(cut))
-            case _ => resolved
-          }
-          // CRASH ORDER: append the compacted copy FIRST (its part-
-          // files get fresh names, so the duplicate rows it briefly
-          // creates resolve by the same batch_seq window every reader
-          // already applies), delete the snapshot LAST — the reverse
-          // order had a window where a crash left the partition EMPTY
-          // and every read silently returned no rows
-          retained.coalesce(1).write.mode("append").parquet(partDir)
-          snapshot.foreach(fs.delete(_, false))
-        }
-      }
+  def compact(uri: String, retainSince: Option[java.sql.Timestamp] = None): Unit =
+    tables.foreach(t => compactTable(t, uri, batchFiles(t, uri), retainSince))
+
+  private def compactTable(
+      t: Table,
+      uri: String,
+      snapshot: Seq[Path],
+      retainSince: Option[java.sql.Timestamp]
+  ): Unit = if (snapshot.nonEmpty) {
+    // leaf-file read: no partition column, batch_seq retained
+    val resolved = resolve(spark.read.schema(t.stored).parquet(snapshot.map(_.toString): _*), t.key)
+    val retained = retainSince match {
+      case Some(cut) if t.rows.fieldNames.contains("ts") =>
+        // NULL-ts rows are a supported logical key (the upserts'
+        // null-safe matches exist for them) and are NOT "before
+        // the cutoff" — retention must keep them
+        resolved.where(col("ts").isNull || col("ts") >= lit(cut))
+      case _ => resolved
     }
+    // CRASH ORDER: append the compacted copy FIRST (its part-
+    // files get fresh names, so the duplicate rows it briefly
+    // creates resolve by the same batch_seq window every reader
+    // already applies), delete the snapshot LAST — the reverse
+    // order had a window where a crash left the partition EMPTY
+    // and every read silently returned no rows
+    retained.coalesce(1).write.mode("append").parquet(partitionDir(t.name, uri))
+    snapshot.foreach(f => fs(f).delete(f, false))
   }
 
-  /** File-count-gated maintenance: compact this dataset when any table
-    * partition holds more than `maxFiles` batch files. The check is one
-    * directory listing per table — cheap enough to call after every
-    * upsert, which keeps a year of daily appends permanently bounded at
-    * ~maxFiles files per partition instead of 365. Returns whether a
-    * compaction ran.
+  /** File-count-gated maintenance: compact each of this dataset's table
+    * partitions that holds more than `maxFiles` batch files, and leave
+    * the others as they are (the optimization partition, which a daily
+    * job does not write, is not rewritten every day). `retainSince`
+    * applies to the tables that compact. The check is one directory
+    * listing per table — cheap enough to call after every upsert, which
+    * keeps a year of daily appends permanently bounded at ~maxFiles
+    * files per partition instead of 365. Returns whether any compaction
+    * ran.
     */
   def maintain(
       uri: String,
@@ -368,15 +373,33 @@ class ParquetRepository(spark: SparkSession, basePath: String) extends MetricsRe
       retainSince: Option[java.sql.Timestamp] = None
   ): Boolean = {
     require(maxFiles > 0, s"maxFiles must be positive, got $maxFiles")
-    val needs = Seq("profiling", "optimization", "scoring").exists { table =>
-      val dir = partitionDir(table, uri)
-      fsExists(dir) && {
-        val hp = new org.apache.hadoop.fs.Path(dir)
-        val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.listStatus(hp).count(_.getPath.getName.endsWith(".parquet")) > maxFiles
-      }
-    }
-    if (needs) compact(uri, retainSince)
-    needs
+    val over = tables.map(t => t -> batchFiles(t, uri)).filter(_._2.length > maxFiles)
+    over.foreach { case (t, files) => compactTable(t, uri, files, retainSince) }
+    over.nonEmpty
+  }
+}
+
+object ParquetRepository {
+  import MetricsRepository._
+
+  /** One repository table: its name, logical key and declared rows. */
+  private case class Table(name: String, key: Seq[String], rows: StructType) {
+
+    /** The stored shape: the declared rows plus the write stamp. */
+    val stored: StructType = rows.add("batch_seq", LongType, nullable = false)
+  }
+
+  private val Profiling = Table("profiling", profilingKey, profilingSchema)
+  private val Optimization = Table("optimization", optimizationKey, optimizationSchema)
+  private val Scoring = Table("scoring", scoringKey, scoringSchema)
+  private val tables = Seq(Profiling, Optimization, Scoring)
+
+  private val datasetsSchema: StructType =
+    Encoders.product[DatasetMeta].schema.add("batch_seq", LongType, nullable = false)
+
+  /** Latest row per logical key, by `batch_seq`. */
+  private def resolve(df: DataFrame, key: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(key.map(col): _*).orderBy(col("batch_seq").desc)
+    df.withColumn("_rn", row_number().over(w)).where(col("_rn") === 1).drop("_rn")
   }
 }

@@ -11,6 +11,7 @@ object SparkSpec {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(LocalSession.codegenConf)
     .getOrCreate()
 }
 

@@ -6,6 +6,7 @@ import graft.profiler.ProfilingBuilder
 import graft.quality.{AnomalousScore, NotificationHandler}
 import graft.repository.{InMemoryRepository, MetricsRepository, ParquetRepository}
 import graft.testing.SyntheticSeries
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class ServiceSpec extends SparkSpec {
@@ -273,6 +274,60 @@ class ServiceSpec extends SparkSpec {
     repo.compact("u_m", retainSince = Some(day(15)))
     assert(repo.getProfiling("u_m").where($"ts".isNull).count() == 1,
       "retention compact must not delete the NULL-ts series")
+  }
+
+  /** The first `history` days of the synthetic series and each of the
+    * `days` after them, written apart and read back as parquet: every day
+    * arrives as a batch of the same shape, as a daily job reads it.
+    */
+  private def dailyBatches(history: Int, days: Int): (DataFrame, Seq[DataFrame]) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-days").toString
+    val all = batches(history + days)
+    val cut = all.orderBy("ts").select("ts").as[java.sql.Timestamp].collect()
+    all.where($"ts" < cut(history)).write.parquet(s"$dir/history")
+    (0 until days).foreach(d => all.where($"ts" === cut(history + d)).write.parquet(s"$dir/day$d"))
+    (spark.read.parquet(s"$dir/history"), (0 until days).map(d => spark.read.parquet(s"$dir/day$d")))
+  }
+
+  test("[parquet] a daily job reuses the generated classes of the day before") {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val repo = newParquetRepo()
+    val (history, days) = dailyBatches(history = 40, days = 3)
+    Service.profileCreateOptimize(history, "ds://daily", "ts", repo, ProfilingBuilder.simple)
+    val compiles = days.map { day =>
+      val before = METRIC_COMPILATION_TIME.getCount
+      Service.assessNewTs(day, "ds://daily", "ts", repo, ProfilingBuilder.simple, handlers = Nil)
+      METRIC_COMPILATION_TIME.getCount - before
+    }
+    // the third day compiles only the classes of assessQuality's
+    // `ts === lit(t)` filter (kept: Parquet prunes row groups on it). A
+    // per-write literal, a too-small class cache, or a stage id that
+    // adaptive execution renumbered in a class name compiles more.
+    assert(compiles(2) <= 5, s"classes compiled per day: ${compiles.mkString(", ")}")
+  }
+
+  test("maintain compacts only the table partitions over maxFiles") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-maintain-tables").toString
+    val repo = new ParquetRepository(spark, dir)
+    val uri = "ds://tables"
+    val (history, days) = dailyBatches(history = 30, days = 2)
+    def files(table: String) = new java.io.File(s"$dir/$table/dataset_uri=ds%3A%2F%2Ftables")
+      .listFiles().map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq
+    def views() = Seq(repo.getProfiling(uri), repo.getOptimization(uri), repo.getScoring(uri))
+      .map(_.collect().map(_.toSeq.mkString("|")).sorted.toSeq)
+    // onboarding and the first day, maintained: one file per partition
+    Service.profileCreateOptimize(history, uri, "ts", repo, ProfilingBuilder.simple)
+    Service.assessNewTs(days(0), uri, "ts", repo, ProfilingBuilder.simple, handlers = Nil)
+    repo.maintain(uri, maxFiles = 1)
+    // the next day appends to profiling and scoring only
+    Service.assessNewTs(days(1), uri, "ts", repo, ProfilingBuilder.simple, handlers = Nil)
+    val optFiles = files("optimization")
+    assert(optFiles.size == 1 && files("profiling").size > 1 && files("scoring").size > 1)
+    val before = views()
+    assert(repo.maintain(uri, maxFiles = 1))
+    assert(files("optimization") == optFiles, "the optimization partition was rewritten")
+    assert(files("profiling").size == 1 && files("scoring").size == 1)
+    assert(views() == before)
   }
 
   test("parquet repository round-trips dataset metadata and latest-wins upserts") {
