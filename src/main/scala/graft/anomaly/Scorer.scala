@@ -44,7 +44,8 @@ object Scorer {
     * join-back) have no model to score with and emit no rows here —
     * they are NOT silently lost: the optimization table carries them
     * flagged, and the service layer alerts on exactly that flag
-    * (Service.assess / Service.scala's optimization_failed paths).
+    * ([[graft.service.Service.assessQuality]], through
+    * [[graft.quality.Quality.verdicts]]).
     * Callers composing scoreAll directly must consume the flag the
     * same way.
     */

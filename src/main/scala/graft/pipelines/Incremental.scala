@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.service.Service
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -692,55 +693,21 @@ object Incremental {
       repo: graft.repository.MetricsRepository
   ): DataFrame = {
     val stats = funnelStatsByBatch(spark, root)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("batch")
-    val rows = stats
-      .withColumn("_tot", sum(col("n_docs")).over(w))
-      // try_to_timestamp, not to_timestamp: under ANSI an unparseable
-      // id would throw a bare SparkDateTimeException from inside the
-      // scan — the NULL check below turns it into a named-batch error
-      .withColumn("ts", try_to_timestamp(col("batch")))
-      .select(
-        col("ts"),
-        col("batch"),
-        lit("funnel").as("entity"),
-        col("drop_reason").cast("string").as("instance"),
-        explode(
-          array(
-            struct(lit("n_docs").as("name"), col("n_docs").cast("double").as("value")),
-            struct(
-              lit("share").as("name"),
-              (col("n_docs").cast("double") / col("_tot").cast("double")).as("value")
-            )
-          )
-        ).as("_m")
-      )
-      .select(
-        col("ts"), col("batch"), col("entity"), col("instance"),
-        col("_m.name").as("name"), col("_m.value").as("value")
-      )
-    val bad = rows.where(col("ts").isNull).select("batch").distinct().limit(5)
+    // try_to_timestamp, not to_timestamp: under ANSI an unparseable
+    // id would throw a bare SparkDateTimeException from inside the
+    // scan — the NULL check below turns it into a named-batch error
+    val ts = try_to_timestamp(col("batch"))
+    val bad = stats.where(ts.isNull).select("batch").distinct().limit(5)
       .collect().map(_.getString(0))
     require(
       bad.isEmpty,
       s"batch ids must be to_timestamp-parseable to profile as a series; got: ${bad.mkString(", ")}"
     )
-    val out = rows.drop("batch")
-    if (repo.getDataset(datasetUri).isEmpty) {
-      repo.registerDataset(
-        graft.core.DatasetMeta(
-          uri = datasetUri,
-          tsColumn = "ts",
-          columns = Seq("drop_reason"),
-          granularity = graft.core.Granularity.Day,
-          metrics = Seq(
-            graft.core.Metric("funnel", "*", "n_docs"),
-            graft.core.Metric("funnel", "*", "share")
-          )
-        )
-      )
-    }
-    repo.addProfiling(datasetUri, out)
-    out
+    Service.storeSeries(
+      repo,
+      Service.funnelMeta(datasetUri, "drop_reason"),
+      Service.funnelMetrics(stats, ts, col("drop_reason"), col("n_docs"))
+    )
   }
 
   /** Per-batch funnel loss report over every committed batch — the

@@ -126,25 +126,25 @@ object ProfilingBuilder {
   */
 object Profiler {
 
-  /** Unpivot the wide one-row-per-ts aggregate into long format with a
-    * generated array-of-structs: stays a narrow (no-shuffle) projection
-    * on top of the single aggregation. Shared by the batch and
-    * streaming profilers so their output shapes cannot drift.
+  /** Unpivot a wide frame into the long metric format
+    * `(ts, entity, instance, name, value)`: each `metrics` entry is one
+    * (entity, instance, name, value) column set, evaluated per input
+    * row and exploded from a generated array-of-structs — a narrow
+    * (no-shuffle) projection on top of whatever built `wide`. Every
+    * long-format series graft derives (batch and streaming profiles,
+    * funnel, event-funnel and trend series) is built here, so their
+    * output shapes cannot drift.
     */
   private[graft] def unpivotMetrics(
       wide: DataFrame,
-      metricExprs: Seq[(Metric, Column)]
+      ts: Column,
+      metrics: Seq[(Column, Column, Column, Column)]
   ): DataFrame = {
-    val entries = metricExprs.zipWithIndex.map { case ((m, _), i) =>
-      struct(
-        lit(m.entity).as("entity"),
-        lit(m.instance).as("instance"),
-        lit(m.name).as("name"),
-        col(s"_m$i").as("value")
-      )
+    val entries = metrics.map { case (entity, instance, name, value) =>
+      struct(entity.as("entity"), instance.as("instance"), name.as("name"), value.as("value"))
     }
     wide
-      .select(col("ts"), explode(array(entries: _*)).as("pv"))
+      .select(ts.as("ts"), explode(array(entries: _*)).as("pv"))
       .select(
         col("ts"),
         col("pv.entity").as("entity"),
@@ -153,6 +153,16 @@ object Profiler {
         col("pv.value").as("value")
       )
   }
+
+  /** [[unpivotMetrics]] entries of a profiler aggregate whose i-th
+    * metric of `metricExprs` sits in column `_m<i>`.
+    */
+  private[graft] def analyzerMetrics(
+      metricExprs: Seq[(Metric, Column)]
+  ): Seq[(Column, Column, Column, Column)] =
+    metricExprs.zipWithIndex.map { case ((m, _), i) =>
+      (lit(m.entity), lit(m.instance), lit(m.name), col(s"_m$i"))
+    }
 
   /** Day/hour/week/month truncation into the internal `_gts` column
     * (original event-time column dropped). `_gts` stays internal
@@ -194,7 +204,7 @@ object Profiler {
       .groupBy(col("_gts"))
       .agg(aliased.head, aliased.tail: _*)
       .withColumnRenamed("_gts", "ts")
-    unpivotMetrics(wide, metricExprs)
+    unpivotMetrics(wide, col("ts"), analyzerMetrics(metricExprs))
   }
 
   /** Distinctness + Uniqueness ratios per ts partition (Deequ-style;

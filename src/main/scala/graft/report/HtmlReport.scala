@@ -1,6 +1,8 @@
 package graft.report
 
+import graft.quality.Quality
 import graft.repository.MetricsRepository
+import graft.service.Service
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,24 +75,39 @@ object HtmlReport {
     * Runs as a window + a broadcast semi-join on the limited key set.
     */
   private def cappedSeries(df: DataFrame, maxPointsPerSeries: Int, maxSeries: Int): Array[Row] = {
-    val perSeries = Window
-      .partitionBy("entity", "instance", "name")
-      .orderBy(col("ts").desc)
     val keys = df
       .select("entity", "instance", "name")
       .distinct()
       .orderBy("entity", "instance", "name")
       .limit(maxSeries)
-    df.withColumn("_rn", row_number().over(perSeries))
+    df.withColumn("_rn", row_number().over(newestPerSeries))
       .where(col("_rn") <= maxPointsPerSeries)
       .drop("_rn")
       .join(broadcast(keys), Seq("entity", "instance", "name"), "left_semi")
       .collect()
   }
 
-  /** Per-series thresholds from stored optimization rows.
-    * Failed-optimization rows carry NULL thresholds — they must not
-    * unbox to 0.0 (which would flag every positive score anomalous).
+  /** Each metric series' rows, newest first. */
+  private def newestPerSeries =
+    Window.partitionBy(Service.seriesCols.map(col): _*).orderBy(col("ts").desc)
+
+  /** The newest row of each metric series in `df`. */
+  private def newest(df: DataFrame): DataFrame =
+    df.withColumn("_rn", row_number().over(newestPerSeries)).where(col("_rn") === 1)
+
+  /** The series `assessQuality`'s rule ([[Quality.verdicts]]) flags on
+    * their NEWEST stored score: breached, NULL-scored and
+    * NULL-threshold series, and failed-optimization series with no
+    * score.
+    */
+  private def anomalousSeries(repo: MetricsRepository, uri: String): DataFrame =
+    Quality
+      .verdicts(repo.getOptimization(uri), newest(repo.getScoring(uri)), Service.seriesCols)
+      .where(col("is_anomalous"))
+
+  /** Per-series thresholds from stored optimization rows, for the
+    * charts' threshold rules. Failed-optimization rows carry NULL
+    * thresholds — they must not unbox to 0.0 (a rule drawn at zero).
     */
   private def thresholdMap(optimization: Seq[Row]): Map[(String, String, String), Double] =
     optimization.flatMap { r =>
@@ -120,10 +137,10 @@ object HtmlReport {
     val stored = repo.getProfiling(datasetUri).where(col("value").isNotNull)
     // ALL derived suffixes split off — a `_trend_thinned` flag series
     // must not chart as a base metric any more than the z series does
-    val isDerived = graft.service.Service.derivedSuffixes
+    val isDerived = Service.derivedSuffixes
       .map(s => col("name").endsWith(s))
       .reduce(_ || _)
-    val isTrend = col("name").endsWith(graft.service.Service.trendSuffix)
+    val isTrend = col("name").endsWith(Service.trendSuffix)
     val baseSeries = cappedSeries(
       stored.where(!isDerived),
       maxPointsPerSeries,
@@ -144,7 +161,7 @@ object HtmlReport {
     val trendRows = cappedSeries(stored.where(isTrend), 1, maxSeries)
     val thinnedRows = cappedSeries(
       stored.where(
-        col("name").endsWith(graft.service.Service.trendThinnedSuffix)
+        col("name").endsWith(Service.trendThinnedSuffix)
       ),
       1,
       maxSeries
@@ -164,6 +181,11 @@ object HtmlReport {
     val scoring = cappedSeries(repo.getScoring(datasetUri), maxPointsPerSeries, maxSeries).toSeq
 
     val thresholds = thresholdMap(optimization)
+    val flagged = anomalousSeries(repo, datasetUri)
+      .select(Service.seriesCols.map(col): _*)
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      .toSet
 
     val metaHtml = meta
       .map(m => s"""<ul>
@@ -182,7 +204,7 @@ object HtmlReport {
         r.getAs[String]("entity"),
         r.getAs[String]("instance"),
         r.getAs[String]("name")
-          .stripSuffix(graft.service.Service.trendSuffix)
+          .stripSuffix(Service.trendSuffix)
       ) -> r.getAs[Double]("value")
     }.toMap
     // which verdicts were computed on a thinned (approximated) history
@@ -192,7 +214,7 @@ object HtmlReport {
           r.getAs[String]("entity"),
           r.getAs[String]("instance"),
           r.getAs[String]("name")
-            .stripSuffix(graft.service.Service.trendThinnedSuffix)
+            .stripSuffix(Service.trendThinnedSuffix)
         )
     }.toSet
     def thinnedMark(key: (String, String, String)): String =
@@ -285,8 +307,7 @@ object HtmlReport {
 
     val scoringBySeries = scoring
       .map { r =>
-        // an unscorable (NULL) score renders as NaN — the anomaly flag
-        // treats NaN as alert-worthy, matching Service.assessQuality
+        // an unscorable (NULL) score renders as NaN
         val si = r.fieldIndex("score")
         (
           (r.getAs[String]("entity"), r.getAs[String]("instance"), r.getAs[String]("name")),
@@ -312,9 +333,8 @@ object HtmlReport {
               .map { case (key @ (entity, instance, name), pts) =>
                 val t = thresholds.get(key)
                 val (lastTs, lastScore) = pts.last
-                val anomalous = t.exists(th => lastScore.isNaN || lastScore > th)
                 val flag =
-                  if (anomalous)
+                  if (flagged(key))
                     s"""<p class="alert">🔴 anomaly at $lastTs (score=$lastScore)</p>"""
                   else s"""<p class="ok">🟢 $lastTs within expectations (score=$lastScore)</p>"""
                 s"""<div class="metric"><h4>${esc(entity)} / ${esc(instance)} / ${esc(name)}
@@ -431,13 +451,15 @@ object HtmlReport {
     * `home_page`: dataset browser with per-dataset health at a
     * glance). One row per dataset: granularity, registered metric
     * count, scored series count, newest scored timestamp, and a
-    * health badge (any series whose NEWEST score breaches its stored
-    * threshold — or is NULL/unscorable — flags the dataset), linking
-    * to the per-dataset report file.
+    * health badge, linking to the per-dataset report file. The badge
+    * applies `assessQuality`'s rule ([[Quality.verdicts]]) to each
+    * series' NEWEST score: a breached, NULL-scored or NULL-threshold
+    * series flags the dataset, and so does a failed-optimization
+    * series with no score.
     *
     * Work per dataset is the same driver-side aggregate reads `render`
-    * does (small by contract); only the newest score per series is
-    * collected, via the same window-cap pattern as the charts.
+    * does (small by contract): only the newest score per series is
+    * collected, and the flagged series are counted.
     */
   def renderIndex(
       repo: MetricsRepository,
@@ -445,22 +467,8 @@ object HtmlReport {
   ): String = {
     val datasets = repo.listDatasets().sortBy(_.uri)
     val rows = datasets.map { m =>
-      val thresholds = thresholdMap(repo.getOptimization(m.uri).collect().toSeq)
-      val newestPerSeries = Window
-        .partitionBy("entity", "instance", "name")
-        .orderBy(col("ts").desc)
-      val latest = repo
-        .getScoring(m.uri)
-        .withColumn("_rn", row_number().over(newestPerSeries))
-        .where(col("_rn") === 1)
-        .collect()
-      val anomalous = latest.count { r =>
-        val key =
-          (r.getAs[String]("entity"), r.getAs[String]("instance"), r.getAs[String]("name"))
-        val si = r.fieldIndex("score")
-        val score = if (r.isNullAt(si)) Double.NaN else r.getDouble(si)
-        thresholds.get(key).exists(th => score.isNaN || score > th)
-      }
+      val latest = newest(repo.getScoring(m.uri)).collect()
+      val anomalous = anomalousSeries(repo, m.uri).count()
       val lastTs =
         latest.map(_.getAs[java.sql.Timestamp]("ts")).sortBy(tsKey).lastOption
       val badge =
@@ -469,14 +477,11 @@ object HtmlReport {
         else """<span class="ok">🟢 healthy</span>"""
       // Trend column: newest stored `_trend_z` per series (same
       // window-cap read as scoring), significant = |z| > 1.96
-      val latestTrend = repo
-        .getProfiling(m.uri)
-        .where(
-          col("name").endsWith(graft.service.Service.trendSuffix) &&
-            col("value").isNotNull)
-        .withColumn("_rn", row_number().over(newestPerSeries))
-        .where(col("_rn") === 1)
-        .collect()
+      val latestTrend = newest(
+        repo
+          .getProfiling(m.uri)
+          .where(col("name").endsWith(Service.trendSuffix) && col("value").isNotNull)
+      ).collect()
       val trending = latestTrend.count(r => math.abs(r.getAs[Double]("value")) > 1.96)
       val trendCell =
         if (latestTrend.isEmpty) """<span class="na">—</span>"""

@@ -135,21 +135,30 @@ object Service {
       s"metric names ${reserved.mkString(", ")} end with a reserved derived-series suffix " +
         s"(${derivedSuffixes.mkString(", ")}); rename the metric"
     )
-    val profiling = Profiler.profile(df, tsColumn, builder, granularity)
-    if (repo.getDataset(datasetUri).isEmpty) {
-      val metrics = metricNames
-      repo.registerDataset(
-        DatasetMeta(
-          uri = datasetUri,
-          tsColumn = tsColumn,
-          columns = df.columns.filterNot(_ == tsColumn).toSeq,
-          granularity = granularity,
-          metrics = metrics
-        )
-      )
-    }
-    repo.addProfiling(datasetUri, profiling)
-    profiling
+    storeSeries(
+      repo,
+      DatasetMeta(
+        uri = datasetUri,
+        tsColumn = tsColumn,
+        columns = df.columns.filterNot(_ == tsColumn).toSeq,
+        granularity = granularity,
+        metrics = metricNames
+      ),
+      Profiler.profile(df, tsColumn, builder, granularity)
+    )
+  }
+
+  /** Register `meta` on first sight of its dataset, then upsert `rows`
+    * (long-format metrics) into its profiling history; returns `rows`.
+    */
+  private[graft] def storeSeries(
+      repo: MetricsRepository,
+      meta: DatasetMeta,
+      rows: DataFrame
+  ): DataFrame = {
+    if (repo.getDataset(meta.uri).isEmpty) repo.registerDataset(meta)
+    repo.addProfiling(meta.uri, rows)
+    rows
   }
 
   /** Optimize anomaly models for every metric series of a dataset from
@@ -252,47 +261,48 @@ object Service {
       repo: MetricsRepository,
       reasonCol: String = "drop_reason"
   ): DataFrame = {
-    val stats = funnel.groupBy(col(reasonCol)).agg(count(lit(1)).as("_n"))
-    val tot = stats.agg(sum("_n").as("_tot"))
-    val rows = stats
-      .crossJoin(broadcast(tot))
-      .select(
-        lit(ts).as("ts"),
-        lit("funnel").as("entity"),
-        col(reasonCol).cast("string").as("instance"),
-        explode(
-          array(
-            struct(lit("n_docs").as("name"), col("_n").cast("double").as("value")),
-            struct(
-              lit("share").as("name"),
-              (col("_n").cast("double") / col("_tot").cast("double")).as("value")
-            )
-          )
-        ).as("_m")
-      )
-      .select(
-        col("ts"),
-        col("entity"),
-        col("instance"),
-        col("_m.name").as("name"),
-        col("_m.value").as("value")
-      )
-    if (repo.getDataset(datasetUri).isEmpty) {
-      repo.registerDataset(
-        DatasetMeta(
-          uri = datasetUri,
-          tsColumn = "ts",
-          columns = Seq(reasonCol),
-          granularity = Granularity.Day,
-          // instances are the data-dependent drop reasons — "*" marks
-          // the per-reason fan-out in the registered metadata
-          metrics = Seq(Metric("funnel", "*", "n_docs"), Metric("funnel", "*", "share"))
-        )
-      )
-    }
-    repo.addProfiling(datasetUri, rows)
-    rows
+    val counts = funnel.groupBy(col(reasonCol)).agg(count(lit(1)).as("_n"))
+    storeSeries(
+      repo,
+      funnelMeta(datasetUri, reasonCol),
+      funnelMetrics(counts, lit(ts), col(reasonCol), col("_n"))
+    )
   }
+
+  /** The funnel series of per-(ts, drop reason) document counts `n`:
+    * `n_docs` and `share` (of all documents at the ts) under entity
+    * "funnel", instance = reason. Shared by [[profileFunnel]] and
+    * [[graft.pipelines.Incremental.profileBatches]].
+    */
+  private[graft] def funnelMetrics(
+      counts: DataFrame,
+      ts: Column,
+      reason: Column,
+      n: Column
+  ): DataFrame = {
+    val share = n.cast("double") / sum(n).over(Window.partitionBy(ts)).cast("double")
+    val instance = reason.cast("string")
+    Profiler.unpivotMetrics(
+      counts.withColumn("_share", share),
+      ts,
+      Seq(
+        (lit("funnel"), instance, lit("n_docs"), n.cast("double")),
+        (lit("funnel"), instance, lit("share"), col("_share"))
+      )
+    )
+  }
+
+  /** Registration of a [[funnelMetrics]] dataset. */
+  private[graft] def funnelMeta(datasetUri: String, reasonCol: String): DatasetMeta =
+    DatasetMeta(
+      uri = datasetUri,
+      tsColumn = "ts",
+      columns = Seq(reasonCol),
+      granularity = Granularity.Day,
+      // instances are the data-dependent drop reasons — "*" marks
+      // the per-reason fan-out in the registered metadata
+      metrics = Seq(Metric("funnel", "*", "n_docs"), Metric("funnel", "*", "share"))
+    )
 
   /** Register an event stream's DAILY funnel conversion as metric
     * series — the product-analytics twin of [[profileFunnel]]: each
@@ -319,62 +329,49 @@ object Service {
       .partitionBy(col("day"))
       .orderBy(col("step_idx"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val rows = daily
-      // the metric NAME is the stored contract — share_of_entry must be
-      // users / ENTRY-step users, not the lag-1 step-over-previous
-      // conversion it briefly was (250/500 read as "25% of entrants"
-      // when it meant "50% of the previous step")
-      .withColumn("_entry_users", first(col("users")).over(byDay))
-      .select(
-        col("day").as("ts"),
-        lit("event_funnel").as("entity"),
-        col("step").as("instance"),
-        explode(
-          array(
-            struct(
-              lit("users").as("name"),
-              col("users").cast("double").as("value")
-            ),
-            struct(
-              lit("share_of_entry").as("name"),
-              when(col("_entry_users") === 0, lit(0.0))
-                .otherwise(col("users").cast("double") / col("_entry_users"))
-                .as("value")
-            )
-          )
-        ).as("_m")
+    // the metric NAME is the stored contract — share_of_entry must be
+    // users / ENTRY-step users, not the lag-1 step-over-previous
+    // conversion it briefly was (250/500 read as "25% of entrants"
+    // when it meant "50% of the previous step")
+    val users = col("users").cast("double")
+    def step(name: String, value: Column) = (lit("event_funnel"), col("step"), lit(name), value)
+    val rows = Profiler.unpivotMetrics(
+      daily.withColumn("_entry_users", first(col("users")).over(byDay)),
+      col("day"),
+      Seq(
+        step("users", users),
+        step("share_of_entry", when(col("_entry_users") === 0, lit(0.0))
+          .otherwise(users / col("_entry_users")))
       )
-      .select(
-        col("ts"),
-        col("entity"),
-        col("instance"),
-        col("_m.name").as("name"),
-        col("_m.value").as("value")
-      )
-    if (repo.getDataset(datasetUri).isEmpty) {
-      repo.registerDataset(
-        DatasetMeta(
-          uri = datasetUri,
-          tsColumn = tsCol,
-          columns = Seq(typeCol),
-          granularity = Granularity.Day,
-          metrics = Seq(
-            Metric("event_funnel", "*", "users"),
-            Metric("event_funnel", "*", "share_of_entry")
-          )
+    )
+    storeSeries(
+      repo,
+      DatasetMeta(
+        uri = datasetUri,
+        tsColumn = tsCol,
+        columns = Seq(typeCol),
+        granularity = Granularity.Day,
+        metrics = Seq(
+          Metric("event_funnel", "*", "users"),
+          Metric("event_funnel", "*", "share_of_entry")
         )
-      )
-    }
-    repo.addProfiling(datasetUri, rows)
-    rows
+      ),
+      rows
+    )
   }
 
   /** Compare one timestamp's stored scores against optimized thresholds
     * and notify on exceedance (reference `assess_quality`,
     * service_layer.py:345-409 — which likewise assesses a single ts).
     * Defaults to the NEWEST scored ts; without the bound every past
-    * anomaly would re-alert on every call. Only the anomalous subset
-    * (bounded by the metric count of one dataset) is collected.
+    * anomaly would re-alert on every call.
+    *
+    * One query and one driver action: the ts (a scalar subquery over
+    * the scoring table unless given), the per-series verdicts of
+    * [[Quality.verdicts]] at that ts, and the alerts aggregated into one
+    * row, sorted by series key. That row is the only data collected,
+    * bounded as before by the alerts of one dataset's series. With no
+    * scoring stored yet the assessment is healthy at the epoch.
     */
   def assessQuality(
       datasetUri: String,
@@ -382,51 +379,19 @@ object Service {
       handlers: Seq[NotificationHandler] = Seq(LogHandler),
       ts: Option[java.sql.Timestamp] = None
   ): Assessment = {
-    val scoringAll = repo.getScoring(datasetUri)
-    val targetTs = ts.orElse(
-      scoringAll.agg(max(col("ts"))).collect().headOption.flatMap(r => Option(r.getTimestamp(0)))
-    )
-    targetTs match {
+    val scoring = repo.getScoring(datasetUri)
+    val t = ts.map(lit).getOrElse(scoring.agg(max(col("ts"))).scalar())
+    val alert = struct((seriesCols ++ Seq("score", "threshold")).map(col): _*)
+    val row = Quality
+      .verdicts(repo.getOptimization(datasetUri), scoring.where(col("ts") === t), seriesCols)
+      .agg(sort_array(collect_list(when(col("is_anomalous"), alert))).as("alerts"))
+      .select(t.as("ts"), col("alerts"))
+      .collect()
+      .head
+    Option(row.getTimestamp(0)) match {
       case None => Assessment(datasetUri, new java.sql.Timestamp(0L), Seq.empty)
-      case Some(t) =>
-        val scoring = scoringAll.where(col("ts") === lit(t))
-        val optimization = repo.getOptimization(datasetUri)
-        val assessed = Quality.assess(scoring, optimization, seriesCols)
-        // Series whose optimization failed (null best_model) produce NO
-        // scoring rows at all — Scorer's join on best_model drops them —
-        // so an inner-join assessment would report the dataset healthy
-        // while those metrics go unmonitored. The reference raises
-        // OptimizationFailedError on this condition; here each FAILED
-        // series with no score at the assessed ts alerts with a NaN
-        // score instead of vanishing. Healthy series are deliberately
-        // excluded: Scorer only scores the newest point per series, so
-        // an anti-join over ALL optimized series would NaN-alert every
-        // healthy series whenever a past ts is assessed.
-        val unmonitored = optimization
-          .where(col("optimization_failed") || col("best_model").isNull)
-          .join(scoring.select(seriesCols.map(col): _*), seriesCols, "left_anti")
-          .select(
-            (seriesCols.map(col) ++ Seq(
-              lit(Double.NaN).as("score"),
-              coalesce(col("threshold"), lit(Double.NaN)).as("threshold")
-            )): _*
-          )
-        val rows = assessed
-          .where(col("is_anomalous"))
-          .select(
-            (seriesCols.map(col) ++ Seq(
-              // unscorable (NULL) points alert with a NaN score; the
-              // threshold coalesces too — a series scored under an
-              // earlier optimization whose RE-optimize later failed
-              // stores threshold NULL, and getDouble on it would NPE
-              // the whole assessment instead of alerting
-              coalesce(col("score"), lit(Double.NaN)).as("score"),
-              coalesce(col("threshold"), lit(Double.NaN)).as("threshold")
-            )): _*
-          )
-          .unionByName(unmonitored)
-          .collect()
-        val anomalous = rows.toSeq.map { r =>
+      case Some(at) =>
+        val anomalous = row.getSeq[Row](1).toSeq.map { r =>
           AnomalousScore(
             entity = r.getString(0),
             instance = r.getString(1),
@@ -435,9 +400,8 @@ object Service {
             threshold = r.getDouble(4)
           )
         }
-        val assessment = Assessment(datasetUri, t, anomalous)
-        if (anomalous.nonEmpty) handlers.foreach(_.notify(datasetUri, t, anomalous))
-        assessment
+        if (anomalous.nonEmpty) handlers.foreach(_.notify(datasetUri, at, anomalous))
+        Assessment(datasetUri, at, anomalous)
     }
   }
 
@@ -579,26 +543,16 @@ object Service {
     // stored metrics as a distributed transform — two rows per series
     // (`<name>_trend_z` + the 0/1 thinned-provenance companion), never
     // collected
-    val stored = verdicts
-      .select(
-        col("_ts").as("ts"),
-        col("entity"),
-        col("instance"),
-        explode(
-          array(
-            struct(
-              concat(col("name"), lit(trendSuffix)).as("name"),
-              col("z").cast("double").as("value")
-            ),
-            struct(
-              concat(col("name"), lit(trendThinnedSuffix)).as("name"),
-              when(col("thinned"), 1.0).otherwise(0.0).as("value")
-            )
-          )
-        ).as("_m")
+    def derived(suffix: String, value: Column) =
+      (col("entity"), col("instance"), concat(col("name"), lit(suffix)), value)
+    val stored = Profiler.unpivotMetrics(
+      verdicts,
+      col("_ts"),
+      Seq(
+        derived(trendSuffix, col("z").cast("double")),
+        derived(trendThinnedSuffix, when(col("thinned"), 1.0).otherwise(0.0))
       )
-      .select(col("ts"), col("entity"), col("instance"),
-        col("_m.name").as("name"), col("_m.value").as("value"))
+    )
     repo.addProfiling(datasetUri, stored)
     // alert subset only: significant series, most-significant first
     dispatchAlerts(
@@ -663,13 +617,7 @@ object Service {
     val spark = reference.sparkSession
     val metrics = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("entity", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("instance", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("name", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType)
-      ))
+      MetricsRepository.profilingSchema
     )
     repo.addProfiling(datasetUri, metrics)
     val alerts = rows.flatMap { r =>

@@ -63,6 +63,6 @@ object StreamingProfiler {
       .agg(aliased.head, aliased.tail: _*)
       .withColumn("ts", col("window.start"))
       .drop("window")
-    Profiler.unpivotMetrics(wide, metricExprs)
+    Profiler.unpivotMetrics(wide, col("ts"), Profiler.analyzerMetrics(metricExprs))
   }
 }

@@ -94,9 +94,9 @@ object StreamingScorer {
 
   /** Streaming quality assessment: scored stream joined against the
     * (static, broadcast) optimization thresholds — the streaming
-    * completion of Quality.assess, with the same NULL-score-alerts
-    * semantics. Stream-static joins need no state; the alert stream is
-    * `where(is_anomalous)` ready for any sink.
+    * completion of Quality.assess, through the same
+    * [[graft.quality.Quality.exceeds]] rule. Stream-static joins need no
+    * state; the alert stream is `where(is_anomalous)` ready for any sink.
     */
   def assessDF(
       scored: DataFrame,
@@ -109,8 +109,5 @@ object StreamingScorer {
           .broadcast(optimization.select(col(seriesCol), col("threshold"))),
         seriesCol
       )
-      .withColumn(
-        "is_anomalous",
-        coalesce(col("score") > col("threshold"), lit(true))
-      )
+      .withColumn("is_anomalous", graft.quality.Quality.exceeds(col("score"), col("threshold")))
 }

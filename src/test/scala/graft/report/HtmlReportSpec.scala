@@ -216,6 +216,41 @@ class HtmlReportSpec extends SparkSpec {
     }
   }
 
+  test("index health follows assessQuality: a NULL threshold or an unscored failed series alerts") {
+    import spark.implicits._
+    val repo = new InMemoryRepository()
+    val t = java.sql.Timestamp.valueOf("2025-01-02 00:00:00")
+    def optimization(rows: (String, Option[String], Option[Double], Boolean)*) =
+      rows
+        .map { case (i, m, th, failed) => ("Column", i, "Mean", m, th, th, failed) }
+        .toDF("entity", "instance", "name", "best_model", "threshold", "mean_error",
+          "optimization_failed")
+    def scores(instances: String*) =
+      instances
+        .map(i => (t, "Column", i, "Mean", 1.0, 1.0, 0.01))
+        .toDF("ts", "entity", "instance", "name", "value", "predicted", "score")
+    val uris = Seq("ds://idx/failed-unscored", "ds://idx/null-threshold", "ds://idx/ok")
+    uris.foreach(u => repo.registerDataset(graft.core.DatasetMeta(u, "ts", Seq("a"), "DAY", Nil)))
+    val ok = Some("TrailingMean-3")
+    // a healthy scored series next to a failed one that has no score
+    repo.addOptimization(
+      uris(0), optimization(("a", ok, Some(0.2), false), ("b", None, None, true)))
+    repo.addScoring(uris(0), scores("a"))
+    // a scored series whose stored optimization failed later
+    repo.addOptimization(uris(1), optimization(("a", None, None, true)))
+    repo.addScoring(uris(1), scores("a"))
+    repo.addOptimization(uris(2), optimization(("a", ok, Some(0.2), false)))
+    repo.addScoring(uris(2), scores("a"))
+    val html = HtmlReport.renderIndex(repo)
+    val badges = "🔴 1 anomalous|🟢 healthy".r.findAllIn(html).toSeq
+    assert(badges == Seq("🔴 1 anomalous", "🔴 1 anomalous", "🟢 healthy"))
+    // the same verdicts as the assessment and the dataset report's charts
+    assert(uris.map(u => Service.assessQuality(u, repo, handlers = Nil).isHealthy) ==
+      Seq(false, false, true))
+    assert(HtmlReport.render(repo, uris(1)).contains("anomaly at"))
+    assert(HtmlReport.render(repo, uris(2)).contains("within expectations"))
+  }
+
   test("per-instance anchors: one section per column, nav + index deep links") {
     import spark.implicits._
     val repo = new InMemoryRepository()

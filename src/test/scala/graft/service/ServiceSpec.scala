@@ -48,6 +48,65 @@ class ServiceSpec extends SparkSpec {
       val assessment = Service.assessQuality("ds://clean", repo, handlers = Nil)
       assert(assessment.isHealthy)
     }
+
+    test(s"[$repoName] assessQuality runs one action") {
+      val repo = mkRepo()
+      val uri = "ds://one-action"
+      Service.profileCreateOptimize(batches(40), uri, "ts", repo, ProfilingBuilder.simple)
+      val withSpike = batches(41, anomalies = Map(40 -> 3.0))
+      Service.profileCreate(withSpike, uri, "ts", repo, ProfilingBuilder.simple)
+      Service.score(uri, repo)
+      val jobs = new graft.tools.Harness.JobCounter(spark.sparkContext)
+      val assessment =
+        try Service.assessQuality(uri, repo, handlers = Nil)
+        finally jobs.close()
+      assert(assessment.anomalous.exists(a => a.instance == "value" && a.name == "Mean"))
+      // the newest ts resolves inside the query (a scalar subquery):
+      // one collect, whose adaptive stages run as their own jobs
+      assert(jobs.count() <= 8, s"${jobs.count()} jobs for one assessQuality call")
+    }
+
+    test(s"[$repoName] assessQuality edge cases: epoch when unscored, NaN alerts, key order") {
+      val repo = mkRepo()
+      val t = java.sql.Timestamp.valueOf("2025-01-02 00:00:00")
+      def optimization(rows: (String, Option[String], Option[Double], Boolean)*) =
+        rows
+          .map { case (i, m, th, failed) => ("Column", i, "Mean", m, th, th.map(_ / 10), failed) }
+          .toDF("entity", "instance", "name", "best_model", "threshold", "mean_error",
+            "optimization_failed")
+      // failed optimizations and no scoring stored yet: nothing to assess
+      repo.addOptimization("ds://unscored", optimization(("broken", None, None, true)))
+      val unscored = Service.assessQuality("ds://unscored", repo, handlers = Nil)
+      assert(unscored.isHealthy && unscored.ts == new java.sql.Timestamp(0L))
+      val ok = Some("TrailingMean-3")
+      repo.addOptimization(
+        "ds://edge",
+        optimization(
+          ("z", ok, Some(0.2), false), // breaches
+          ("c", ok, Some(0.2), false), // within threshold
+          ("b", None, None, true), // scored earlier, re-optimize failed: NULL threshold
+          ("f", None, None, true), // failed, never scored
+          ("a", ok, Some(0.2), false) // breaches
+        )
+      )
+      repo.addScoring(
+        "ds://edge",
+        Seq[(String, Option[Double])](
+          "z" -> Some(0.9), "c" -> Some(0.01), "b" -> None, "a" -> Some(0.5),
+          "orphan" -> Some(0.99) // no optimization row: not assessed
+        ).map { case (i, sc) => (t, "Column", i, "Mean", 1.0, 1.0, sc) }
+          .toDF("ts", "entity", "instance", "name", "value", "predicted", "score")
+      )
+      val edge = Service.assessQuality("ds://edge", repo, handlers = Nil)
+      assert(edge.ts == t)
+      assert(edge.anomalous.map(_.instance) == Seq("a", "b", "f", "z"), "series-key order")
+      val byInstance = edge.anomalous.map(a => a.instance -> a).toMap
+      assert(byInstance("a").score == 0.5 && byInstance("a").threshold == 0.2)
+      assert(byInstance("z").score == 0.9)
+      Seq("b", "f").foreach { i =>
+        assert(byInstance(i).score.isNaN && byInstance(i).threshold.isNaN, i)
+      }
+    }
   }
 
   test("profileEventFunnel stores daily conversion series the monitoring flow can score") {
@@ -299,10 +358,12 @@ class ServiceSpec extends SparkSpec {
       Service.assessNewTs(day, "ds://daily", "ts", repo, ProfilingBuilder.simple, handlers = Nil)
       METRIC_COMPILATION_TIME.getCount - before
     }
-    // the third day compiles only the classes of assessQuality's
-    // `ts === lit(t)` filter (kept: Parquet prunes row groups on it). A
-    // per-write literal, a too-small class cache, or a stage id that
-    // adaptive execution renumbered in a class name compiles more.
+    // assessQuality's default path resolves the newest ts in a scalar
+    // subquery, so no per-day literal reaches generated code (its
+    // `ts === lit(t)` literal exists only on the explicit-ts path); the
+    // third day compiled 3 classes when last measured. A per-write
+    // literal, a too-small class cache, or a stage id that adaptive
+    // execution renumbered in a class name compiles more.
     assert(compiles(2) <= 5, s"classes compiled per day: ${compiles.mkString(", ")}")
   }
 
