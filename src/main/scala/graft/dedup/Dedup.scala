@@ -336,7 +336,7 @@ object Dedup {
     * document with at least one shingle. This is the table an
     * incremental corpus persists per batch (~8 B x numHashes per doc)
     * so later batches can near-dup against it WITHOUT re-reading prior
-    * text — re-band with [[crossMinhashPairsFromSigs]]. Signatures are
+    * text — join with [[crossMinhashPairsBetweenSigs]]. Signatures are
     * deterministic (XXH64 chain), so a stored table and a recomputation
     * of the same text under the same (shingleN, numHashes) are
     * interchangeable.
@@ -439,41 +439,6 @@ object Dedup {
     BucketJoin
       .crossPairs(
         bandedMinhash(left, textCol, idCol, shingleN, numHashes, bands),
-        bandedMinhash(right, textCol, idCol, shingleN, numHashes, bands),
-        Seq("band", "bucket"),
-        "sig",
-        leftBucketCap
-      )
-      .withColumn("jaccard", estJaccard(numHashes))
-      .where(col("jaccard") >= threshold)
-      .select("id_l", "id_r", "jaccard")
-      .distinct()
-
-  /** [[crossMinhashPairs]] where the LEFT side is a PRECOMPUTED
-    * signature table ((id, sig) — [[minhashSignatureTable]] rows, e.g.
-    * read back from parquet). The incremental-corpus shape: today's
-    * batch near-dups against every prior batch by joining ~136 B/doc
-    * of stored signatures instead of re-shingling terabytes of prior
-    * text. `numHashes`/`bands` must match the stored signatures —
-    * callers persisting tables should persist the parameters beside
-    * them (see [[graft.pipelines.Incremental]]).
-    *
-    * Output: id_l (stored side), id_r (new side), jaccard (estimated).
-    */
-  def crossMinhashPairsFromSigs(
-      leftSigs: DataFrame,
-      right: DataFrame,
-      textCol: String,
-      idCol: String,
-      shingleN: Int = 3,
-      numHashes: Int = 16,
-      bands: Int = 4,
-      threshold: Double = 0.5,
-      leftBucketCap: Int = 0
-  ): DataFrame =
-    BucketJoin
-      .crossPairs(
-        bandedFromSigs(leftSigs.select(col("id"), col("sig")), numHashes, bands),
         bandedMinhash(right, textCol, idCol, shingleN, numHashes, bands),
         Seq("band", "bucket"),
         "sig",

@@ -89,7 +89,8 @@ package object functions {
   /** [[round6]]'s exact semantics on a JVM double — Spark's Round on a
     * double is BigDecimal HALF_UP at scale 0 over `v * 1e6`. The ONE
     * definition for every driver-side mirror of the engine-parity
-    * policy (Logit's gradient weights, the MMR kernel's scores); two
+    * policy (Logit's gradient weights, the MMR kernel's scores, the
+    * streaming CUSUM state, PCA's covariance entries); two
     * diverging copies would silently break cross-engine bit-identity.
     */
   def round6Jvm(v: Double): Double =

@@ -3,7 +3,6 @@ package graft.repository
 import graft.core.DatasetMeta
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -349,7 +348,7 @@ class ParquetRepository(spark: SparkSession, basePath: String) extends MetricsRe
     }
     // CRASH ORDER: append the compacted copy FIRST (its part-
     // files get fresh names, so the duplicate rows it briefly
-    // creates resolve by the same batch_seq window every reader
+    // creates resolve by the same latest-batch_seq rule every reader
     // already applies), delete the snapshot LAST — the reverse
     // order had a window where a crash left the partition EMPTY
     // and every read silently returned no rows
@@ -397,9 +396,17 @@ object ParquetRepository {
   private val datasetsSchema: StructType =
     Encoders.product[DatasetMeta].schema.add("batch_seq", LongType, nullable = false)
 
-  /** Latest row per logical key, by `batch_seq`. */
+  /** Latest row per logical key, by `batch_seq`, in stored column
+    * order. The non-key columns travel as ONE struct so each key's row
+    * stays atomic. An aggregate, not a window: a query that only reads
+    * key columns under a duplicate-agnostic aggregate (the newest `ts`)
+    * has the resolution removed by the optimizer instead of shuffling
+    * every stored row through it.
+    */
   private def resolve(df: DataFrame, key: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(key.map(col): _*).orderBy(col("batch_seq").desc)
-    df.withColumn("_rn", row_number().over(w)).where(col("_rn") === 1).drop("_rn")
+    val rest = df.columns.filterNot(key.contains)
+    df.groupBy(key.map(col): _*)
+      .agg(max_by(struct(rest.map(col).toSeq: _*), col("batch_seq")).as("_row"))
+      .select(df.columns.map(c => if (key.contains(c)) col(c) else col(s"_row.$c").as(c)).toSeq: _*)
   }
 }

@@ -290,14 +290,10 @@ object Pca {
     pairs.zipWithIndex.foreach { case ((a, b), k) =>
       val p = r.getDecimal(1 + ds.size + k).doubleValue()
       val i = idx(a); val j = idx(b)
-      // same rounded-covariance convention as covarianceBlock: Spark's
-      // round6 is HALF_UP over v*1e6 (see functions.round6) — math.rint
-      // would HALF_EVEN and diverge from the column path on exact .5
-      // ties, making whiten disagree with a fitCovariance pipeline
-      val c = java.math.BigDecimal
-        .valueOf((p / n - (sums(idx(a)) / n) * (sums(idx(b)) / n)) * 1e6)
-        .setScale(0, java.math.RoundingMode.HALF_UP)
-        .doubleValue() / 1e6
+      // same rounded-covariance convention as covarianceBlock (the
+      // column round6's HALF_UP, not math.rint's HALF_EVEN), so whiten
+      // agrees with a fitCovariance pipeline on exact .5 ties
+      val c = graft.functions.round6Jvm(p / n - (sums(idx(a)) / n) * (sums(idx(b)) / n))
       m(i)(j) = c; m(j)(i) = c
     }
     (m, mu)

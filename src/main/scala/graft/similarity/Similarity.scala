@@ -41,6 +41,56 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  /** The one pair score of every cosine path here: precomputed per-row
+    * norms, rounded at 6 dp so rankings and thresholds reproduce across
+    * engines (the oracle computes the same `dot / (na * nb)`).
+    */
+  private def pairCosine(a: Column, b: Column, na: Column, nb: Column): Column =
+    round6(dot(a, b) / (na * nb))
+
+  /** One side of a pair path: `(id, vector, norm)` rows, zero-norm rows
+    * dropped. Norms are materialized per ROW before any join — inside
+    * the pair expression they would be refolded per pair. Zero-norm
+    * vectors (a failed encoder call) have no cosine: the NaN of dot/0
+    * would rank FIRST under a desc ranking (Spark orders NaN above
+    * every number) and pass every `>= threshold`. `vec` keeps the
+    * caller's cast, so [[dot]] sees the caller's input types.
+    */
+  private def scored(
+      df: DataFrame,
+      idCol: String,
+      vec: Column,
+      id: String,
+      v: String,
+      n: String
+  ): DataFrame =
+    df.select(col(idCol).as(id), vec.as(v), filteredNorm(vec).as(n)).where(col(n) > 0d)
+
+  /** Self-match suppression, only correct when queries and corpus share
+    * an id space (self-ANN): an EXTERNAL query set can reuse an id that
+    * belongs to an unrelated corpus row, and dropping that pair would
+    * silently suppress a genuine nearest neighbor.
+    */
+  private def notSelf(exclude: Boolean): Column =
+    if (exclude) col("query_id") =!= col("neighbor_id") else lit(true)
+
+  /** The exact tail of every top-k path: score the candidate pairs
+    * `(query_id, neighbor_id, _qv, _qn, _cv, _cn)` with [[pairCosine]]
+    * and keep the k best per query, ties broken on the neighbor id so
+    * the ordering is reproducible across engines. Output: query_id,
+    * neighbor_id, sim, rank.
+    */
+  private def exactTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window
+      .partitionBy(col("query_id"))
+      .orderBy(col("sim").desc, col("neighbor_id"))
+    pairs
+      .withColumn("sim", pairCosine(col("_qv"), col("_cv"), col("_qn"), col("_cn")))
+      .withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+      .select("query_id", "neighbor_id", "sim", "rank")
+  }
+
   /** Brute-force cosine top-k: every query row against the whole
     * corpus. The query side is broadcast (it is the small side by
     * construction); the corpus is scanned once — at 100 TB this is the
@@ -58,41 +108,9 @@ object Similarity {
       k: Int,
       excludeSelfMatch: Boolean = true
   ): DataFrame = {
-    // Norms are materialized per ROW before the join — computing them
-    // inside the pair expression would redo |corpus| norm folds per
-    // query. Arithmetic shape dot/(na*nb) is unchanged (oracle-bit-
-    // identical); only the evaluation count drops. Zero-norm vectors
-    // (a failed encoder call) are EXCLUDED on both sides — cosine is
-    // undefined there, and the NaN from dot/0 would sort FIRST under
-    // the desc ranking, displacing every real neighbor (same
-    // convention as crossCosineAbove/pqTopK/semanticDedupPairs).
-    val q = queries
-      .select(
-        col(idCol).as("query_id"),
-        col(vecCol).as("_qv"),
-        filteredNorm(col(vecCol)).as("_qn")
-      )
-      .where(col("_qn") > 0d)
-    val c = corpus
-      .select(
-        col(idCol).as("neighbor_id"),
-        col(vecCol).as("_cv"),
-        filteredNorm(col(vecCol)).as("_cn")
-      )
-      .where(col("_cn") > 0d)
-    val w = Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    val cond =
-      if (excludeSelfMatch) col("query_id") =!= col("neighbor_id") else lit(true)
-    c.join(broadcast(q), cond)
-      .withColumn(
-        "sim",
-        round6(dot(col("_qv"), col("_cv")) / (col("_qn") * col("_cn")))
-      )
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
+    val q = scored(queries, idCol, col(vecCol), "query_id", "_qv", "_qn")
+    val c = scored(corpus, idCol, col(vecCol), "neighbor_id", "_cv", "_cn")
+    exactTopK(c.join(broadcast(q), notSelf(excludeSelfMatch)), k)
   }
 
   /** Diversity-aware rerank of ANY candidate set via greedy maximal
@@ -221,27 +239,12 @@ object Similarity {
       excludeSameId: Boolean = false
   ): DataFrame = {
     require(threshold > 0.0, s"threshold must be positive, got $threshold")
-    val b = bench
-      .select(
-        col(idCol).as("id_bench"),
-        col(vecCol).as("_bv"),
-        norm(col(vecCol)).as("_bn")
-      )
-      .where(col("_bn") > 0d)
-    val c = corpus
-      .select(
-        col(idCol).as("id_corpus"),
-        col(vecCol).as("_cv"),
-        norm(col(vecCol)).as("_cn")
-      )
-      .where(col("_cn") > 0d)
+    val b = scored(bench, idCol, col(vecCol), "id_bench", "_bv", "_bn")
+    val c = scored(corpus, idCol, col(vecCol), "id_corpus", "_cv", "_cn")
     val cond =
       if (excludeSameId) col("id_bench") =!= col("id_corpus") else lit(true)
     c.join(broadcast(b), cond)
-      .withColumn(
-        "sim",
-        round6(dot(col("_bv"), col("_cv")) / (col("_bn") * col("_cn")))
-      )
+      .withColumn("sim", pairCosine(col("_bv"), col("_cv"), col("_bn"), col("_cn")))
       .where(col("sim") >= threshold)
       .select("id_bench", "id_corpus", "sim")
   }
@@ -358,16 +361,14 @@ object Similarity {
         struct(lit(t).as("_tbl"), bucketFor(t).as("_bucket"))
       }: _*)
     )
-    val q = queries
-      .select(
-        col(idCol).as("query_id"),
-        vec.as("_qv"),
-        filteredNorm(vec).as("_qn"),
+    val q = scored(queries, idCol, vec, "query_id", "_qv", "_qn")
+      .withColumn(
+        "_e",
         tableEntries { t =>
-          val own = lshBucket(vec, nPlanes, resolvedDim, t * nPlanes)
+          val own = lshBucket(col("_qv"), nPlanes, resolvedDim, t * nPlanes)
           if (!multiProbe) array(own)
           else array(own +: (0 until nPlanes).map(j => own.bitwiseXOR(lit(1L << j))): _*)
-        }.as("_e")
+        }
       )
       .select(
         col("query_id"),
@@ -376,13 +377,8 @@ object Similarity {
         col("_e._tbl").as("_tbl"),
         explode(col("_e._bucket")).as("_bucket")
       )
-    val c = corpus
-      .select(
-        col(idCol).as("neighbor_id"),
-        vec.as("_cv"),
-        filteredNorm(vec).as("_cn"),
-        tableEntries(t => lshBucket(vec, nPlanes, resolvedDim, t * nPlanes)).as("_e")
-      )
+    val c = scored(corpus, idCol, vec, "neighbor_id", "_cv", "_cn")
+      .withColumn("_e", tableEntries(t => lshBucket(col("_cv"), nPlanes, resolvedDim, t * nPlanes)))
       .select(
         col("neighbor_id"),
         col("_cv"),
@@ -390,30 +386,12 @@ object Similarity {
         col("_e._tbl").as("_tbl"),
         col("_e._bucket").as("_bucket")
       )
-    val w = Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    // zero-norm exclusion: same NaN-ranks-first hazard as
-    // bruteForceTopK/rankWithinCells (the filteredNorm barrier in the
-    // projections above keeps these filters from being rewritten
-    // through them and re-evaluating the norm fold per row)
     val joined = c
-      .where(col("_cn") > 0d)
-      .join(broadcast(q.where(col("_qn") > 0d)), Seq("_tbl", "_bucket"))
-      .where(col("query_id") =!= col("neighbor_id"))
+      .join(broadcast(q), Seq("_tbl", "_bucket"))
+      .where(notSelf(true))
     // with one table a pair can meet at most once (one bucket per
     // corpus row, distinct probe values) — skip the dedup exchange
-    val candidates =
-      if (nTables > 1) joined.dropDuplicates("query_id", "neighbor_id")
-      else joined
-    candidates
-      .withColumn(
-        "sim",
-        round6(dot(col("_qv"), col("_cv")) / (col("_qn") * col("_cn")))
-      )
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
+    exactTopK(if (nTables > 1) joined.dropDuplicates("query_id", "neighbor_id") else joined, k)
   }
 
   /** Local Lloyd's iterations over a collected sample — the IVF coarse
@@ -495,84 +473,50 @@ object Similarity {
       excludeSelfMatch: Boolean = true
   ): DataFrame = {
     val cents = fitIvfCentroids(corpus, vecCol, nlist, seed, trainFraction)
-
-    // nearest-`take` centroid ids per vector — a codegen'd Catalyst
-    // expression (graft.functions.hashExpressions.NearestCells) with
-    // the fitted centroids bound as a plan-time constant; the same
-    // kernel serves corpus cell assignment (take=1) and query probing
-    // (take=nprobe). Embarrassingly parallel scans, no shuffle yet;
-    // NULL/empty/ragged vectors map to NULL and drop out of the inner
-    // cell join.
-    def cells(v: Column, take: Int): Column =
-      graft.functions.hashExpressions.nearestCells(v.cast("array<double>"), cents, take)
-    val c = corpus
-      .select(
-        col(idCol).as("neighbor_id"),
-        col(vecCol).as("_cv"),
-        // filteredNorm: rankWithinCells filters `_cn > 0`; a plain norm
-        // would let that filter rewrite through this projection and
-        // re-evaluate the fold (and NearestCells) per corpus row
-        filteredNorm(col(vecCol)).as("_cn"),
-        cells(col(vecCol), 1).as("_cells")
-      )
-      .withColumn("_cell", col("_cells")(0))
-      .drop("_cells")
-    val q = queries
-      .select(
-        col(idCol).as("query_id"),
-        col(vecCol).as("_qv"),
-        filteredNorm(col(vecCol)).as("_qn"),
-        cells(col(vecCol), nprobe).as("_probes")
-      )
-      .select(
-        col("query_id"),
-        col("_qv"),
-        col("_qn"),
-        explode(col("_probes")).as("_cell")
-      )
-    rankWithinCells(c, q, k, excludeSelfMatch)
+    val c = scored(corpus, idCol, col(vecCol), "neighbor_id", "_cv", "_cn")
+      .withColumn("_cell", cellOf(col("_cv"), cents))
+    rankWithinCells(c, probeSide(queries, idCol, col(vecCol), cents, nprobe), k, excludeSelfMatch)
   }
+
+  /** The nearest cell of `vec` — a codegen'd Catalyst expression
+    * ([[graft.functions.hashExpressions.NearestCells]]) with the
+    * centroids bound as a plan-time constant, so cell assignment is an
+    * embarrassingly parallel scan. NULL/empty/ragged vectors map to
+    * NULL and drop out of every inner cell join.
+    */
+  private def cellOf(vec: Column, cents: Array[Array[Double]]): Column =
+    graft.functions.hashExpressions.nearestCells(vec.cast("array<double>"), cents, 1)(0)
+
+  /** The scored query side of an IVF probe, one row per (query, probed
+    * cell): (query_id, _qv, _qn, _cell) for the `nprobe` nearest cells.
+    */
+  private def probeSide(
+      queries: DataFrame,
+      idCol: String,
+      vec: Column,
+      cents: Array[Array[Double]],
+      nprobe: Int
+  ): DataFrame =
+    scored(queries, idCol, vec, "query_id", "_qv", "_qn").withColumn(
+      "_cell",
+      explode(
+        graft.functions.hashExpressions.nearestCells(col("_qv").cast("array<double>"), cents, nprobe)
+      )
+    )
 
   /** The IVF probe tail shared by [[ivfTopK]] and [[ivfQueryIndex]]:
     * broadcast the exploded (query, probe-cell) side against the
     * cell-assigned corpus, exact cosine within the probed cells only,
     * bounded per-query top-k. `c`: (neighbor_id, _cv, _cn, _cell);
-    * `q`: (query_id, _qv, _qn, _cell).
+    * `q`: (query_id, _qv, _qn, _cell); both zero-norm free.
     */
   private def rankWithinCells(
       c: DataFrame,
       q: DataFrame,
       k: Int,
       excludeSelf: Boolean
-  ): DataFrame = {
-    val w = Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    // Zero-norm vectors are excluded on both sides: cosine is
-    // undefined, and the NaN from dot/0 would rank FIRST under desc
-    // (Spark orders NaN above every number), displacing real
-    // neighbors for every query that meets one.
-    // plain .where: when _cn/_qn are computed columns the feeder marks
-    // them with filteredNorm (the pushdown barrier lives at the
-    // projection); when they are STORED index columns the filter
-    // SHOULD push all the way into the parquet scan
-    val joined = c
-      .where(col("_cn") > 0d)
-      .join(broadcast(q.where(col("_qn") > 0d)), Seq("_cell"))
-    // Self-match suppression is only correct when queries and corpus
-    // share an id space (self-ANN). An EXTERNAL query set can reuse an
-    // id that belongs to an unrelated corpus row; dropping that pair
-    // would silently suppress a genuine nearest neighbor.
-    (if (excludeSelf) joined.where(col("query_id") =!= col("neighbor_id"))
-     else joined)
-      .withColumn(
-        "sim",
-        round6(dot(col("_qv"), col("_cv")) / (col("_qn") * col("_cn")))
-      )
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
-  }
+  ): DataFrame =
+    exactTopK(c.join(broadcast(q), Seq("_cell")).where(notSelf(excludeSelf)), k)
 
   /** IVF coarse-quantizer fit: bounded driver math over a capped
     * corpus sample. COUNT-FREE sizing: LocalLimit stops each scan
@@ -594,6 +538,18 @@ object Similarity {
       nlist: Int,
       seed: Long,
       trainFraction: Option[Double]
+  ): Array[Array[Double]] =
+    localKMeans(trainingSample(corpus, vecCol, seed, trainFraction), nlist, iters = 5)
+
+  /** The bounded driver sample of every quantizer fit: at most 8192
+    * clean vectors (non-null, no null slot, the first row's length),
+    * optionally drawn from a `trainFraction` sample.
+    */
+  private def trainingSample(
+      corpus: DataFrame,
+      vecCol: String,
+      seed: Long,
+      trainFraction: Option[Double]
   ): Array[Array[Double]] = {
     trainFraction.foreach(f =>
       require(f > 0.0 && f <= 1.0, s"trainFraction must be in (0, 1], got $f")
@@ -607,10 +563,9 @@ object Similarity {
       .collect()
       .map(_.getSeq[java.lang.Double](0))
       .filter(s => s != null && s.forall(_ ne null))
-    val sample = collected.headOption
+    collected.headOption
       .map(h => collected.filter(_.length == h.length).map(_.map(_.doubleValue()).toArray))
       .getOrElse(Array.empty[Array[Double]])
-    localKMeans(sample, nlist, iters = 5)
   }
 
   /** Persist a fitted IVF index: fit once, probe forever. Layout:
@@ -640,7 +595,20 @@ object Similarity {
       trainFraction: Option[Double] = None
   ): Unit = {
     val cents = fitIvfCentroids(corpus, vecCol, nlist, seed, trainFraction)
-    val spark = corpus.sparkSession
+    writeQuantizer(corpus.sparkSession, cents, path)
+    writeCells(corpus, col(idCol), col(vecCol), cents, s"$path/cells")
+  }
+
+  /** Write a fitted quantizer under `dir`: `centroids/` (cell,
+    * centroid) and the self-describing `meta/` (format version,
+    * effective nlist, dim), which loaders read back for a friendly
+    * integrity check instead of a downstream shape error.
+    */
+  private def writeQuantizer(
+      spark: org.apache.spark.sql.SparkSession,
+      cents: Array[Array[Double]],
+      dir: String
+  ): Unit = {
     import spark.implicits._
     cents.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }
@@ -649,30 +617,40 @@ object Similarity {
       .coalesce(1)
       .write
       .mode("overwrite")
-      .parquet(s"$path/centroids")
-    // self-describing index: (format version, effective nlist, dim) —
-    // read back by loaders for a friendly integrity check instead of
-    // a downstream shape error
+      .parquet(s"$dir/centroids")
     Seq((1, cents.length, cents.head.length))
       .toDF("format_version", "nlist", "dim")
       .coalesce(1)
       .write
       .mode("overwrite")
-      .parquet(s"$path/meta")
-    corpus
+      .parquet(s"$dir/meta")
+  }
+
+  /** Write `rows` as index cell rows (neighbor_id, _cv, _cn, cell),
+    * partitioned by their nearest cell under `cents`. Raw documents
+    * (`n` unset) get their double vector and its norm computed; stored
+    * cell rows pass their `_cn` so norms ride over unchanged.
+    */
+  private def writeCells(
+      rows: DataFrame,
+      id: Column,
+      vec: Column,
+      cents: Array[Array[Double]],
+      dst: String,
+      mode: String = "overwrite",
+      n: Option[Column] = None
+  ): Unit =
+    rows
       .select(
-        col(idCol).as("neighbor_id"),
-        col(vecCol).cast("array<double>").as("_cv"),
-        norm(col(vecCol)).as("_cn"),
-        graft.functions.hashExpressions
-          .nearestCells(col(vecCol).cast("array<double>"), cents, 1)(0)
-          .as("cell")
+        id.as("neighbor_id"),
+        vec.cast("array<double>").as("_cv"),
+        n.getOrElse(norm(vec)).as("_cn"),
+        cellOf(vec, cents).as("cell")
       )
       .write
-      .mode("overwrite")
+      .mode(mode)
       .partitionBy("cell")
-      .parquet(s"$path/cells")
-  }
+      .parquet(dst)
 
   /** Load and validate a persisted index's centroids against its meta
     * file (when present — older indexes without one load unchecked).
@@ -716,21 +694,8 @@ object Similarity {
       vecCol: String,
       path: String
   ): Unit = {
-    val spark = newDocs.sparkSession
-    val cents = loadCentroids(spark, path)
-    newDocs
-      .select(
-        col(idCol).as("neighbor_id"),
-        col(vecCol).cast("array<double>").as("_cv"),
-        norm(col(vecCol)).as("_cn"),
-        graft.functions.hashExpressions
-          .nearestCells(col(vecCol).cast("array<double>"), cents, 1)(0)
-          .as("cell")
-      )
-      .write
-      .mode("append")
-      .partitionBy("cell")
-      .parquet(s"$path/cells")
+    val cents = loadCentroids(newDocs.sparkSession, path)
+    writeCells(newDocs, col(idCol), col(vecCol), cents, s"$path/cells", "append")
   }
 
   /** Per-cell population of a persisted index — the nlist-tuning
@@ -767,16 +732,51 @@ object Similarity {
       .mode("overwrite")
       .partitionBy("cell")
       .parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tmp),
-      spark.sparkContext.hadoopConfiguration
-    )
-    val dst = new org.apache.hadoop.fs.Path(s"$path/cells")
-    fs.delete(dst, true)
-    require(
-      fs.rename(new org.apache.hadoop.fs.Path(tmp), dst),
-      s"compaction rename failed: $tmp -> $dst"
-    )
+    swapIn(indexFs(spark, tmp), Seq(tmp -> s"$path/cells"), "compaction")
+  }
+
+  private def indexFs(
+      spark: org.apache.spark.sql.SparkSession,
+      p: String
+  ): org.apache.hadoop.fs.FileSystem =
+    org.apache.hadoop.fs.FileSystem.get(new java.net.URI(p), spark.sparkContext.hadoopConfiguration)
+
+  /** Move each freshly written `src` dir over its `dst`: delete, then
+    * rename — the one non-atomic moment of an index rewrite, so
+    * rewrites run from the ingest owner. With `drainedOk` a missing
+    * `src` (a cell that lost every row writes no partition) leaves
+    * `dst` deleted, which IS the update; otherwise it fails the rename.
+    */
+  private def swapIn(
+      fs: org.apache.hadoop.fs.FileSystem,
+      moves: Seq[(String, String)],
+      what: String,
+      drainedOk: Boolean = false
+  ): Unit = moves.foreach { case (src, dst) =>
+    val s = new org.apache.hadoop.fs.Path(src)
+    fs.delete(new org.apache.hadoop.fs.Path(dst), true)
+    if (!drainedOk || fs.exists(s))
+      require(fs.rename(s, new org.apache.hadoop.fs.Path(dst)), s"$what rename failed: $src -> $dst")
+  }
+
+  /** The stored cells of an index and a quantizer refit from them. The
+    * training sample must NOT be a prefix read: the cell layout is
+    * clustered BY VECTOR SPACE, so LocalLimit would train on one
+    * cell's region and collapse the quantizer. The fraction sample
+    * (sized ~4x maxTrain from the index's metadata-priced row count)
+    * decorrelates storage order from vector space.
+    */
+  private def refitFromCells(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      nlist: Int,
+      seed: Long
+  ): (DataFrame, Array[Array[Double]]) = {
+    val cells = spark.read.parquet(s"$path/cells")
+    val n = cells.count() // count(*) over parquet: row-group metadata only
+    require(n > 0, s"refusing to refit an empty index at $path")
+    val frac = math.min(1.0, 4.0 * 8192 / n.toDouble)
+    (cells, fitIvfCentroids(cells.select(col("_cv")), "_cv", nlist, seed, Some(frac)))
   }
 
   /** Refit trigger signal for a persisted index: true when the largest
@@ -820,13 +820,8 @@ object Similarity {
     * away from the original fit (signal: [[ivfRefitNeeded]] /
     * [[ivfIndexStats]]). `nlist` defaults to the stored cell count;
     * pass a new value to re-size the quantizer (target ~sqrt(corpus)).
-    *
-    * The training sample must NOT be a prefix read here: the cell
-    * layout is clustered BY VECTOR SPACE, so LocalLimit would train on
-    * one cell's region and collapse the quantizer. The fraction sample
-    * (sized ~4x maxTrain from the index's metadata-priced row count)
-    * decorrelates storage order from vector space; the fit stays
-    * bounded driver math.
+    * The fit stays bounded driver math over a fraction sample of the
+    * stored vectors ([[refitFromCells]]).
     *
     * Rewrite cost is one full pass over the index (the same price as
     * building it); stored norms are reused, the raw corpus is never
@@ -841,59 +836,16 @@ object Similarity {
       nlist: Option[Int] = None,
       seed: Long = 42L
   ): Unit = {
-    import spark.implicits._
     val effNlist = nlist.getOrElse(loadCentroids(spark, path).length)
     require(effNlist > 0, s"nlist must be positive, got $effNlist")
-    val cells = spark.read.parquet(s"$path/cells")
-    val n = cells.count() // count(*) over parquet: row-group metadata only
-    require(n > 0, s"refusing to refit an empty index at $path")
-    val frac = math.min(1.0, 4.0 * 8192 / n.toDouble)
-    val cents = fitIvfCentroids(
-      cells.select(col("_cv")), "_cv", effNlist, seed, Some(frac))
+    val (cells, cents) = refitFromCells(spark, path, effNlist, seed)
     val tmp = s"$path/_refit_tmp"
-    cents.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }
-      .toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .parquet(s"$tmp/centroids")
-    Seq((1, cents.length, cents.head.length))
-      .toDF("format_version", "nlist", "dim")
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .parquet(s"$tmp/meta")
+    writeQuantizer(spark, cents, tmp)
     // reassign with the new quantizer; norms ride over unchanged. The
     // write fully materializes from the old dirs BEFORE any delete.
-    cells
-      .select(
-        col("neighbor_id"),
-        col("_cv"),
-        col("_cn"),
-        graft.functions.hashExpressions
-          .nearestCells(col("_cv"), cents, 1)(0)
-          .as("cell")
-      )
-      .write
-      .mode("overwrite")
-      .partitionBy("cell")
-      .parquet(s"$tmp/cells")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tmp),
-      spark.sparkContext.hadoopConfiguration
-    )
-    Seq("centroids", "meta", "cells").foreach { d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true)
-      require(
-        fs.rename(
-          new org.apache.hadoop.fs.Path(s"$tmp/$d"),
-          new org.apache.hadoop.fs.Path(s"$path/$d")
-        ),
-        s"refit rename failed: $tmp/$d -> $path/$d"
-      )
-    }
+    writeCells(cells, col("neighbor_id"), col("_cv"), cents, s"$tmp/cells", n = Some(col("_cn")))
+    val fs = indexFs(spark, tmp)
+    swapIn(fs, Seq("centroids", "meta", "cells").map(d => s"$tmp/$d" -> s"$path/$d"), "refit")
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
   }
 
@@ -955,24 +907,16 @@ object Similarity {
       path: String,
       seed: Long = 42L
   ): RefitReport = {
-    import spark.implicits._
     val oldCents = loadCentroids(spark, path)
     val nlist = oldCents.length
-    val cells = spark.read.parquet(s"$path/cells")
-    val n = cells.count() // row-group metadata only
-    require(n > 0, s"refusing to refit an empty index at $path")
-    val frac = math.min(1.0, 4.0 * 8192 / n.toDouble)
-    val raw = fitIvfCentroids(cells.select(col("_cv")), "_cv", nlist, seed, Some(frac))
+    val (cells, raw) = refitFromCells(spark, path, nlist, seed)
     require(
       raw.length == nlist,
       s"fit produced ${raw.length} centroids for a $nlist-cell index — " +
         "in-place refit cannot resize; use ivfRefitIndex"
     )
     val cents = matchCentroids(oldCents, raw)
-    val annotated = cells.withColumn(
-      "_newCell",
-      graft.functions.hashExpressions.nearestCells(col("_cv"), cents, 1)(0)
-    )
+    val annotated = cells.withColumn("_newCell", cellOf(col("_cv"), cents))
     // one aggregate: how many rows move, and which cells they leave /
     // enter (collect_set is bounded by nlist). Dirty vectors sit in the
     // null partition, map to NULL again, and never count as moved.
@@ -989,63 +933,27 @@ object Similarity {
     val affected =
       (agg.getSeq[Int](1) ++ agg.getSeq[Int](2)).distinct.sorted
     val tmp = s"$path/_refit_tmp"
-    cents.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }
-      .toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .parquet(s"$tmp/centroids")
-    Seq((1, nlist, cents.head.length))
-      .toDF("format_version", "nlist", "dim")
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .parquet(s"$tmp/meta")
+    writeQuantizer(spark, cents, tmp)
     // partition-pruned rewrite: only affected directories are read.
     // Every written row lands in an affected cell by construction — an
     // unmoved row in an affected dir keeps its id, a moved row's target
     // is in the affected set.
-    spark.read
-      .parquet(s"$path/cells")
-      .where(col("cell").isin(affected: _*))
-      .select(
-        col("neighbor_id"),
-        col("_cv"),
-        col("_cn"),
-        graft.functions.hashExpressions.nearestCells(col("_cv"), cents, 1)(0).as("cell")
-      )
-      .write
-      .mode("overwrite")
-      .partitionBy("cell")
-      .parquet(s"$tmp/cells")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tmp),
-      spark.sparkContext.hadoopConfiguration
+    writeCells(
+      cells.where(col("cell").isin(affected: _*)),
+      col("neighbor_id"),
+      col("_cv"),
+      cents,
+      s"$tmp/cells",
+      n = Some(col("_cn"))
     )
-    Seq("centroids", "meta").foreach { d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true)
-      require(
-        fs.rename(
-          new org.apache.hadoop.fs.Path(s"$tmp/$d"),
-          new org.apache.hadoop.fs.Path(s"$path/$d")
-        ),
-        s"refit rename failed: $tmp/$d -> $path/$d"
-      )
-    }
-    affected.foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/cells/cell=$c"), true)
-      val src = new org.apache.hadoop.fs.Path(s"$tmp/cells/cell=$c")
-      // a fully drained cell writes no partition — deleting the old
-      // dir IS the update
-      if (fs.exists(src)) {
-        require(
-          fs.rename(src, new org.apache.hadoop.fs.Path(s"$path/cells/cell=$c")),
-          s"refit rename failed: $src -> $path/cells/cell=$c"
-        )
-      }
-    }
+    val fs = indexFs(spark, tmp)
+    swapIn(fs, Seq("centroids", "meta").map(d => s"$tmp/$d" -> s"$path/$d"), "refit")
+    swapIn(
+      fs,
+      affected.map(c => s"$tmp/cells/cell=$c" -> s"$path/cells/cell=$c"),
+      "refit",
+      drainedOk = true
+    )
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     RefitReport(affected.length, nlist, rowsMoved)
   }
@@ -1080,23 +988,27 @@ object Similarity {
   ): DataFrame = {
     val spark = queries.sparkSession
     val cents = loadCentroids(spark, path)
-    val q = queries
-      .select(
-        col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("_qv"),
-        filteredNorm(col(vecCol)).as("_qn"),
-        explode(
-          graft.functions.hashExpressions
-            .nearestCells(col(vecCol).cast("array<double>"), cents, nprobe)
-        ).as("_cell")
-      )
-    val probed = q.select("_cell").distinct().collect().map(_.getInt(0)) // <= nlist values
-    val c = spark.read
-      .parquet(s"$path/cells")
-      .where(col("cell").isin(probed.toIndexedSeq: _*))
-      .withColumnRenamed("cell", "_cell")
-    rankWithinCells(c, q, k, excludeSelfMatch)
+    val q = probeSide(queries, idCol, col(vecCol).cast("array<double>"), cents, nprobe)
+    rankWithinCells(readCells(spark, s"$path/cells", probedOf(q)), q, k, excludeSelfMatch)
   }
+
+  /** The distinct probe cells of a probe side — at most nlist values. */
+  private def probedOf(q: DataFrame): Seq[Int] =
+    q.select("_cell").distinct().collect().map(_.getInt(0)).toIndexedSeq
+
+  /** The probed partitions of a stored by-cell table (`cell` read back
+    * as `_cell`), pruned at planning time by a literal IN filter, with
+    * zero-norm rows dropped in the parquet scan.
+    */
+  private def readCells(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String,
+      probed: Seq[Int]
+  ): DataFrame =
+    spark.read
+      .parquet(dir)
+      .where(col("cell").isin(probed: _*) && col("_cn") > 0d)
+      .withColumnRenamed("cell", "_cell")
 
   /** Listing-only fingerprint of the cells tree: md5 over the sorted
     * (relative path, length, mtime) of every data file. One metadata
@@ -1249,63 +1161,96 @@ object Similarity {
       s"stale PQ sidecar at $path/pq: cells changed since ivfAttachPq " +
         "(append/refit/compaction?) — re-attach before probing"
     )
-    val px = graft.functions.hashExpressions
-    val q = queries
-      .select(
-        col(idCol).as("query_id"),
-        filteredNorm(col(vecCol)).as("_qn"),
-        px.pqAdcTable(col(vecCol).cast("array<double>"), books).as("_tab"),
-        explode(
-          px.nearestCells(col(vecCol).cast("array<double>"), cents, nprobe)
-        ).as("_cell")
-      )
-      .where(col("_tab").isNotNull && col("_qn") > 0d)
-    val probed = q.select("_cell").distinct().collect().map(_.getInt(0))
+    val q = adcSide(
+      queries,
+      idCol,
+      vecCol,
+      books,
+      explode(
+        graft.functions.hashExpressions
+          .nearestCells(col(vecCol).cast("array<double>"), cents, nprobe)
+      ).as("_cell")
+    )
+    val probed = probedOf(q)
     // parquet reads restore nullable ELEMENT types; the codes were
     // written non-null (pqEncode's contract) and PqAdcDot refuses
     // nullable elements at type-check, so narrow with array_compact —
     // a no-op on the data, a type proof for the plan
-    val codes = spark.read
-      .parquet(s"$path/pq/codes")
-      .where(col("cell").isin(probed.toIndexedSeq: _*))
+    val codes = readCells(spark, s"$path/pq/codes", probed)
       .withColumn("_code", array_compact(col("_code")))
-      .withColumnRenamed("cell", "_cell")
-    val cond =
-      if (excludeSelfMatch) col("query_id") =!= col("neighbor_id") else lit(true)
-    val wApprox = Window
+    pqRerank(
+      codes.join(broadcast(q), Seq("_cell")).where(notSelf(excludeSelfMatch)),
+      ksub,
+      k * rerankFactor,
+      queries,
+      idCol,
+      vecCol,
+      readCells(spark, s"$path/cells", probed),
+      k
+    )
+  }
+
+  /** The ADC query side of both PQ paths: (query_id, _qn, _tab,
+    * `extra`...), dropping queries the codebooks cannot score (NULL or
+    * ragged vector) and zero-norm queries.
+    */
+  private def adcSide(
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      books: Array[Array[Array[Double]]],
+      extra: Column*
+  ): DataFrame =
+    queries
+      .select(
+        Seq(
+          col(idCol).as("query_id"),
+          filteredNorm(col(vecCol)).as("_qn"),
+          graft.functions.hashExpressions
+            .pqAdcTable(col(vecCol).cast("array<double>"), books)
+            .as("_tab")
+        ) ++ extra: _*
+      )
+      .where(col("_tab").isNotNull && col("_qn") > 0d)
+
+  /** The PQ tail of [[pqTopK]] and [[ivfPqQueryIndex]]: per query, the
+    * `shortlist` best ADC scores of the candidate `pairs` (query_id,
+    * neighbor_id, _code, _tab, _qn, _cn), then the exact top-k of that
+    * short list against the float vectors — `floats` (neighbor_id, _cv,
+    * _cn) and the scored queries. Only the short list touches float
+    * vectors again; both rejoined sides broadcast (|queries| and
+    * |queries|·shortlist rows).
+    */
+  private def pqRerank(
+      pairs: DataFrame,
+      ksub: Int,
+      shortlist: Int,
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      floats: DataFrame,
+      k: Int
+  ): DataFrame = {
+    val w = Window
       .partitionBy(col("query_id"))
       .orderBy(col("_approx").desc, col("neighbor_id"))
-    val shortlist = codes
-      .join(broadcast(q), Seq("_cell"))
-      .where(cond)
+    val kept = pairs
       .withColumn(
         "_approx",
-        px.pqAdcDot(col("_code"), col("_tab"), ksub) / (col("_qn") * col("_cn"))
+        graft.functions.hashExpressions.pqAdcDot(col("_code"), col("_tab"), ksub) /
+          (col("_qn") * col("_cn"))
       )
-      .withColumn("_arank", row_number().over(wApprox))
-      .where(col("_arank") <= k * rerankFactor)
+      .withColumn("_arank", row_number().over(w))
+      .where(col("_arank") <= shortlist)
       .select("query_id", "neighbor_id")
-    val qv = queries.select(
-      col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("_qv"),
-      norm(col(vecCol)).as("_qn")
+    val qv = scored(queries, idCol, col(vecCol).cast("array<double>"), "query_id", "_qv", "_qn")
+    exactTopK(
+      floats
+        .select("neighbor_id", "_cv", "_cn")
+        .join(broadcast(kept), Seq("neighbor_id"))
+        .join(broadcast(qv), Seq("query_id")),
+      k
     )
-    val cv = spark.read
-      .parquet(s"$path/cells")
-      .where(col("cell").isin(probed.toIndexedSeq: _*))
-      .select(col("neighbor_id"), col("_cv"), col("_cn"))
-    val wExact = Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    cv.join(broadcast(shortlist), Seq("neighbor_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .withColumn(
-        "sim",
-        round6(dot(col("_qv"), col("_cv")) / (col("_qn") * col("_cn")))
-      )
-      .withColumn("rank", row_number().over(wExact))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
   }
 
   /** Symmetric int8 quantization of an embedding — the 4x storage/
@@ -1364,21 +1309,7 @@ object Similarity {
   ): Array[Array[Array[Double]]] = {
     require(m > 0, s"m must be positive, got $m")
     require(ksub > 1, s"ksub must be > 1, got $ksub")
-    trainFraction.foreach(f =>
-      require(f > 0.0 && f <= 1.0, s"trainFraction must be in (0, 1], got $f")
-    )
-    val maxTrain = 8192
-    val base = corpus.select(col(vecCol).cast("array<double>").as("_v"))
-    val collected = trainFraction
-      .fold(base)(f => base.sample(withReplacement = false, f, seed))
-      .where(col("_v").isNotNull)
-      .limit(maxTrain)
-      .collect()
-      .map(_.getSeq[java.lang.Double](0))
-      .filter(s => s != null && s.forall(_ ne null))
-    val sample = collected.headOption
-      .map(h => collected.filter(_.length == h.length).map(_.map(_.doubleValue()).toArray))
-      .getOrElse(Array.empty[Array[Double]])
+    val sample = trainingSample(corpus, vecCol, seed, trainFraction)
     require(sample.nonEmpty, "PQ fit: no clean training vectors")
     val dim = sample.head.length
     require(
@@ -1452,51 +1383,16 @@ object Similarity {
         filteredNorm(col(vecCol)).as("_cn")
       )
       .where(col("_code").isNotNull && col("_cn") > 0d)
-    val q = queries
-      .select(
-        col(idCol).as("query_id"),
-        filteredNorm(col(vecCol)).as("_qn"),
-        px.pqAdcTable(col(vecCol).cast("array<double>"), books).as("_tab")
-      )
-      .where(col("_tab").isNotNull && col("_qn") > 0d)
-    val cond =
-      if (excludeSelfMatch) col("query_id") =!= col("neighbor_id") else lit(true)
-    val wApprox = Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("_approx").desc, col("neighbor_id"))
-    val shortlist = c
-      .join(broadcast(q), cond)
-      .withColumn(
-        "_approx",
-        px.pqAdcDot(col("_code"), col("_tab"), ksub) / (col("_qn") * col("_cn"))
-      )
-      .withColumn("_arank", row_number().over(wApprox))
-      .where(col("_arank") <= k * rerankFactor)
-      .select("query_id", "neighbor_id")
-    // exact rerank: only the short list touches float vectors again;
-    // both rejoined sides broadcast (|queries| and |queries|·R rows)
-    val qv = queries.select(
-      col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("_qv"),
-      norm(col(vecCol)).as("_qn")
+    pqRerank(
+      c.join(broadcast(adcSide(queries, idCol, vecCol, books)), notSelf(excludeSelfMatch)),
+      ksub,
+      k * rerankFactor,
+      queries,
+      idCol,
+      vecCol,
+      scored(corpus, idCol, col(vecCol).cast("array<double>"), "neighbor_id", "_cv", "_cn"),
+      k
     )
-    val cv = corpus.select(
-      col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("_cv"),
-      norm(col(vecCol)).as("_cn")
-    )
-    val wExact = Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    cv.join(broadcast(shortlist), Seq("neighbor_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .withColumn(
-        "sim",
-        round6(dot(col("_qv"), col("_cv")) / (col("_qn") * col("_cn")))
-      )
-      .withColumn("rank", row_number().over(wExact))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
   }
 
   /** Near-duplicate pairs by embedding cosine within a blocking key
@@ -1526,10 +1422,7 @@ object Similarity {
     )
     a.join(b, Seq("_blk"))
       .where(col("id_a") < col("id_b"))
-      .withColumn(
-        "sim",
-        round6(dot(col("_va"), col("_vb")) / (col("_na") * col("_nb")))
-      )
+      .withColumn("sim", pairCosine(col("_va"), col("_vb"), col("_na"), col("_nb")))
       .where(col("sim") >= threshold)
       .select("id_a", "id_b", "sim")
   }
@@ -1578,10 +1471,7 @@ object Similarity {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold out of (0,1]: $threshold")
     require(nAssign >= 1 && nAssign <= nlist, s"nAssign out of [1, nlist]: $nAssign")
     val cents = fitIvfCentroids(df, vecCol, nlist, seed, trainFraction)
-    val rows = df
-      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("_v"))
-      .withColumn("_n", norm(col("_v")))
-      .where(col("_n") > 0d)
+    val rows = scored(df, idCol, col(vecCol).cast("array<double>"), "id", "_v", "_n")
       .withColumn(
         "_cells",
         graft.functions.hashExpressions.nearestCells(col("_v"), cents, nAssign)
@@ -1594,10 +1484,7 @@ object Similarity {
       )
     val pairs = graft.dedup.BucketJoin
       .selfPairs(rows, Seq("_cell"), "sig", bucketCap)
-      .withColumn(
-        "sim",
-        round6(dot(col("_sa.v"), col("_sb.v")) / (col("_sa.n") * col("_sb.n")))
-      )
+      .withColumn("sim", pairCosine(col("_sa.v"), col("_sb.v"), col("_sa.n"), col("_sb.n")))
       .where(col("sim") >= threshold)
       .select("id_a", "id_b", "sim")
     if (nAssign == 1) pairs else pairs.distinct()
@@ -1628,21 +1515,6 @@ object Similarity {
       maxIter
     )
 
-  /** Per-group embedding centroids in long format:
-    * `(key, pos, centroid, n)` — one row per (group, dimension).
-    *
-    * The class-prototype primitive: centroids feed nearest-centroid
-    * classification, IVF coarse quantizers, diversity pruning, and
-    * drift monitoring between corpus snapshots.
-    *
-    * Shape: posexplode → ONE `groupBy(key, pos)` — partial-aggregatable
-    * (map-side combine reduces each partition to |groups| × dim rows),
-    * a single shuffle whose width is groups × dimensions regardless of
-    * corpus size. Per-dimension sums go through DECIMAL(38, 10):
-    * decimal addition is exact and order-independent, so the centroid
-    * is bit-identical on any engine and any partitioning (double sums
-    * would differ in the last ulps between runs).
-    */
   /** Embedding drift between two corpus snapshots: per-group L2 shift
     * of the [[centroids]], plus per-side counts — the embedding-space
     * analogue of the profiler's scalar PSI drift. A retrain-data
@@ -1827,6 +1699,21 @@ object Similarity {
       )
   }
 
+  /** Per-group embedding centroids in long format:
+    * `(key, pos, centroid, n)` — one row per (group, dimension).
+    *
+    * The class-prototype primitive: centroids feed nearest-centroid
+    * classification, IVF coarse quantizers, diversity pruning, and
+    * drift monitoring between corpus snapshots.
+    *
+    * Shape: posexplode → ONE `groupBy(key, pos)` — partial-aggregatable
+    * (map-side combine reduces each partition to |groups| × dim rows),
+    * a single shuffle whose width is groups × dimensions regardless of
+    * corpus size. Per-dimension sums go through DECIMAL(38, 10):
+    * decimal addition is exact and order-independent, so the centroid
+    * is bit-identical on any engine and any partitioning (double sums
+    * would differ in the last ulps between runs).
+    */
   def centroids(df: DataFrame, vecCol: String, keyCol: String): DataFrame =
     df.select(col(keyCol).as("key"), posexplode(col(vecCol)))
       .groupBy("key", "pos")

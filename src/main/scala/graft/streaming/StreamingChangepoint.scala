@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.round6Jvm
 
 /** Streaming two-sided CUSUM — the batch
   * [[graft.anomaly.Changepoint.cusum]] semantics on an always-on
@@ -47,12 +48,6 @@ object StreamingChangepoint {
       alarm: Boolean
   )
 
-  /** HALF_UP at 6 dp — matches Spark's `round` exactly (math.round is
-    * HALF_UP only for positives; z goes negative).
-    */
-  private def round6(x: Double): Double =
-    BigDecimal(x * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble / 1e6
-
   def detect(
       points: Dataset[RefObs],
       slack: Double = 0.5,
@@ -82,12 +77,12 @@ object StreamingChangepoint {
         ripe.sorted.foreach { case (t, z) =>
           sPos = math.max(0.0, sPos + z - slack)
           sNeg = math.max(0.0, sNeg - z - slack)
-          val rp = round6(sPos)
-          val rn = round6(sNeg)
+          val rp = round6Jvm(sPos)
+          val rn = round6Jvm(sNeg)
           out += CusumPoint(
             series,
             new java.sql.Timestamp(t),
-            round6(z),
+            round6Jvm(z),
             rp,
             rn,
             rp > threshold || rn > threshold

@@ -65,4 +65,28 @@ class ParquetRepositorySpec extends SparkSpec {
       Seq("u1" -> Seq("a", "b"), "u2" -> Seq("x")))
     assert(repo.getDataset("ghost").isEmpty)
   }
+
+  test("the newest stored ts is a plain column scan: no latest-wins window or key aggregate") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window}
+    import org.apache.spark.sql.functions.max
+    val repo = newRepo()
+    val t2 = java.sql.Timestamp.valueOf("2025-01-02 00:00:00")
+    def scores(ts: java.sql.Timestamp, score: Double) =
+      Seq((ts, "Column", "a", "Mean", 1.0, 1.0, score))
+        .toDF("ts", "entity", "instance", "name", "value", "predicted", "score")
+    repo.addScoring("u1", scores(t1, 0.1))
+    repo.addScoring("u1", scores(t2, 0.2))
+    repo.addScoring("u1", scores(t2, 0.3)) // a later batch upserts t2
+    val newest = repo.getScoring("u1").agg(max("ts"))
+    val plan = newest.queryExecution.optimizedPlan
+    assert(plan.collect { case w: Window => w }.isEmpty, plan.treeString)
+    assert(
+      plan.collect { case a: Aggregate if a.groupingExpressions.nonEmpty => a }.isEmpty,
+      plan.treeString
+    )
+    assert(newest.head.getTimestamp(0) == t2)
+    // full rows still resolve latest-wins, in stored column order
+    assert(repo.getScoring("u1").orderBy("ts").collect().map(_.toSeq).toSeq ==
+      Seq(Seq(t1, "Column", "a", "Mean", 1.0, 1.0, 0.1), Seq(t2, "Column", "a", "Mean", 1.0, 1.0, 0.3)))
+  }
 }

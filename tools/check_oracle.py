@@ -3,6 +3,12 @@
 run Verify output (parquet per query) against the DuckDB oracle SQL.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [query ...]
+       [--json=PATH] [--baseline=<verifyOutDir of another commit>]
+
+--baseline additionally compares every key's normalized sorted rows (the
+gate's table_hash) with a graft.Verify dump of another commit, printing
+SAME/DIFF per key after the gate summary; a DIFF fails the exit status.
+Rows-only keys, which the gate checks only for rows > 0, are covered too.
 """
 import glob
 import json
@@ -27,10 +33,56 @@ def table_hash(rows, cols):
     return data
 
 
+def read_rows(con, out_dir, name):
+    """(columns, rows) of one key's Verify output, or None if absent."""
+    files = sorted(glob.glob(f"{out_dir}/{name}/*.parquet"))
+    if not files:
+        return None
+    rel = con.execute(
+        "SELECT * FROM read_parquet([" + ",".join(f"'{f}'" for f in files) + "])"
+    )
+    return [d[0] for d in rel.description], rel.fetchall()
+
+
+def compare_baseline(con, out_dir, base_dir, only):
+    """Print SAME/DIFF per key against another commit's Verify dump;
+    returns the number of DIFF keys."""
+    keys = {
+        os.path.basename(d)
+        for o in (out_dir, base_dir)
+        for d in glob.glob(f"{o}/*")
+        if os.path.isdir(d)
+    }
+    print(f"== baseline {base_dir} ==")
+    n_same = n_diff = 0
+    for name in sorted(keys):
+        if only and name not in only:
+            continue
+        got, base = read_rows(con, out_dir, name), read_rows(con, base_dir, name)
+        if got is None or base is None:
+            why = f"no output {'here' if got is None else 'in baseline'}"
+        elif sorted(got[0]) != sorted(base[0]):
+            why = f"columns {sorted(got[0])} != {sorted(base[0])}"
+        else:
+            g, b = table_hash(got[1], got[0]), table_hash(base[1], base[0])
+            if g == b:
+                print(f"SAME {name} ({len(g)} rows)")
+                n_same += 1
+                continue
+            diffs = [(x, y) for x, y in zip(g, b) if x != y][:3]
+            why = f"rows {len(g)} vs {len(b)}, first diffs: {diffs}"
+        print(f"DIFF {name}: {why}")
+        n_diff += 1
+    print(f"== baseline: {n_same} same, {n_diff} diff ==")
+    return n_diff
+
+
 def main():
-    args = [a for a in sys.argv[1:] if not a.startswith("--json")]
+    args = [a for a in sys.argv[1:] if not a.startswith("--")]
     json_out = next((a.split("=", 1)[1] for a in sys.argv[1:]
                      if a.startswith("--json=")), None)
+    base_dir = next((a.split("=", 1)[1] for a in sys.argv[1:]
+                     if a.startswith("--baseline=")), None)
     sf_dir, out_dir = args[0], args[1]
     only = set(args[2:])
     results = {}
@@ -65,10 +117,8 @@ def main():
     for name in sorted(produced - set(oracle) - set(verify_errors)):
         if only and name not in only:
             continue
-        files = sorted(glob.glob(f"{out_dir}/{name}/*.parquet"))
-        n = con.execute(
-            "SELECT count(*) FROM read_parquet([" + ",".join(f"'{f}'" for f in files) + "])"
-        ).fetchone()[0] if files else 0
+        got = read_rows(con, out_dir, name)
+        n = len(got[1]) if got else 0
         if n > 0:
             print(f"PASS {name} (rows-only, {n} rows)")
             results[name] = dict(rows_match=None, schema_match=None, hash_match=None,
@@ -82,19 +132,14 @@ def main():
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
-        files = sorted(glob.glob(f"{out_dir}/{name}/*.parquet"))
-        if not files:
+        if not glob.glob(f"{out_dir}/{name}/*.parquet"):
             print(f"FAIL {name}: no spark output")
             results[name] = dict(rows_match=None, schema_match=None, hash_match=None,
                                  spark_rows=None, oracle_rows=None, err="no spark output")
             n_fail += 1
             continue
         try:
-            got_rel = con.execute(
-                "SELECT * FROM read_parquet([" + ",".join(f"'{f}'" for f in files) + "])"
-            )
-            got_cols = [d[0] for d in got_rel.description]
-            got = got_rel.fetchall()
+            got_cols, got = read_rows(con, out_dir, name)
             # the driver materializes via pandas, where HUGEINT/DECIMAL
             # become float64/object and stringify differently than
             # Spark's BIGINT/DOUBLE — an uncasted SUM(int) is a latent
@@ -145,7 +190,8 @@ def main():
     if json_out:
         json.dump(dict(sorted(results.items())), open(json_out, "w"), indent=2)
         print(f"wrote {json_out}")
-    sys.exit(1 if n_fail else 0)
+    n_diff = compare_baseline(con, out_dir, base_dir, only) if base_dir else 0
+    sys.exit(1 if n_fail or n_diff else 0)
 
 
 if __name__ == "__main__":
