@@ -84,30 +84,11 @@ object Bench {
     // A rep spread (max/min of the raw reps) over 3x means external
     // contention or a GC landed on the key.
     def noisy(ts: Seq[Double]): Boolean = ts.nonEmpty && ts.min > 0 && ts.max / ts.min > 3.0
-    val extrasFailed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def run(n: Int): Harness.Reps[Double] = {
-        val r = Harness.reps(spark, n)(Harness.timed(fn(spark, sfDir).count()))
-        hygieneSec += r.hygieneSec
-        r
-      }
-      val main = run(reps)
-      val err = main.error.map(_.getClass.getSimpleName)
-      // Self-defending timing (r15, VERDICT r14 item 1): a noisy key
-      // runs 2 EXTRA reps so the reported median is a trimmed median
-      // over 5 samples instead of hostage to one bad draw among 3.
-      // Additions-only: quiet keys time exactly as before, every raw
-      // rep stays in "runs", and the key is still flagged in
-      // noisy_keys (max/min can only grow). A failing extra rep does
-      // not turn a key that passed its main reps red (the extras only
-      // firm the median up), but it is recorded in "extras_failed".
-      val extras =
-        if (err.isEmpty && reps >= 2 && noisy(main.done)) {
-          val x = run(2)
-          if (x.error.isDefined) extrasFailed += name
-          x.done
-        } else Nil
-      val times = main.done ++ extras
+      val r = Harness.reps(spark, reps)(Harness.timed(fn(spark, sfDir).count()))
+      hygieneSec += r.hygieneSec
+      val err = r.error.map(_.getClass.getSimpleName)
+      val times = r.done
       // The GC hint runs once per QUERY, not per rep (see Harness.hygiene).
       hygieneSec += Harness.hygiene(spark)
       val median =
@@ -217,7 +198,7 @@ object Bench {
     val load =
       s"""{"start":$loadStart,"end":${loadavgJson(loadEndTriple)},"contaminated":${contaminated(loadStartTriple, loadEndTriple)}}"""
     val detailJson =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","reps":$reps,"queries":$detail,"runs":$runsDetail,"noisy_keys":$noisyKeys,"families":$families,"phases":$phases,"incremental":$incrementalJson,"loadavg":$load,"errors":$errors,"sf":"$sfDir","extras_failed":${extrasFailed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","reps":$reps,"queries":$detail,"runs":$runsDetail,"noisy_keys":$noisyKeys,"families":$families,"phases":$phases,"incremental":$incrementalJson,"loadavg":$load,"errors":$errors,"sf":"$sfDir"}"""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_detail.json"), detailJson + "\n")
     println(s"# bench detail: $detailJson")

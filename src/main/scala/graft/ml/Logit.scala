@@ -1,8 +1,6 @@
 package graft.ml
 
-import java.math.{BigDecimal => JBigDecimal}
-import java.math.RoundingMode
-
+import graft.operators.Sampling
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
@@ -109,63 +107,90 @@ object Logit {
       weightCol: Option[String]
   ): LogitModel = {
     require(featureCols.nonEmpty, "need at least one feature column")
-    require(iters > 0, s"iters must be positive, got $iters")
+    withProjection(df, labelCol, featureCols, weightCol.map(col).toSeq) { feats =>
+      lockstep(feats, labelCol, featureCols, Seq(lit(true)), weightCol, iters, lr).head
+    }
+  }
+
+  /** Runs `body` over the persisted training projection of `df` (the
+    * label as double, the feature columns, then `extra`), released when
+    * `body` returns: the fit loop scans it once per iteration.
+    */
+  private def withProjection[T](
+      df: DataFrame,
+      labelCol: String,
+      featureCols: Seq[String],
+      extra: Seq[Column]
+  )(body: DataFrame => T): T = {
     val keep =
-      col(labelCol).cast(DoubleType).as(labelCol) +:
-        (featureCols.map(col) ++ weightCol.map(col).toSeq)
+      col(labelCol).cast(DoubleType).as(labelCol) +: (featureCols.map(col) ++ extra)
     val feats = df.select(keep: _*).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // rows violating the fit contract: NULL label/feature, or (when
-      // weighted) NULL/negative weight — counted in the same pass as
-      // the first gradient and required to be zero, so a contract
-      // violation fails loudly instead of biasing every update
-      val violation = {
-        val nulls = (col(labelCol) +: featureCols.map(col))
-          .map(_.isNull)
-          .reduce(_ || _)
-        weightCol match {
-          case Some(wc) => nulls || col(wc).isNull || col(wc) < 0.0
-          case None     => nulls
-        }
-      }
-      val badAgg =
-        sum(when(violation, 1L).otherwise(0L)).cast(LongType).as("_bad")
-      var w = Seq.fill(featureCols.length + 1)(0.0)
-      var n = 0L
-      var t = 0
-      while (t < iters) {
-        // weights enter as literals: an A/B against a broadcast
-        // one-row weights table (which would share one compiled plan
-        // across iterations) measured the broadcast-stage overhead at
-        // ~+0.3 s per fit with NO codegen saving to offset it — the
-        // per-iteration recompile is cheaper than the extra AQE
-        // broadcast stages at any scale where the fit loop matters
-        val p = round6(lit(1.0) / (lit(1.0) + exp(-margin(w, featureCols))))
+    try body(feats)
+    finally { feats.unpersist(); () }
+  }
+
+  /** The one gradient loop: `iters` rounds of full-batch gradient
+    * ascent from w = 0 for one model per training-set predicate in
+    * `trainSets` (`lit(true)` for a plain fit), all in lockstep.
+    * Round t is ONE aggregation over `feats` carrying, for every model
+    * k, its training-row count, its gradient normalizer (row count, or
+    * total weight when `weightCol` is set) and its gradient sums over
+    * the rows where `trainSets(k)` holds, under model k's current
+    * weights. Each sum is the same round6'd terms in exact
+    * DECIMAL(28,6) arithmetic, so a model's weights do not depend on
+    * the partitioning or on which other models share the pass.
+    */
+  private def lockstep(
+      feats: DataFrame,
+      labelCol: String,
+      featureCols: Seq[String],
+      trainSets: Seq[Column],
+      weightCol: Option[String],
+      iters: Int,
+      lr: Double
+  ): Seq[LogitModel] = {
+    require(iters > 0, s"iters must be positive, got $iters")
+    // rows violating the fit contract: NULL label/feature, or (when
+    // weighted) NULL/negative weight — counted in the first gradient
+    // pass and required to be zero, so a contract violation fails
+    // loudly instead of biasing every update
+    val violation = {
+      val nulls = (col(labelCol) +: featureCols.map(col)).map(_.isNull).reduce(_ || _)
+      weightCol.fold(nulls)(wc => nulls || col(wc).isNull || col(wc) < 0.0)
+    }
+    val models = trainSets.indices
+    var w = models.map(_ => Seq.fill(featureCols.length + 1)(0.0))
+    var n = models.map(_ => 0L)
+    var t = 0
+    while (t < iters) {
+      // weights enter as literals: an A/B against a broadcast
+      // one-row weights table (which would share one compiled plan
+      // across iterations) measured the broadcast-stage overhead at
+      // ~+0.3 s per fit with NO codegen saving to offset it — the
+      // per-iteration recompile is cheaper than the extra AQE
+      // broadcast stages at any scale where the fit loop matters
+      val aggs = models.flatMap { k =>
+        val in = trainSets(k)
+        val p = round6(lit(1.0) / (lit(1.0) + exp(-margin(w(k), featureCols))))
         val resid = col(labelCol) - p
-        val gradAggs = (lit(1.0) +: featureCols.map(col)).zipWithIndex.map {
-          case (x, j) =>
-            val term = weightCol match {
-              case Some(wc) => round6(col(wc) * round6(x * resid))
-              case None     => round6(x * resid)
-            }
-            decSum6(term).as(s"_g$j")
+        val grads = (lit(1.0) +: featureCols.map(col)).zipWithIndex.map { case (x, j) =>
+          // weighted: per-row term round6 FIRST, then the weight, then
+          // round6 again — an integer weight w is exactly w copies
+          val term = round6(x * resid)
+          decSum6(when(in, weightCol.fold(term)(wc => round6(col(wc) * term)))).as(s"_g${k}_$j")
         }
-        // the gradient normalizer: row count unweighted, total weight
-        // (exact decimal sum, cast back to double) weighted
-        val denomAgg = weightCol match {
-          case Some(wc) => decSum6(col(wc)).as("_w")
-          case None     => count(lit(1)).cast(DoubleType).as("_w")
-        }
-        // the contract check rides ONLY the first gradient pass: the
-        // frame is persisted and cannot change across iterations, so
-        // re-counting violations every update is pure waste
-        val iterAggs =
-          if (t == 0) badAgg +: denomAgg +: gradAggs else denomAgg +: gradAggs
-        val row = feats.agg(count(lit(1)).as("_n"), iterAggs: _*).head()
-        n = row.getAs[Long]("_n")
-        require(n > 0, "cannot fit on an empty frame")
+        val denom = weightCol.map(wc => decSum6(when(in, col(wc))).as(s"_w$k"))
+        // the contract check rides ONLY the first pass: the frame is
+        // persisted and cannot change across iterations
+        val bad = if (t == 0) Seq(count(when(in && violation, 1)).as(s"_bad$k")) else Nil
+        (count(when(in, 1)).as(s"_n$k") +: grads) ++ denom ++ bad
+      }
+      val row = feats.agg(aggs.head, aggs.tail: _*).head()
+      n = models.map(k => row.getAs[Long](s"_n$k"))
+      models.foreach { k =>
+        require(n(k) > 0, s"cannot fit on an empty training frame (training set $k)")
         if (t == 0) {
-          val bad = row.getAs[Long]("_bad")
+          val bad = row.getAs[Long](s"_bad$k")
           require(
             bad == 0L,
             s"$bad row(s) violate the fit contract (NULL label/feature" +
@@ -173,15 +198,17 @@ object Logit {
               ") — filter them upstream; they would bias every update"
           )
         }
-        val denom = row.getAs[Double]("_w")
-        require(denom > 0, "total weight must be positive")
-        w = w.zipWithIndex.map { case (wj, j) =>
-          round6jvm(wj + lr * row.getAs[Double](s"_g$j") / denom)
-        }
-        t += 1
       }
-      LogitModel(w, iters, lr, n)
-    } finally { feats.unpersist(); () }
+      w = models.map { k =>
+        val denom = weightCol.fold(n(k).toDouble)(_ => row.getAs[Double](s"_w$k"))
+        require(denom > 0, "total weight must be positive")
+        w(k).zipWithIndex.map { case (wj, j) =>
+          round6jvm(wj + lr * row.getAs[Double](s"_g${k}_$j") / denom)
+        }
+      }
+      t += 1
+    }
+    models.map(k => LogitModel(w(k), iters, lr, n(k)))
   }
 
   /** Attach `scoreCol` (round6'd σ(w·x)) and `predCol`
@@ -328,11 +355,11 @@ object Logit {
     * aggregation per iteration — `folds × (d+2)` numbers per partition
     * per pass instead of k separate [[fit]] loops each re-scanning the
     * corpus (3 folds × 6 iters was 18 sequential jobs + 6 feature
-    * passes; now `iters` jobs + 1 pass). Per-fold sums are the SAME
-    * round6'd terms in the same exact DECIMAL(28,6) order-independent
-    * arithmetic as [[fit]] restricted to `_fold <> k`, so the trained
-    * weights — and therefore every score and AUC — are bit-identical
-    * to the per-fold formulation (spec-pinned against it).
+    * passes; now `iters` jobs + 1 pass). The folds train through the
+    * same gradient loop as [[fit]], one training-set predicate
+    * `_fold <> k` per fold, so the trained weights — and therefore
+    * every score and AUC — are bit-identical to a per-fold [[fit]]
+    * (spec-pinned against it).
     * Output: one row per fold (fold, n_train, n_pos, n_neg, auc),
     * returned as a LOCAL frame: the operator is eager end to end (the
     * training loop is k actions anyway), which lets the corpus-sized
@@ -350,102 +377,41 @@ object Logit {
       salt: String = "graft"
   ): DataFrame = {
     require(folds >= 2, s"need at least 2 folds, got $folds")
-    require(iters > 0, s"iters must be positive, got $iters")
-    val fold = pmod(
-      conv(
-        substring(md5(concat(col(idCol).cast("string"), lit(s":$salt"))), 1, 13),
-        16,
-        10
-      ).cast(LongType),
-      lit(folds)
-    ).cast(IntegerType)
-    val keep =
-      col(labelCol).cast(DoubleType).as(labelCol) +:
-        featureCols.map(col) :+ fold.as("_fold")
+    val fold = pmod(Sampling.hash52(col(idCol), salt), lit(folds)).cast(IntegerType)
     // one corpus pass: every fit scan and every scoring scan below
     // reads this compact persisted projection. persist, NOT
     // localCheckpoint (r14 ADVICE): checkpoint blocks lived until
     // driver GC and a truncated lineage is unrecoverable after
     // executor loss without a reliable checkpoint dir — persist keeps
-    // the lineage and is released in the finally below, the same
-    // pairing [[fit]] uses.
-    val withFold = df.select(keep: _*).persist(StorageLevel.MEMORY_AND_DISK)
-    val nulls = (col(labelCol) +: featureCols.map(col))
-      .map(_.isNull)
-      .reduce(_ || _)
-    def inTrain(k: Int) = col("_fold") =!= k
-    // weights per fold, all trained in lockstep: iteration t is ONE
-    // aggregation carrying, for every fold k, the gradient sums over
-    // the rows with _fold <> k under fold k's current weights
-    var w = Array.fill(folds)(Seq.fill(featureCols.length + 1)(0.0))
-    val nTrain = Array.fill(folds)(0L)
-    try {
-    var t = 0
-    while (t < iters) {
-      // weights enter as literals — same A/B-backed choice as [[fit]]
-      val perFold = (0 until folds).flatMap { k =>
-        val p = round6(lit(1.0) / (lit(1.0) + exp(-margin(w(k), featureCols))))
-        val resid = col(labelCol) - p
-        val grads = (lit(1.0) +: featureCols.map(col)).zipWithIndex.map {
-          case (x, j) =>
-            decSum6(when(inTrain(k), round6(x * resid))).as(s"_g${k}_$j")
-        }
-        val cnt = sum(when(inTrain(k), 1L).otherwise(0L)).as(s"_n$k")
-        // same loud fit contract as [[fit]], checked once per fold's
-        // training set on the first pass
-        val bad =
-          if (t == 0)
-            Seq(sum(when(inTrain(k) && nulls, 1L).otherwise(0L)).as(s"_bad$k"))
-          else Nil
-        (cnt +: grads) ++ bad
-      }
-      val row = withFold.agg(perFold.head, perFold.tail: _*).head()
-      (0 until folds).foreach { k =>
-        val n = row.getAs[Long](s"_n$k")
-        require(n > 0, s"cannot fit fold $k on an empty training frame")
-        if (t == 0) {
-          val bad = row.getAs[Long](s"_bad$k")
-          require(
-            bad == 0L,
-            s"$bad row(s) violate the fit contract (NULL label/feature) " +
-              "— filter them upstream; they would bias every update"
+    // the lineage and is released when the block returns.
+    withProjection(df, labelCol, featureCols, Seq(fold.as("_fold"))) { withFold =>
+      // fold k's model trains on the rows with _fold <> k
+      val models = lockstep(
+        withFold, labelCol, featureCols, (0 until folds).map(k => col("_fold") =!= k),
+        None, iters, lr)
+      val out = models.zipWithIndex
+        .map { case (m, k) =>
+          auc(
+            scored(withFold.filter(col("_fold") === k), m, featureCols),
+            labelCol,
+            "score"
+          ).select(
+            lit(k).as("fold"),
+            lit(m.n).as("n_train"),
+            col("n_pos"),
+            col("n_neg"),
+            col("auc")
           )
         }
-        nTrain(k) = n
-        val denom = n.toDouble
-        w(k) = w(k).zipWithIndex.map { case (wj, j) =>
-          round6jvm(wj + lr * row.getAs[Double](s"_g${k}_$j") / denom)
-        }
-      }
-      t += 1
+        .reduce(_ union _)
+      // The k fold-AUC rows are computed HERE (the operator is already
+      // eager — the training loop above ran one action per iteration)
+      // and returned as a local frame, so the corpus-sized projection
+      // can be RELEASED instead of pinning its blocks until driver GC
+      // (r14 ADVICE). Values/schema are verbatim.
+      val rows = out.collect()
+      out.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     }
-    val out = (0 until folds)
-      .map { k =>
-        val m = LogitModel(w(k), iters, lr, nTrain(k))
-        auc(
-          scored(withFold.filter(col("_fold") === k), m, featureCols),
-          labelCol,
-          "score"
-        ).select(
-          lit(k).as("fold"),
-          lit(m.n).as("n_train"),
-          col("n_pos"),
-          col("n_neg"),
-          col("auc")
-        )
-      }
-      .reduce(_ union _)
-    // The k fold-AUC rows are computed HERE (the operator is already
-    // eager — the training loop above ran one action per iteration)
-    // and returned as a local frame, so the corpus-sized projection
-    // can be RELEASED in the finally instead of pinning its blocks
-    // until driver GC (r14 ADVICE). Values/schema are verbatim.
-    val rows = out.collect()
-    out.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*),
-      out.schema
-    )
-    } finally { withFold.unpersist(); () }
   }
 
   /** Per-feature point-biserial correlation with the label — the

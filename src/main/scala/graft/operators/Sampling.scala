@@ -10,28 +10,65 @@ import org.apache.spark.sql.functions._
   * so the same row lands in the same split on any cluster, any
   * partitioning, any engine, forever.
   *
-  * Mechanics: u(row) = first 8 hex chars of md5(id ":" salt) — a
-  * uniform 32-bit value. Membership compares the HEX STRING against
-  * precomputed hex thresholds: lexicographic order on fixed-width
-  * lowercase hex equals numeric order, so no engine-specific hex->int
-  * conversion is needed and the exact same predicate runs in any SQL
-  * dialect (md5 is universal). Scan-side projection, zero shuffle,
-  * trivially codegen'd.
+  * This object owns the id-hash membership contract that every
+  * deterministic sampler, split, fold and shard in graft reads
+  * (`Corpus`'s mixture samplers, `Logit.cvAuc` folds, `Export` shard
+  * cells, DSIR feature buckets):
+  *  - the digest [[idDigest]] = md5(id ":" salt), 32 lowercase hex;
+  *  - the 8-hex uniform [[bucketHex]] (its first 8 chars, a uniform
+  *    32-bit value) against a hex threshold — [[thresholdHex]] on the
+  *    driver, [[thresholdHexCol]] in the plan. Membership compares the
+  *    HEX STRING: lexicographic order on fixed-width lowercase hex
+  *    equals numeric order, so no engine-specific hex->int conversion
+  *    is needed and the exact same predicate runs in any SQL dialect
+  *    (md5 is universal). Scan-side projection, zero shuffle,
+  *    trivially codegen'd;
+  *  - the 52-bit uniform [[hash52]] (the digest's first 13 hex chars as
+  *    a long), decoded by [[hexValue]].
+  * The SQL mirrors are `graft.queries.sqlBucketHex`, `sqlThresholdHex`
+  * and `sqlHexValue`.
   */
 object Sampling {
 
-  private def bucketHex(idCol: Column, salt: String): Column =
-    substring(md5(concat(idCol.cast("string"), lit(s":$salt"))), 1, 8)
+  private[graft] val Two32 = 4294967296d // 2^32
+  private val HexFormat = "%08x"
+
+  /** md5(id ":" salt) as 32 lowercase hex chars; a NULL id digests to
+    * NULL, so it never passes a membership predicate.
+    */
+  private[graft] def idDigest(id: Column, salt: String): Column =
+    md5(concat(id.cast("string"), lit(s":$salt")))
+
+  /** The 8-hex uniform: the first 8 chars of [[idDigest]]. */
+  private[graft] def bucketHex(id: Column, salt: String): Column =
+    substring(idDigest(id, salt), 1, 8)
+
+  /** `digits` hex chars of the digest column `h` from 1-based `pos`,
+    * decoded as a long.
+    */
+  private[graft] def hexValue(h: Column, pos: Int, digits: Int): Column =
+    conv(substring(h, pos, digits), 16, 10).cast("long")
+
+  /** The 52-bit uniform integer in [0, 2^52) of (id, salt). */
+  private[graft] def hash52(id: Column, salt: String): Column =
+    hexValue(idDigest(id, salt), 1, 13)
 
   /** Hex threshold for a fraction of the 32-bit space. Fraction 1.0
     * returns "g" — lexicographically above every hex string, so
     * `bucket < threshold` is always true (2^32 itself does not fit in
     * 8 hex chars).
     */
-  private[operators] def thresholdHex(fraction: Double): String = {
+  private[graft] def thresholdHex(fraction: Double): String = {
     val f = math.min(math.max(fraction, 0.0), 1.0)
-    if (f >= 1.0) "g" else f"${(f * 4294967296d).toLong}%08x"
+    if (f >= 1.0) "g" else HexFormat.format((f * Two32).toLong)
   }
+
+  /** [[thresholdHex]] of an in-plan keep-fraction column in [0, 1]:
+    * the same exactly rounded double arithmetic, so a threshold derived
+    * from aggregates needs no driver round-trip.
+    */
+  private[graft] def thresholdHexCol(f: Column): Column =
+    when(f >= 1.0, lit("g")).otherwise(format_string(HexFormat, floor(f * lit(Two32))))
 
   /** Add a `split` column assigning each row to one of the named
     * fractions, e.g. `Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)`.
@@ -128,7 +165,7 @@ object Sampling {
       defaultFraction: Double = 0.0,
       salt: String = "graft"
   ): String = {
-    val b = s"substr(md5(CAST($idExpr AS VARCHAR) || ':$salt'), 1, 8)"
+    val b = graft.queries.sqlBucketHex(idExpr, salt)
     val whens = fractions
       .map { case (k, f) =>
         s"WHEN CAST($strataExpr AS VARCHAR) = '$k' THEN '${thresholdHex(f)}'"
@@ -142,7 +179,7 @@ object Sampling {
     */
   def hashSplitSql(idExpr: String, fractions: Seq[(String, Double)], salt: String = "graft"): String = {
     val cum = fractions.scanLeft(0.0) { case (acc, (_, f)) => acc + f }.tail
-    val b = s"substr(md5(CAST($idExpr AS VARCHAR) || ':$salt'), 1, 8)"
+    val b = graft.queries.sqlBucketHex(idExpr, salt)
     val whens = fractions
       .zip(cum)
       .dropRight(1)
@@ -185,11 +222,7 @@ object Sampling {
   ): DataFrame = {
     require(groupCols.nonEmpty, "at least one group column required")
     require(k > 0, s"k must be positive, got $k")
-    val u = (conv(
-      substring(md5(concat(col(idCol).cast("string"), lit(s":$salt"))), 1, 13),
-      16,
-      10
-    ).cast("long") + 1) / lit(4503599627370496.0) // 2^52
+    val u = (hash52(col(idCol), salt) + 1) / lit(4503599627370496.0) // 2^52
     val key = graft.functions.round6(log(u) / weight)
     // NaN > 0 is true under Spark's NaN-greatest ordering and a NaN
     // rank key would sort above every finite key — exclude explicitly
@@ -238,11 +271,7 @@ object Sampling {
     require(k > 0, s"k must be positive, got $k")
     // u in (0,1) OPEN: (h52 + 1) / (2^52 + 1) — u = 1 would send
     // g = -ln(-ln 1) to +Inf and pin the row into every sample.
-    val u = (conv(
-      substring(md5(concat(col(idCol).cast("string"), lit(s":$salt"))), 1, 13),
-      16,
-      10
-    ).cast("long") + 1) / lit(4503599627370497.0) // 2^52 + 1
+    val u = (hash52(col(idCol), salt) + 1) / lit(4503599627370497.0) // 2^52 + 1
     val key = graft.functions.round6(logWeight - log(-log(u)))
     // NaN log-weight (degenerate upstream score) would sort above
     // every finite key in the bounded heap and pin itself into every

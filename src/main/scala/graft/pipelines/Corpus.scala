@@ -1,5 +1,7 @@
 package graft.pipelines
 
+import graft.operators.Sampling
+import graft.queries.{sqlBucketHex, sqlThresholdHex}
 import graft.text.Text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -425,10 +427,9 @@ object Corpus {
     * [[graft.operators.Sampling]] (md5 hex-prefix compare), so the
     * draw is reproducible across runs, partitionings and engines, and
     * raising the budget only ADDS rows (prefix property). Domains
-    * absent from `weights` get weight 0 and drop entirely; rows with
-    * a NULL domain or NULL id never match the threshold join/filter
-    * and are excluded, like every id-hash operator in
-    * [[graft.operators.Sampling]].
+    * absent from `weights` (a NULL domain included) get weight 0 and
+    * drop entirely; rows with a NULL id never pass the filter, like
+    * every id-hash operator in [[graft.operators.Sampling]].
     *
     * Cost model at scale: one map-side-combined count per domain
     * (output rows = |domains|), thresholds derived IN-PLAN from the
@@ -447,34 +448,12 @@ object Corpus {
       budget: Long,
       salt: String = "graft"
   ): DataFrame = {
-    require(weights.nonEmpty && weights.forall(_._2 >= 0), "weights must be >= 0")
-    require(
-      math.abs(weights.map(_._2).sum - 1.0) < 1e-9,
-      s"weights must sum to 1, got ${weights.map(_._2).sum}"
-    )
-    require(budget > 0, s"budget must be positive, got $budget")
-    val wCol = weights.foldRight(lit(0.0)) { case ((k, v), e) =>
-      when(col(strataCol) === k, lit(v)).otherwise(e)
-    }
-    // f and its hex threshold are computed with engine-portable double
-    // arithmetic (mul, div, floor — all exactly rounded IEEE ops), so
-    // an oracle in any md5-capable SQL dialect lands on the identical
-    // row set; "g" sorts above every hex digit => keep-all when f >= 1
-    val f = least(lit(1.0), (lit(budget.toDouble) * wCol) / col("_cnt").cast("double"))
-    val thr = df
+    val share = listedShare(strataCol, weights)
+    val strata = df
       .groupBy(col(strataCol))
-      .agg(count(lit(1)).as("_cnt"))
-      .select(
-        col(strataCol),
-        when(f >= 1.0, lit("g"))
-          .otherwise(format_string("%08x", floor(f * lit(4294967296.0))))
-          .as("_thr")
-      )
-    val bucket =
-      substring(md5(concat(col(idCol).cast("string"), lit(s":$salt"))), 1, 8)
-    df.join(broadcast(thr), Seq(strataCol))
-      .where(bucket < col("_thr"))
-      .drop("_thr")
+      .agg(count(lit(1)).as("_total"))
+      .select(col(strataCol).as("_stratum"), share.as("_share"), col("_total"))
+    keepByStratum(df, idCol, strataCol, strata, budget, salt)
   }
 
   /** [[mixtureSample]] with the budget measured in a WEIGHT column's
@@ -497,81 +476,23 @@ object Corpus {
       budget: Long,
       salt: String = "graft"
   ): DataFrame = {
-    require(weights.nonEmpty && weights.forall(_._2 >= 0), "weights must be >= 0")
-    require(
-      math.abs(weights.map(_._2).sum - 1.0) < 1e-9,
-      s"weights must sum to 1, got ${weights.map(_._2).sum}"
-    )
-    require(budget > 0, s"budget must be positive, got $budget")
-    val wCol = weights.foldRight(lit(0.0)) { case ((k, v), e) =>
-      when(col(strataCol) === k, lit(v)).otherwise(e)
-    }
-    val f = least(
-      lit(1.0),
-      (lit(budget.toDouble) * wCol) / col("_wsum").cast("double")
-    )
+    val share = listedShare(strataCol, weights)
     // DECIMAL(38,6), not (38,0): the sum must stay cross-engine exact
     // AND faithful for FRACTIONAL weights (per-doc token estimates,
     // quality-scaled weights) — a per-row cast to scale 0 rounds each
     // weight before summing, and a domain of sub-0.5 weights would
-    // round to _wsum = 0 and be dropped from the sample entirely.
-    val thr = df
+    // round to a zero total and be dropped from the sample entirely.
+    val strata = df
       .groupBy(col(strataCol))
       .agg(
         sum(col(weightCol).cast(org.apache.spark.sql.types.DecimalType(38, 6)))
-          .as("_wsum")
+          .as("_total")
       )
-      .where(col("_wsum") > 0)
-      .select(
-        col(strataCol),
-        when(f >= 1.0, lit("g"))
-          .otherwise(format_string("%08x", floor(f * lit(4294967296.0))))
-          .as("_thr")
-      )
-    val bucket =
-      substring(md5(concat(col(idCol).cast("string"), lit(s":$salt"))), 1, 8)
-    df.join(broadcast(thr), Seq(strataCol))
-      .where(bucket < col("_thr"))
-      .drop("_thr")
+      .where(col("_total") > 0)
+      .select(col(strataCol).as("_stratum"), share.as("_share"), col("_total"))
+    keepByStratum(df, idCol, strataCol, strata, budget, salt)
   }
 
-  /** SQL mirror of [[mixtureSampleByWeight]]'s threshold CTE +
-    * predicate (DECIMAL(38,6) weight sums for exact cross-engine
-    * totals). CTE is named `_thr`.
-    */
-  def mixtureSampleByWeightSql(
-      table: String,
-      idExpr: String,
-      strataExpr: String,
-      weightExpr: String,
-      weights: Seq[(String, Double)],
-      budget: Long,
-      salt: String = "graft"
-  ): (String, String) = {
-    val wSql = weights
-      .map { case (k, v) => s"WHEN '$k' THEN CAST($v AS DOUBLE)" }
-      .mkString(s"CASE $strataExpr ", " ", " ELSE 0.0 END")
-    val fSql =
-      s"least(1.0, (CAST($budget AS DOUBLE) * $wSql) / CAST(SUM(CAST($weightExpr AS DECIMAL(38,6))) AS DOUBLE))"
-    val cte =
-      s"""_thr AS (
-         |  SELECT $strataExpr AS _stratum,
-         |    CASE WHEN $fSql >= 1.0 THEN 'g'
-         |         ELSE printf('%08x', CAST(floor($fSql * 4294967296.0) AS BIGINT))
-         |    END AS _th
-         |  FROM $table GROUP BY $strataExpr
-         |  HAVING SUM(CAST($weightExpr AS DECIMAL(38,6))) > 0)""".stripMargin
-    val pred =
-      s"substr(md5(CAST($idExpr AS VARCHAR) || ':$salt'), 1, 8) < _thr._th"
-    (cte, pred)
-  }
-
-  /** SQL mirror of [[mixtureSample]]'s threshold table + predicate,
-    * for oracle parity (same shape as [[Sampling.stratifiedSampleSql]]
-    * but with in-query thresholds). Returns (thresholdCteSql,
-    * predicateSql) to splice into a WITH ... WHERE query; the CTE is
-    * named `_thr`.
-    */
   /** Temperature-scaled (α-sampling) domain mixing — the standard
     * multilingual/domain rebalance (mBERT, XLM): target shares derive
     * from the data itself as `w_d ∝ n_d^τ`, so τ=1 keeps natural
@@ -603,35 +524,109 @@ object Corpus {
       salt: String = "graft"
   ): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau must be in (0, 1], got $tau")
-    require(budget > 0, s"budget must be positive, got $budget")
     val dec = org.apache.spark.sql.types.DecimalType(38, 6)
     val counts = df
-      .groupBy(col(strataCol))
-      .agg(count(lit(1)).as("_cnt"))
+      .groupBy(col(strataCol).as("_stratum"))
+      .agg(count(lit(1)).as("_total"))
       .withColumn(
         "_p",
-        graft.functions.round6(pow(col("_cnt").cast("double"), lit(tau)))
+        graft.functions.round6(pow(col("_total").cast("double"), lit(tau)))
       )
     val total =
       counts.agg(sum(col("_p").cast(dec)).cast("double").as("_s"))
-    val w = graft.functions.round6(col("_p") / col("_s"))
-    val f =
-      least(lit(1.0), (lit(budget.toDouble) * w) / col("_cnt").cast("double"))
-    val thr = counts
+    val strata = counts
       .crossJoin(broadcast(total))
-      .select(
-        col(strataCol).as("_stratum"),
-        when(f >= 1.0, lit("g"))
-          .otherwise(format_string("%08x", floor(f * lit(4294967296.0))))
-          .as("_thr")
-      )
-    val bucket =
-      substring(md5(concat(col(idCol).cast("string"), lit(s":$salt"))), 1, 8)
-    // null-safe join: a NULL stratum matches ITS threshold row rather
-    // than being equi-join-dropped
+      .withColumn("_share", graft.functions.round6(col("_p") / col("_s")))
+    keepByStratum(df, idCol, strataCol, strata, budget, salt)
+  }
+
+  /** A hand-written share list as a per-stratum column, after checking
+    * it: non-negative weights summing to 1. Strata absent from
+    * `weights` get share 0.
+    */
+  private def listedShare(strataCol: String, weights: Seq[(String, Double)]): Column = {
+    require(weights.nonEmpty && weights.forall(_._2 >= 0), "weights must be >= 0")
+    require(
+      math.abs(weights.map(_._2).sum - 1.0) < 1e-9,
+      s"weights must sum to 1, got ${weights.map(_._2).sum}"
+    )
+    weights.foldRight(lit(0.0)) { case ((k, v), e) =>
+      when(col(strataCol) === k, lit(v)).otherwise(e)
+    }
+  }
+
+  /** The shared tail of the mixture samplers. `strata` holds one row
+    * per stratum: `_stratum`, its target `_share` and its `_total`
+    * (rows or weight). The keep-fraction f = min(1, budget * share /
+    * total) and its hex threshold are computed with engine-portable
+    * double arithmetic (mul, div, floor — all exactly rounded IEEE
+    * ops), so an oracle in any md5-capable SQL dialect lands on the
+    * identical row set. The |strata|-row threshold table is broadcast
+    * back and matched null-safely (a NULL stratum matches ITS row);
+    * a row is kept when its id's 8-hex uniform is below its stratum's
+    * threshold. The input's columns come back unchanged.
+    */
+  private def keepByStratum(
+      df: DataFrame,
+      idCol: String,
+      strataCol: String,
+      strata: DataFrame,
+      budget: Long,
+      salt: String
+  ): DataFrame = {
+    require(budget > 0, s"budget must be positive, got $budget")
+    val f = least(lit(1.0), (lit(budget.toDouble) * col("_share")) / col("_total").cast("double"))
+    val thr = strata.select(col("_stratum"), Sampling.thresholdHexCol(f).as("_thr"))
     df.join(broadcast(thr), col(strataCol) <=> col("_stratum"))
-      .where(bucket < col("_thr"))
+      .where(Sampling.bucketHex(col(idCol), salt) < col("_thr"))
       .drop("_stratum", "_thr")
+  }
+
+  /** SQL mirror of [[mixtureSample]]'s threshold table + predicate,
+    * for oracle parity (same shape as [[Sampling.stratifiedSampleSql]]
+    * but with in-query thresholds). Returns (thresholdCteSql,
+    * predicateSql) to splice into a WITH ... WHERE query; the CTE is
+    * named `_thr`.
+    */
+  def mixtureSampleSql(
+      table: String,
+      idExpr: String,
+      strataExpr: String,
+      weights: Seq[(String, Double)],
+      budget: Long,
+      salt: String = "graft"
+  ): (String, String) = {
+    val f = sqlKeepFraction(budget, sqlListedShare(strataExpr, weights), "count(*)")
+    val cte =
+      s"""_thr AS (
+         |  SELECT $strataExpr AS _stratum,
+         |    ${sqlThresholdHex(f)} AS _th
+         |  FROM $table GROUP BY $strataExpr)""".stripMargin
+    (cte, sqlKeep(idExpr, salt))
+  }
+
+  /** SQL mirror of [[mixtureSampleByWeight]]'s threshold CTE +
+    * predicate (DECIMAL(38,6) weight sums for exact cross-engine
+    * totals). CTE is named `_thr`.
+    */
+  def mixtureSampleByWeightSql(
+      table: String,
+      idExpr: String,
+      strataExpr: String,
+      weightExpr: String,
+      weights: Seq[(String, Double)],
+      budget: Long,
+      salt: String = "graft"
+  ): (String, String) = {
+    val wsum = s"SUM(CAST($weightExpr AS DECIMAL(38,6)))"
+    val f = sqlKeepFraction(budget, sqlListedShare(strataExpr, weights), wsum)
+    val cte =
+      s"""_thr AS (
+         |  SELECT $strataExpr AS _stratum,
+         |    ${sqlThresholdHex(f)} AS _th
+         |  FROM $table GROUP BY $strataExpr
+         |  HAVING $wsum > 0)""".stripMargin
+    (cte, sqlKeep(idExpr, salt))
   }
 
   /** DuckDB mirror of [[mixtureTemperature]] — (CTE chain, membership
@@ -645,8 +640,7 @@ object Corpus {
       budget: Long,
       salt: String = "graft"
   ): (String, String) = {
-    val fSql =
-      s"least(1.0, (CAST($budget AS DOUBLE) * round(_p / _s, 6)) / CAST(_cnt AS DOUBLE))"
+    val f = sqlKeepFraction(budget, "round(_p / _s, 6)", "_cnt")
     val cte =
       s"""_tcnt AS (
          |  SELECT $strataExpr AS _stratum, count(*) AS _cnt,
@@ -655,37 +649,19 @@ object Corpus {
          |_ttot AS (SELECT CAST(SUM(CAST(_p AS DECIMAL(38,6))) AS DOUBLE) AS _s FROM _tcnt),
          |_thr AS (
          |  SELECT _stratum,
-         |    CASE WHEN $fSql >= 1.0 THEN 'g'
-         |         ELSE printf('%08x', CAST(floor($fSql * 4294967296.0) AS BIGINT))
-         |    END AS _th
+         |    ${sqlThresholdHex(f)} AS _th
          |  FROM _tcnt, _ttot)""".stripMargin
-    val pred =
-      s"substr(md5(CAST($idExpr AS VARCHAR) || ':$salt'), 1, 8) < _thr._th"
-    (cte, pred)
+    (cte, sqlKeep(idExpr, salt))
   }
 
-  def mixtureSampleSql(
-      table: String,
-      idExpr: String,
-      strataExpr: String,
-      weights: Seq[(String, Double)],
-      budget: Long,
-      salt: String = "graft"
-  ): (String, String) = {
-    val wSql = weights
+  private def sqlListedShare(strataExpr: String, weights: Seq[(String, Double)]): String =
+    weights
       .map { case (k, v) => s"WHEN '$k' THEN CAST($v AS DOUBLE)" }
       .mkString(s"CASE $strataExpr ", " ", " ELSE 0.0 END")
-    val fSql =
-      s"least(1.0, (CAST($budget AS DOUBLE) * $wSql) / CAST(count(*) AS DOUBLE))"
-    val cte =
-      s"""_thr AS (
-         |  SELECT $strataExpr AS _stratum,
-         |    CASE WHEN $fSql >= 1.0 THEN 'g'
-         |         ELSE printf('%08x', CAST(floor($fSql * 4294967296.0) AS BIGINT))
-         |    END AS _th
-         |  FROM $table GROUP BY $strataExpr)""".stripMargin
-    val pred =
-      s"substr(md5(CAST($idExpr AS VARCHAR) || ':$salt'), 1, 8) < _thr._th"
-    (cte, pred)
-  }
+
+  private def sqlKeepFraction(budget: Long, share: String, total: String): String =
+    s"least(1.0, (CAST($budget AS DOUBLE) * $share) / CAST($total AS DOUBLE))"
+
+  private def sqlKeep(idExpr: String, salt: String): String =
+    s"${sqlBucketHex(idExpr, salt)} < _thr._th"
 }

@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.operators.Sampling
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -49,19 +50,12 @@ import org.apache.spark.sql.functions._
   */
 object Export {
 
-  private val Two32 = 4294967296d // 2^32
-
-  private def md5Col(idCol: Column, salt: String): Column =
-    md5(concat(coalesce(idCol.cast("string"), lit("")), lit(s":$salt")))
-
   /** floor(hexValue(8 chars) * k / 2^32) — exact in double for
     * k <= 2^20 (product < 2^52; power-of-two division only shifts the
     * exponent).
     */
   private def hashCell(h: Column, pos: Int, k: Int): Column =
-    floor(
-      conv(substring(h, pos, 8), 16, 10).cast("long") * lit(k.toDouble) / lit(Two32)
-    ).cast("int")
+    floor(Sampling.hexValue(h, pos, 8) * lit(k.toDouble) / lit(Sampling.Two32)).cast("int")
 
   /** Annotate `df` with the deterministic export coordinates:
     * `shard` in [0, nShards), `file_no` in [0, filesPerShard), and the
@@ -81,7 +75,8 @@ object Export {
       filesPerShard > 0 && filesPerShard <= (1 << 20),
       s"filesPerShard out of range: $filesPerShard"
     )
-    val h = md5Col(col(idCol), salt)
+    // NULL ids hash as the empty string
+    val h = Sampling.idDigest(coalesce(col(idCol).cast("string"), lit("")), salt)
     df.withColumn("_h", h)
       .withColumn("shard", hashCell(col("_h"), 1, nShards))
       .withColumn("file_no", hashCell(col("_h"), 25, filesPerShard))
@@ -267,27 +262,12 @@ object Export {
       .parquet(outDir)
   }
 
-  /** SQL decode of an 8-hex-char slice of `hExpr` (1-based `pos`) as a
-    * BIGINT — dialect-portable hex->int via a digit CASE chain (DuckDB
-    * has no `conv`).
-    */
-  private def hexValSql(hExpr: String, pos: Int): String = {
-    def digit(e: String): String =
-      "(CASE " + "0123456789abcdef"
-        .map(c => s"WHEN $e = '$c' THEN ${Integer.parseInt(c.toString, 16)}")
-        .mkString(" ") + " END)"
-    (0 until 8)
-      .map(i =>
-        s"CAST(${digit(s"substr($hExpr, ${pos + i}, 1)")} AS BIGINT) * ${1L << (4 * (7 - i))}"
-      )
-      .mkString("(", " + ", ")")
-  }
-
   /** SQL mirror of one [[hashCell]]: the shard / file_no expression
     * over a precomputed md5 column, for oracle parity.
     */
   def cellSql(hExpr: String, pos: Int, k: Int): String =
-    s"CAST(floor(${hexValSql(hExpr, pos)} * CAST($k AS DOUBLE) / $Two32) AS INT)"
+    s"CAST(floor(${graft.queries.sqlHexValue(hExpr, pos, 8)} * CAST($k AS DOUBLE) / " +
+      s"${Sampling.Two32}) AS INT)"
 
   /** Read a shard layout ([[exportShards]] or [[appendShards]]) back
     * with the replay contract made executable: each row carries

@@ -148,7 +148,7 @@ object Drift {
     )
     // replay each day's counts onto both sides of its adjacent pairs:
     // keyed by the CURRENT day of the pair (_pday)
-    val merged = c
+    val sides = c
       .select(
         // calendar-day step — see the psiDrift pair join
         date_add(col("_day").cast("date"), 1).cast("timestamp").as("_pday"),
@@ -159,32 +159,52 @@ object Drift {
       .unionAll(
         c.select(col("_day").as("_pday"), col("_v"), lit(0L).as("_na"), col("_n").as("_nb"))
       )
-      // ONE day-pair exchange for the whole tail (r15; guide §2.4):
-      // hashpartitioning(_pday) satisfies the clustering of this
-      // groupBy(_pday,_v), the totals aggregate, the totals join AND
+    ksStatistic(sides, Seq("_pday")).select(
+      col("_pday").as("ts"),
+      col("ks"),
+      col("_nat").as("n_prev"),
+      col("_nbt").as("n_cur")
+    )
+  }
+
+  /** The two-sample KS tail of [[ksDrift]] and [[ksBetweenGroups]].
+    * `sides` holds count rows keyed by `pairCols` and a value `_v`,
+    * each carrying its side-a count `_na` or side-b count `_nb` (the
+    * other side 0). Per pair: the merged per-value counts, the side
+    * totals `_nat`/`_nbt` (pairs missing a side yield no row), and
+    * `ks` = round6(max |CDF_a − CDF_b|) over the cumulative sums at
+    * distinct-value grain.
+    */
+  private def ksStatistic(sides: DataFrame, pairCols: Seq[String]): DataFrame = {
+    val pair = pairCols.map(col)
+    val merged = sides
+      // ONE pair-keyed exchange for the whole tail (r15; guide §2.4):
+      // the pair partitioning satisfies the clustering of this
+      // groupBy(pair, _v), the totals aggregate, the totals join AND
       // the cumulative-CDF window — without it each re-exchanged
-      // ((_pday,_v) partitioning does not satisfy _pday clustering),
-      // measured 11 jobs → 7 at sf0.1. The day-pair was already the
-      // window's partition grain, so skew is unchanged by keying the
-      // exchange on it.
-      .repartition(col("_pday"))
-      .groupBy("_pday", "_v")
+      // ((pair, _v) partitioning does not satisfy pair clustering),
+      // measured 11 jobs → 7 at sf0.1 for ksDrift. The pair was
+      // already the window's partition grain, so skew is unchanged by
+      // keying the exchange on it.
+      .repartition(pair: _*)
+      .groupBy(pair :+ col("_v"): _*)
       .agg(sum(col("_na")).as("_na"), sum(col("_nb")).as("_nb"))
     val totals = merged
-      .groupBy("_pday")
+      .groupBy(pair: _*)
       .agg(sum(col("_na")).as("_nat"), sum(col("_nb")).as("_nbt"))
       .where(col("_nat") > 0 && col("_nbt") > 0)
-    val w = Window.partitionBy("_pday").orderBy("_v")
+    val w = Window.partitionBy(pair: _*).orderBy("_v")
     merged
-      .join(totals, "_pday")
+      .join(totals, pairCols)
       .select(
-        col("_pday"),
-        col("_nat"),
-        col("_nbt"),
-        sum(col("_na")).over(w).as("_ca"),
-        sum(col("_nb")).over(w).as("_cb")
+        pair ++ Seq(
+          col("_nat"),
+          col("_nbt"),
+          sum(col("_na")).over(w).as("_ca"),
+          sum(col("_nb")).over(w).as("_cb")
+        ): _*
       )
-      .groupBy(col("_pday").as("ts"))
+      .groupBy(pair: _*)
       .agg(
         graft.functions
           .round6(
@@ -194,8 +214,8 @@ object Drift {
             ))
           )
           .as("ks"),
-        max(col("_nat")).as("n_prev"),
-        max(col("_nbt")).as("n_cur")
+        max(col("_nat")).as("_nat"),
+        max(col("_nbt")).as("_nbt")
       )
   }
 
@@ -358,43 +378,13 @@ object Drift {
         lit(0L).as("_na"),
         col("_n").as("_nb")
       )
-    val merged = sideA
-      .unionAll(sideB)
-      // ONE pair-grain exchange for the whole tail — same §2.4 move
-      // (and the same skew argument) as [[ksDrift]]: (group_a,group_b)
-      // partitioning satisfies this groupBy, the totals aggregate, the
-      // totals join and the CDF window, none of which then re-exchange
-      .repartition(col("group_a"), col("group_b"))
-      .groupBy("group_a", "group_b", "_v")
-      .agg(sum(col("_na")).as("_na"), sum(col("_nb")).as("_nb"))
-    val totals = merged
-      .groupBy("group_a", "group_b")
-      .agg(sum(col("_na")).as("_nat"), sum(col("_nb")).as("_nbt"))
-      .where(col("_nat") > 0 && col("_nbt") > 0)
-    val w = Window.partitionBy("group_a", "group_b").orderBy("_v")
-    merged
-      .join(totals, Seq("group_a", "group_b"))
-      .select(
-        col("group_a"),
-        col("group_b"),
-        col("_nat"),
-        col("_nbt"),
-        sum(col("_na")).over(w).as("_ca"),
-        sum(col("_nb")).over(w).as("_cb")
-      )
-      .groupBy("group_a", "group_b")
-      .agg(
-        max(col("_nat")).as("n_a"),
-        max(col("_nbt")).as("n_b"),
-        graft.functions
-          .round6(
-            max(abs(
-              col("_ca").cast("double") / col("_nat") -
-                col("_cb").cast("double") / col("_nbt")
-            ))
-          )
-          .as("ks")
-      )
+    ksStatistic(sideA.unionAll(sideB), Seq("group_a", "group_b")).select(
+      col("group_a"),
+      col("group_b"),
+      col("_nat").as("n_a"),
+      col("_nbt").as("n_b"),
+      col("ks")
+    )
   }
 
   /** Row-level snapshot diff — the dataset regression test: compare

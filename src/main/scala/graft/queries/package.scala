@@ -65,22 +65,45 @@ package object queries {
   def sqlRound6(expr: String): String =
     s"round($expr, 6)"
 
-  /** SQL decode of the first 13 hex chars of an md5 digest — the
-    * 52-bit uniform integer behind every deterministic-sampling
-    * operator. DuckDB has no hex→int builtin, so each digit goes
-    * through a CASE chain; mirrors Spark's
-    * `conv(substring(md5(..), 1, 13), 16, 10)`. `h` is substituted 13
-    * times — alias the md5 in a prior CTE, don't inline it.
+  // ---- SQL mirrors of the id-hash membership contract -----------------
+  // The Spark side lives in graft.operators.Sampling; these are the
+  // operator modules' oracle fragments (any dialect with md5, substr, ||).
+
+  /** SQL mirror of `Sampling.bucketHex`: the first 8 hex chars of
+    * md5(id ":" salt).
     */
-  def sqlHex52(h: String): String = {
+  private[graft] def sqlBucketHex(idExpr: String, salt: String): String =
+    s"substr(md5(CAST($idExpr AS VARCHAR) || ':$salt'), 1, 8)"
+
+  /** SQL mirror of `Sampling.thresholdHexCol`: the hex threshold of an
+    * in-query keep-fraction, "g" (keep all) at f >= 1.
+    */
+  private[graft] def sqlThresholdHex(fSql: String): String =
+    s"""CASE WHEN $fSql >= 1.0 THEN 'g'
+       |         ELSE printf('%08x', CAST(floor($fSql * 4294967296.0) AS BIGINT))
+       |    END""".stripMargin
+
+  /** SQL decode of `digits` hex chars of `h` from 1-based `pos` as a
+    * BIGINT. DuckDB has no hex→int builtin, so each digit goes through
+    * a CASE chain; mirrors Spark's `conv(substring(h, pos, digits), 16,
+    * 10)`. `h` is substituted once per digit — alias the md5 in a
+    * prior CTE, don't inline it.
+    */
+  private[graft] def sqlHexValue(h: String, pos: Int, digits: Int): String = {
     def digit(e: String): String =
       "(CASE " + "0123456789abcdef"
         .map(c => s"WHEN $e = '$c' THEN ${Integer.parseInt(c.toString, 16)}")
         .mkString(" ") + " END)"
-    (0 until 13)
+    (0 until digits)
       .map(i =>
-        s"CAST(${digit(s"substr($h, ${i + 1}, 1)")} AS BIGINT) * ${1L << (4 * (12 - i))}"
+        s"CAST(${digit(s"substr($h, ${pos + i}, 1)")} AS BIGINT) * ${1L << (4 * (digits - 1 - i))}"
       )
       .mkString("(", " + ", ")")
   }
+
+  /** SQL decode of the first 13 hex chars of an md5 digest — the
+    * 52-bit uniform integer behind every deterministic-sampling
+    * operator (`Sampling.hash52`).
+    */
+  def sqlHex52(h: String): String = sqlHexValue(h, 1, 13)
 }

@@ -238,7 +238,7 @@ class JdbcMetricsRepository(
           // null-safe per-column match: plain equality never matches a
           // NULL key value (e.g. a NULL ts), so re-adding such a row
           // would accumulate duplicates instead of replacing — the
-          // Parquet repository (window partitioning groups NULLs) and
+          // Parquet repository (its latest-wins groupBy groups NULLs) and
           // the InMemory one (null-safe <=> anti-join) both honor
           // latest-wins on NULL keys; this must match
           val keyMatch = key

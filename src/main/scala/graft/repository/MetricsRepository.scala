@@ -129,8 +129,9 @@ class InMemoryRepository extends MetricsRepository {
       case Some(old) =>
         // null-safe (<=>) key match: latest-wins must REPLACE a row
         // whose key column is NULL (e.g. a NULL ts), not accumulate a
-        // duplicate — the same contract the Parquet window (NULLs
-        // group together) and the JDBC correlated DELETE honor.
+        // duplicate — the same contract the Parquet latest-wins
+        // aggregate (its groupBy groups NULL keys together) and the
+        // JDBC correlated DELETE honor.
         val newKeys = rows.select(key.map(col): _*).distinct()
         val cond = key.map(k => old(k) <=> newKeys(k)).reduce(_ && _)
         old.join(newKeys, cond, "left_anti").unionByName(rows)

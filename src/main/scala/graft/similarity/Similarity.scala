@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.operators.Sampling
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -543,21 +544,40 @@ object Similarity {
 
   /** The bounded driver sample of every quantizer fit: at most 8192
     * clean vectors (non-null, no null slot, the first row's length),
-    * optionally drawn from a `trainFraction` sample.
+    * optionally drawn from a `trainFraction` sample. With `idCol` the
+    * sample and its order follow the id hash salted with `seed`
+    * ([[graft.operators.Sampling]]'s contract: ascending md5(id ":"
+    * seed), a fraction keeps the ids whose 8-hex uniform is under its
+    * threshold), so the fit depends only on the rows, `seed` and
+    * `trainFraction`, not on the scan order of the input's files.
+    * `idCol` must be a row key. Without it the sample is the first
+    * rows of the scan, optionally a Bernoulli `sample`.
     */
   private def trainingSample(
       corpus: DataFrame,
       vecCol: String,
       seed: Long,
-      trainFraction: Option[Double]
+      trainFraction: Option[Double],
+      idCol: Option[String] = None
   ): Array[Array[Double]] = {
     trainFraction.foreach(f =>
       require(f > 0.0 && f <= 1.0, s"trainFraction must be in (0, 1], got $f")
     )
     val maxTrain = 8192
-    val base = corpus.select(col(vecCol).cast("array<double>").as("_v"))
-    val collected = trainFraction
-      .fold(base)(f => base.sample(withReplacement = false, f, seed))
+    val v = col(vecCol).cast("array<double>").as("_v")
+    val drawn = idCol match {
+      case Some(id) =>
+        val salt = seed.toString
+        trainFraction
+          .fold(corpus)(f =>
+            corpus.where(Sampling.bucketHex(col(id), salt) < Sampling.thresholdHex(f)))
+          .orderBy(Sampling.idDigest(col(id), salt))
+          .select(v)
+      case None =>
+        val base = corpus.select(v)
+        trainFraction.fold(base)(f => base.sample(withReplacement = false, f, seed))
+    }
+    val collected = drawn
       .where(col("_v").isNotNull) // a NULL embedding would NPE the fit
       .limit(maxTrain)
       .collect()
@@ -1071,7 +1091,9 @@ object Similarity {
     import spark.implicits._
     val fp = cellsFingerprint(spark, path)
     val cells = spark.read.parquet(s"$path/cells")
-    val books = fitPqCodebooks(cells, "_cv", m, ksub, seed, trainFraction)
+    // id-hash sample: a cells scan's row order follows its file
+    // listing, so a scan-order sample would differ run to run
+    val books = fitPqCodebooks(cells, "_cv", m, ksub, seed, trainFraction, Some("neighbor_id"))
     books.zipWithIndex
       .flatMap { case (sub, mi) =>
         sub.zipWithIndex.map { case (c, kj) => (mi, kj, c.toSeq) }
@@ -1295,7 +1317,8 @@ object Similarity {
   /** Product-quantization codebook fit: split the embedding space into
     * `m` subspaces of dim/m dims and k-means each independently
     * (`ksub` sub-centroids per subspace) over the same bounded driver
-    * sample as the IVF fit. dim must divide evenly by m. Returns the
+    * sample as the IVF fit (drawn by the hash of `idCol` when given).
+    * dim must divide evenly by m. Returns the
     * (m, ksub, subDim) codebook tensor — a plan-time constant for the
     * [[graft.functions.hashExpressions.PqEncode]] family.
     */
@@ -1305,11 +1328,12 @@ object Similarity {
       m: Int,
       ksub: Int,
       seed: Long,
-      trainFraction: Option[Double]
+      trainFraction: Option[Double],
+      idCol: Option[String] = None
   ): Array[Array[Array[Double]]] = {
     require(m > 0, s"m must be positive, got $m")
     require(ksub > 1, s"ksub must be > 1, got $ksub")
-    val sample = trainingSample(corpus, vecCol, seed, trainFraction)
+    val sample = trainingSample(corpus, vecCol, seed, trainFraction, idCol)
     require(sample.nonEmpty, "PQ fit: no clean training vectors")
     val dim = sample.head.length
     require(

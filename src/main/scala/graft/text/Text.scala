@@ -801,8 +801,7 @@ object Text {
         col("id"),
         col("_tgt"),
         pmod(
-          conv(substring(md5(concat(col("w1"), lit(" "), col("w2"))), 1, 13),
-            16, 10).cast("long"),
+          graft.operators.Sampling.hexValue(md5(concat(col("w1"), lit(" "), col("w2"))), 1, 13),
           lit(buckets.toLong)
         ).as("bucket")
       )

@@ -85,17 +85,95 @@ class SamplingSpec extends SparkSpec {
     assert(Sampling.deterministicSample(rows, "id", 1.0).count() == 2000)
   }
 
+  /** The membership contract's digest, md5(id ":" salt), redone
+    * independently in plain JVM code (MessageDigest).
+    */
+  private def md5Hex(id: String, salt: String): String =
+    java.security.MessageDigest
+      .getInstance("MD5")
+      .digest(s"$id:$salt".getBytes("UTF-8"))
+      .map("%02x".format(_))
+      .mkString
+
+  /** `digits` hex chars of `h` from 1-based `pos`, as a number. */
+  private def hexAt(h: String, pos: Int, digits: Int): Long =
+    java.lang.Long.parseLong(h.substring(pos - 1, pos - 1 + digits), 16)
+
+  /** Keep-test of the 8-hex uniform against a fraction's threshold:
+    * floor(f * 2^32), every value kept at f >= 1.
+    */
+  private def under(h: String, f: Double): Boolean =
+    f >= 1.0 || hexAt(h, 1, 8) < (f * 4294967296d).toLong
+
   /** The exact Efraimidis–Spirakis key the operator computes, redone
     * independently in plain JVM code (MessageDigest + math.log).
     */
   private def esKey(id: Long, salt: String, w: Double): Double = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md
-      .digest(s"$id:$salt".getBytes("UTF-8"))
-      .map("%02x".format(_))
-      .mkString
-    val u = (java.lang.Long.parseLong(hex.substring(0, 13), 16) + 1).toDouble / 4503599627370496.0
+    val u = (hexAt(md5Hex(id.toString, salt), 1, 13) + 1).toDouble / 4503599627370496.0
     math.round(math.log(u) / w * 1e6) / 1e6
+  }
+
+  test("hashSplit, mixtureSample, cvAuc folds and shuffleShards match an independent JVM recomputation exactly") {
+    val ids = 1L to 2000L
+    // hashSplit: the first split whose cumulative threshold is above the uniform
+    val fr = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
+    val cum = fr.scanLeft(0.0) { case (acc, (_, f)) => acc + f }.tail
+    val gotSplit = Sampling.hashSplit(rows, "id", fr, salt = "s1")
+      .select("id", "split").as[(Long, String)].collect().toMap
+    val wantSplit = ids.map { id =>
+      val h = md5Hex(id.toString, "s1")
+      id -> fr.zip(cum).dropRight(1).collectFirst { case ((n, _), c) if under(h, c) => n }
+        .getOrElse(fr.last._1)
+    }.toMap
+    assert(gotSplit == wantSplit)
+
+    // mixtureSample at the per-stratum fractions min(1, budget * w / count);
+    // stratum d (20 rows) is over its target and keeps every row
+    def stratum(id: Long) =
+      if (id % 100 == 0) "d" else if (id % 4 == 0) "a" else if (id % 4 == 1) "b" else "c"
+    val strata = ids.map(id => (id, stratum(id))).toDF("id", "s")
+    val weights = Seq("a" -> 0.25, "b" -> 0.25, "c" -> 0.25, "d" -> 0.25)
+    val budget = 300L
+    val gotMix = graft.pipelines.Corpus
+      .mixtureSample(strata, "id", "s", weights, budget, salt = "s2")
+      .select("id").as[Long].collect().toSet
+    val sizes = ids.groupBy(stratum).map { case (s, v) => s -> v.size }
+    val wantMix = ids.filter { id =>
+      val f = math.min(1.0, budget.toDouble * weights.toMap.apply(stratum(id)) / sizes(stratum(id)).toDouble)
+      under(md5Hex(id.toString, "s2"), f)
+    }.toSet
+    assert(wantMix.count(id => stratum(id) == "d") == 20)
+    assert(gotMix == wantMix)
+
+    // cvAuc folds: fold = 52-bit uniform mod folds, so each fold's
+    // held-out class counts and training size follow from the ids
+    val folds = 3
+    val labeled = ids.take(300)
+      .map(id => (id, if (id % 3 == 0) 1.0 else 0.0, ((id * 37) % 100) / 100.0))
+      .toDF("id", "y", "x")
+    val gotCv = graft.ml.Logit
+      .cvAuc(labeled, "y", Seq("x"), "id", folds = folds, iters = 1, salt = "s3")
+      .select("fold", "n_train", "n_pos", "n_neg").as[(Int, Long, Long, Long)].collect().toSet
+    val foldOf = ids.take(300).map(id => id -> (hexAt(md5Hex(id.toString, "s3"), 1, 13) % folds).toInt)
+    val wantCv = (0 until folds).map { k =>
+      val held = foldOf.collect { case (id, `k`) => id }
+      (k, 300L - held.size, held.count(_ % 3 == 0).toLong, held.count(_ % 3 != 0).toLong)
+    }.toSet
+    assert(gotCv == wantCv)
+
+    // shuffleShards: shard / file_no from the 8-hex values at 1 and 25,
+    // ord the 16 hex chars between; a NULL id hashes as ""
+    val (nShards, files) = (8, 4)
+    val withNull = (ids.take(500).map(Option(_)) :+ None).toDF("id")
+    val gotShards = graft.pipelines.Export
+      .shuffleShards(withNull, "id", nShards, files, salt = "s4")
+      .select("id", "shard", "file_no", "ord").as[(Option[Long], Int, Int, String)].collect().toSet
+    val wantShards = (ids.take(500).map(Option(_)) :+ None).map { id =>
+      val h = md5Hex(id.fold("")(_.toString), "s4")
+      (id, (hexAt(h, 1, 8) * nShards / 4294967296L).toInt,
+        (hexAt(h, 25, 8) * files / 4294967296L).toInt, h.substring(8, 24))
+    }.toSet
+    assert(gotShards == wantShards)
   }
 
   test("weightedSamplePerGroup matches an independent JVM recomputation exactly") {

@@ -41,6 +41,21 @@ class IvfPqSpec extends SparkSpec {
     assert(viaPq === viaFloat)
   }
 
+  test("attaching PQ to two writes of the same index trains identical codebooks and probes") {
+    // each write names its part files afresh, so a cells scan lists
+    // them in a different order; the codebook sample must not follow it
+    val (a, b) = (freshIndex(), freshIndex())
+    Seq(a, b).foreach(Similarity.ivfAttachPq(spark, _, m = 3, ksub = 8))
+    def books(dir: String) =
+      spark.read.parquet(s"$dir/pq/books").orderBy("m_idx", "k_idx").collect().toSeq
+    assert(books(a) === books(b))
+    val queries = clustered.where($"vec_id".isin(0L, 250L))
+    def probe(dir: String) = Similarity
+      .ivfPqQueryIndex(queries, "vec_id", "embedding", dir, k = 5, nprobe = 2)
+      .orderBy("query_id", "rank").collect().toSeq
+    assert(probe(a) === probe(b))
+  }
+
   test("both the codes scan and the rerank scan prune to probed cell partitions") {
     val dir = freshIndex()
     Similarity.ivfAttachPq(spark, dir, m = 3, ksub = 8)
