@@ -1,6 +1,10 @@
 package graft.anomaly
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.WindowExpression
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -58,6 +62,16 @@ object Optimizer {
     * error. One window exchange computes every model's forecast for
     * every row; the model dimension is unpivoted with a generated
     * array (narrow, no extra shuffle).
+    *
+    * Each distinct window term of the family is evaluated once: Spark
+    * does not merge equal window expressions, and the models repeat
+    * theirs (`lag(value, 1)` appears in three of the bench roster's
+    * eight forecasts, and several times within each), so the window
+    * terms of every forecast are staged once as internal `_w<k>`
+    * columns and all forecasts are added in one projection that reads
+    * them — 24 window expressions instead of 176 for
+    * `Models.default ++ Seq(HoltLinear(), HoltWinters())`, with the
+    * same arithmetic per forecast.
     */
   def forecastErrors(
       series: DataFrame,
@@ -75,12 +89,16 @@ object Optimizer {
         "value", "mean_error", "n_validation", "threshold",
         "below_proportion", "best_model", "optimization_failed",
         "_sorted", "_n", "_kstar", "_ek", "_rank")
+    // the shared window terms staged below; they are computed from the
+    // series, time and value columns, so none of those may carry a name
+    val staged = "_w\\d+".r
     val collisions = seriesCols.filter(reserved) ++
+      (seriesCols :+ tsCol :+ valueCol).filter(c => staged.matches(c)) ++
       (if (valueCol != "value" && series.columns.contains("value")) Seq("value") else Nil)
     require(
       collisions.isEmpty,
       s"series columns collide with internal names $collisions — rename them " +
-        s"(reserved: ${reserved.toSeq.sorted.mkString(", ")})"
+        s"(reserved: ${reserved.toSeq.sorted.mkString(", ")}, _w<k>)"
     )
     // calendar models read the CONSTRUCTOR's time column, not this
     // call's tsCol — a mismatch would build trend regressors from the
@@ -94,19 +112,23 @@ object Optimizer {
     }
     val w = Window.partitionBy(seriesCols.map(col): _*).orderBy(col(tsCol))
     val value = col(valueCol)
-    val withForecasts = cfg.models.zipWithIndex
-      .foldLeft(
-        series
-          .withColumn("rn", row_number().over(w))
-          .withColumn(
-            "n",
-            count(lit(1)).over(Window.partitionBy(seriesCols.map(col): _*))
-          )
-      ) { case (df, (m, i)) =>
-        // models with helper columns (e.g. AR lag materialization) get
-        // their pre-pass here; same partitioning -> same single exchange
-        m.prepare(df, value, w).withColumn(s"_f$i", m.forecast(value, w))
-      }
+    // models with helper columns (e.g. AR lag materialization) get
+    // their pre-pass here; same partitioning -> same single exchange
+    val prepared = cfg.models.foldLeft(
+      series
+        .withColumn("rn", row_number().over(w))
+        .withColumn("n", count(lit(1)).over(Window.partitionBy(seriesCols.map(col): _*)))
+    )((df, m) => m.prepare(df, value, w))
+    val forecasts = cfg.models.map(m => GraftColumnBridge.unresolved(m.forecast(value, w)))
+    val terms = forecasts.flatMap(_.collect { case t: WindowExpression => t }).distinct
+    val termName = terms.zipWithIndex.map { case (t, k) => t -> s"_w$k" }.toMap
+    val withForecasts = prepared
+      .withColumns(ListMap(terms.map(t => termName(t) -> GraftColumnBridge.column(t)): _*))
+      .withColumns(ListMap(forecasts.zipWithIndex.map { case (f, i) =>
+        s"_f$i" -> GraftColumnBridge.column(f.transform {
+          case t: WindowExpression => UnresolvedAttribute.quoted(termName(t))
+        })
+      }: _*))
       // Validation region: 0-based index >= floor(start_proportion * n)
       // (thoth/anomaly/optimization.py:166-173).
       .withColumn(

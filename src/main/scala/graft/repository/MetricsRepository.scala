@@ -1,7 +1,7 @@
 package graft.repository
 
 import graft.core.DatasetMeta
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -180,6 +180,12 @@ class InMemoryRepository extends MetricsRepository {
   * (above 32 of them that listing is itself a Spark job). Compaction
   * ([[compact]], [[maintain]]) is an offline per-partition rewrite.
   * Dataset registrations live in a small parquet table alongside.
+  *
+  * A small partition resolves inside its scan task: when its batch
+  * files total at most [[smallPartitionBytes]] on disk, the partition
+  * is read as one partition, so the latest-wins aggregate and every
+  * per-series window or join above it need no exchange, and no job of
+  * its own. A larger partition keeps the parallel plan.
   */
 class ParquetRepository(spark: SparkSession, basePath: String) extends MetricsRepository {
   import MetricsRepository._
@@ -230,12 +236,35 @@ class ParquetRepository(spark: SparkSession, basePath: String) extends MetricsRe
     s"${path(table)}/dataset_uri=$escaped"
   }
 
+  /** On-disk bytes of a partition's batch files up to which it is read
+    * as one partition (see the class comment). Measured on 4 cores with
+    * one `Service.optimize` + `score` over a profiling partition
+    * (`plans/r22/GateCrossover.scala`): the one-partition read was
+    * faster up to about 400 kB, where the parallel resolve's shuffle
+    * (about 2.4 times the Parquet bytes) still fits in the one task
+    * adaptive execution coalesces it to; from 500 to 800 kB the two
+    * were within run-to-run noise, and from 1 MB the parallel read was
+    * 24-38% faster. A test overrides it to read every partition
+    * in parallel.
+    */
+  private[repository] def smallPartitionBytes: Long = 400L << 10
+
   /** The batch files of one dataset's partition of a table. */
-  private def batchFiles(t: Table, uri: String): Seq[Path] = {
+  private def batchFiles(t: Table, uri: String): Seq[FileStatus] = {
     val dir = new Path(partitionDir(t.name, uri))
     val dirFs = fs(dir)
     if (!dirFs.exists(dir)) Seq.empty
-    else dirFs.listStatus(dir).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
+    else dirFs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet")).toSeq
+  }
+
+  /** Latest row per key of stored rows read from `paths`, which hold the
+    * listed `files`: one partition when they are small (see the class
+    * comment), so the resolve runs inside the scan task.
+    */
+  private def resolved(t: Table, files: Seq[FileStatus], paths: String*): DataFrame = {
+    val stored = spark.read.schema(t.stored).parquet(paths: _*)
+    val small = files.map(_.getLen).sum <= smallPartitionBytes
+    resolve(if (small) stored.coalesce(1) else stored, t.key)
   }
 
   /** Appends rows selected and cast to the table's declared columns (by
@@ -259,9 +288,9 @@ class ParquetRepository(spark: SparkSession, basePath: String) extends MetricsRe
 
   /** Latest row per logical key within one dataset partition. */
   private def latest(t: Table, uri: String): DataFrame = {
-    val dir = partitionDir(t.name, uri)
-    if (!fsExists(dir)) emptyOf(t.rows)
-    else resolve(spark.read.schema(t.stored).parquet(dir), t.key).drop("batch_seq")
+    val files = batchFiles(t, uri)
+    if (files.isEmpty) emptyOf(t.rows)
+    else resolved(t, files, partitionDir(t.name, uri)).drop("batch_seq")
   }
 
   private def registrations(): Option[DataFrame] =
@@ -334,18 +363,18 @@ class ParquetRepository(spark: SparkSession, basePath: String) extends MetricsRe
   private def compactTable(
       t: Table,
       uri: String,
-      snapshot: Seq[Path],
+      snapshot: Seq[FileStatus],
       retainSince: Option[java.sql.Timestamp]
   ): Unit = if (snapshot.nonEmpty) {
     // leaf-file read: no partition column, batch_seq retained
-    val resolved = resolve(spark.read.schema(t.stored).parquet(snapshot.map(_.toString): _*), t.key)
+    val view = resolved(t, snapshot, snapshot.map(_.getPath.toString): _*)
     val retained = retainSince match {
       case Some(cut) if t.rows.fieldNames.contains("ts") =>
         // NULL-ts rows are a supported logical key (the upserts'
         // null-safe matches exist for them) and are NOT "before
         // the cutoff" — retention must keep them
-        resolved.where(col("ts").isNull || col("ts") >= lit(cut))
-      case _ => resolved
+        view.where(col("ts").isNull || col("ts") >= lit(cut))
+      case _ => view
     }
     // CRASH ORDER: append the compacted copy FIRST (its part-
     // files get fresh names, so the duplicate rows it briefly
@@ -354,7 +383,7 @@ class ParquetRepository(spark: SparkSession, basePath: String) extends MetricsRe
     // order had a window where a crash left the partition EMPTY
     // and every read silently returned no rows
     retained.coalesce(1).write.mode("append").parquet(partitionDir(t.name, uri))
-    snapshot.foreach(f => fs(f).delete(f, false))
+    snapshot.map(_.getPath).foreach(f => fs(f).delete(f, false))
   }
 
   /** File-count-gated maintenance: compact each of this dataset's table

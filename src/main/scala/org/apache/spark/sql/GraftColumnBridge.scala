@@ -14,6 +14,13 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** The column's unresolved Catalyst tree. Unlike [[expression]],
+    * whose wrapper compares each node's origin (its call site), two
+    * columns built the same way convert to equal trees, so equal
+    * subterms can be found and shared.
+    */
+  def unresolved(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
+
   /** Blocks until every event posted so far has reached every listener. */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

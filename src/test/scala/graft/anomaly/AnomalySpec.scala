@@ -988,4 +988,29 @@ class AnomalySpec extends SparkSpec {
       s"AR must win CV on a pure AR(2) process, got ${best.getAs[String]("best_model")}")
     assert(!best.getAs[Boolean]("optimization_failed"))
   }
+
+  test("forecastErrors evaluates each distinct window term once, with unchanged forecasts") {
+    import org.apache.spark.sql.catalyst.expressions.WindowExpression
+    val roster = Models.default ++ Seq(HoltLinear(), HoltWinters())
+    val series = SyntheticSeries.daily(spark, 40).withColumn("series", lit("s"))
+    val errs = Optimizer.forecastErrors(
+      series, Seq("series"), cfg = Optimizer.Config(models = roster))
+    val plan = errs.queryExecution.optimizedPlan
+    val windows = plan.flatMap(_.expressions.flatMap(_.collect { case w: WindowExpression => w }))
+    // row_number, the series count and the 22 distinct terms of the
+    // eight forecasts; one expression per occurrence would be 176
+    assert(windows.size == 24, plan.treeString)
+    // every forecast equals the model's own column, bit for bit
+    val w = Window.partitionBy($"series").orderBy($"ts")
+    val direct = roster
+      .map(m => series.select($"ts", lit(m.name).as("model"), m.forecast($"value", w).as("predicted")))
+      .reduce(_ union _)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("ts", "model", "predicted").collect().map(_.toSeq).toSet
+    assert(rows(errs) == rows(direct))
+    val e = intercept[IllegalArgumentException] {
+      Optimizer.forecastErrors(series.withColumnRenamed("series", "_w0"), Seq("_w0"))
+    }
+    assert(e.getMessage.contains("List(_w0)"), e.getMessage)
+  }
 }

@@ -2,6 +2,9 @@ package graft.repository
 
 import graft.SparkSpec
 import graft.core.{DatasetMeta, Metric}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** The Parquet repository's declared table schemas: writes are selected
   * and cast to them by name, reads list one dataset partition under them.
@@ -88,5 +91,76 @@ class ParquetRepositorySpec extends SparkSpec {
     // full rows still resolve latest-wins, in stored column order
     assert(repo.getScoring("u1").orderBy("ts").collect().map(_.toSeq).toSeq ==
       Seq(Seq(t1, "Column", "a", "Mean", 1.0, 1.0, 0.1), Seq(t2, "Column", "a", "Mean", 1.0, 1.0, 0.3)))
+  }
+
+  /** A repository over `dir` that reads every partition as a large one. */
+  private def large(dir: String): ParquetRepository =
+    new ParquetRepository(spark, dir) {
+      override private[repository] def smallPartitionBytes: Long = 0L
+    }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  private def shuffles(df: DataFrame): Int =
+    Plans.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.size
+
+  private val none = Option.empty[java.sql.Timestamp]
+
+  /** A new repository directory with two batches per table: NULL-key
+    * rows, and a later batch upserting a NULL-ts key and a plain one.
+    */
+  private def filled(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-repo").toString
+    val repo = new ParquetRepository(spark, dir)
+    def metrics(rows: (Option[java.sql.Timestamp], String, Double)*) =
+      rows.map { case (ts, i, v) => (ts, "Column", i, "Mean", v) }
+        .toDF("ts", "entity", "instance", "name", "value")
+    def scores(rows: (Option[java.sql.Timestamp], String, Double)*) =
+      rows.map { case (ts, i, v) => (ts, "Column", i, "Mean", v, v, v / 10) }
+        .toDF("ts", "entity", "instance", "name", "value", "predicted", "score")
+    def optimization(rows: (String, Double)*) =
+      rows.map { case (i, th) => ("Column", i, "Mean", "TrailingMean-3", th, th / 2, false) }
+        .toDF("entity", "instance", "name", "best_model", "threshold", "mean_error",
+          "optimization_failed")
+    repo.addProfiling("u1", metrics((Some(t1), "a", 1.0), (none, "a", 2.0), (Some(t1), null, 3.0)))
+    repo.addProfiling("u1", metrics((Some(t1), "a", 4.0), (none, "a", 5.0)))
+    repo.addScoring("u1", scores((Some(t1), "a", 1.0), (none, "a", 2.0), (Some(t1), null, 3.0)))
+    repo.addScoring("u1", scores((Some(t1), "a", 4.0), (none, "a", 5.0)))
+    repo.addOptimization("u1", optimization("a" -> 0.1, (null, 0.2)))
+    repo.addOptimization("u1", optimization("a" -> 0.3))
+    dir
+  }
+
+  private def reads(repo: ParquetRepository): Seq[DataFrame] =
+    Seq(repo.getProfiling("u1"), repo.getOptimization("u1"), repo.getScoring("u1"))
+
+  private def views(repo: ParquetRepository): Seq[Seq[Seq[Any]]] =
+    reads(repo).map(_.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|")))
+
+  test("a small partition resolves latest-wins inside its scan task; a large one shuffles") {
+    val dir = filled()
+    val repo = new ParquetRepository(spark, dir)
+    assert(reads(repo).map(shuffles) == Seq(0, 0, 0),
+      reads(repo).map(_.queryExecution.executedPlan.treeString).mkString("\n"))
+    val small = views(repo)
+    assert(small.head == Seq(
+      Seq(t1, "Column", "a", "Mean", 4.0),
+      Seq(t1, "Column", null, "Mean", 3.0),
+      Seq(null, "Column", "a", "Mean", 5.0)))
+    assert(small(1).map(r => r(1) -> r(4)) == Seq("a" -> 0.3, (null, 0.2)))
+    assert(small(2).map(_(4)) == Seq(4.0, 3.0, 5.0))
+    val asLarge = large(dir)
+    assert(reads(asLarge).map(shuffles).forall(_ > 0),
+      reads(asLarge).map(_.queryExecution.executedPlan.treeString).mkString("\n"))
+    assert(views(asLarge) == small)
+  }
+
+  test("a compaction of a small or a large partition leaves the same resolved view") {
+    val (small, big) = (filled(), filled())
+    val before = views(new ParquetRepository(spark, small))
+    new ParquetRepository(spark, small).compact("u1")
+    large(big).compact("u1")
+    assert(views(new ParquetRepository(spark, small)) == before)
+    assert(views(new ParquetRepository(spark, big)) == before)
   }
 }

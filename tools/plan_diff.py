@@ -8,10 +8,17 @@ run (`<key>_<S>.txt`, one suffix per directory). The plans are compared
 after normalizing what changes from run to run without changing the
 plan: expression ids (`#123`), exchange plan ids (`[plan_id=12]`), RDD
 ids (`MapPartitionsRDD[76]`) and the source line of an RDD's call site
-(`localCheckpoint at package.scala:73`). Prints SAME/DIFF per key (a
-DIFF with the first differing lines) and exits non-zero on any DIFF or
-on a key missing from either side. Without keys, every key of either
-directory is compared.
+(`localCheckpoint at package.scala:73`). With `--executed`, adaptive
+execution numbers whole-stage codegen stages (`[codegen id : 3]`,
+`*(3)`, `WholeStageCodegen (3)`) and query stages (a query stage's
+`Arguments: 3`, `ShuffleQueryStage 3`) in the order its stages ran,
+which can differ between runs of one plan; both are renumbered in
+order of first appearance, so which operators share a stage is still
+compared, and so are the adaptive decisions themselves (an
+`AQEShuffleRead`'s `local` / `coalesced` / `skewed`, a join strategy).
+Prints SAME/DIFF per key (a DIFF with the first differing lines) and
+exits non-zero on any DIFF or on a key missing from either side.
+Without keys, every key of either directory is compared.
 """
 import difflib
 import os
@@ -26,10 +33,33 @@ RULES = [
 ]
 
 
+# run-order ids: group 1 is the prefix, group 2 the id
+CODEGEN = re.compile(r"(\[codegen id : |\*\(|WholeStageCodegen \()(\d+)")
+STAGE = re.compile(r"(QueryStage )(\d+)")
+# a formatted plan's node header and a query stage's id line under it
+HEADER = re.compile(r"^\(\d+\) (\S+)")
+STAGE_ARG = re.compile(r"^(Arguments: )(\d+)$")
+
+
+def renumber(pattern, line, ids):
+    """`pattern`'s ids in `line` replaced by their order of first appearance."""
+    return pattern.sub(lambda m: m.group(1) + str(ids.setdefault(m.group(2), len(ids))), line)
+
+
 def normalize(text):
     for pattern, repl in RULES:
         text = pattern.sub(repl, text)
-    return text.splitlines()
+    codegen, stages, node, lines = {}, {}, "", []
+    for line in text.splitlines():
+        header = HEADER.match(line)
+        if header:
+            node = header.group(1)
+        line = renumber(CODEGEN, line, codegen)
+        line = renumber(STAGE, line, stages)
+        if node.endswith("QueryStage"):
+            line = renumber(STAGE_ARG, line, stages)
+        lines.append(line)
+    return lines
 
 
 def plans(d):
